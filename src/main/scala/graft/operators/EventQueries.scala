@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
 import graft.Tables
 
@@ -168,8 +168,7 @@ object EventQueries {
       .groupBy(col("event_type"))
       .agg(
         count(col("k")).as("with_k"),
-        (sum(col("k").cast(DecimalType(18, 4))).cast(DoubleType) /
-          count(col("k")).cast(DoubleType)).as("avg_k"),
+        graft.functions.DecimalSums.davg(col("k")).as("avg_k"),
         max(col("k")).as("max_k"))
       .orderBy(col("event_type"))
 
@@ -242,7 +241,7 @@ object EventQueries {
     Tables.events(spark, dir)
       .withColumn("us", unix_micros(col("ts")))
       .withColumn("trail_1h_value",
-        sum(graft.functions.DecimalSums.dec(col("value"))).over(w)
+        graft.functions.DecimalSums.decSumOver(col("value"), w)
           .cast(DoubleType))
       .select(col("event_id"), col("user_id"),
         date_format(col("ts"), tsFmt).as("event_ts"), col("trail_1h_value"))
@@ -545,7 +544,7 @@ object EventQueries {
       .agg(
         countDistinct(col("user_id")).as("n"),
         countDistinct(when(isConv, col("user_id"))).as("conv"),
-        sum(graft.functions.DecimalSums.dec(when(isP, col("value"))))
+        graft.functions.DecimalSums.decSum(when(isP, col("value")))
           .as("rev"))
     def pick(v: String, c: String) = max(when(col("v") === v, col(c)))
     val wide = per.agg(

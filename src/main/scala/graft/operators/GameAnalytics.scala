@@ -29,7 +29,7 @@ import graft.sources.GamesSource
 object GameAnalytics {
 
   // determinism convention: one shared owner (graft.functions.DecimalSums)
-  import graft.functions.DecimalSums.{dec, dsum, davg, sqlDsum, sqlDavg}
+  import graft.functions.DecimalSums.{dec, decSum, dsum, davg, sqlDsum, sqlDavg}
   private val D = graft.functions.DecimalSums.D
 
   private def games(spark: SparkSession, dir: String): DataFrame =
@@ -200,7 +200,7 @@ object GameAnalytics {
     // rank-1 as orderBy().limit(1): plans as TakeOrderedAndProject
     // instead of an unpartitioned row_number window (round-1 weak plan)
     val top = withDev.groupBy(col("Developer"))
-      .agg(sum(dec(col("revenue"))).as("rev_dec"))
+      .agg(decSum(col("revenue")).as("rev_dec"))
       .orderBy(col("rev_dec").desc_nulls_last, col("Developer"))
       .limit(1)
       .select(col("Developer").as("top_dev"))
@@ -455,8 +455,8 @@ object GameAnalytics {
     val byDev = g.withColumn("Developer", devKey)
       .filter(col("Developer") =!= "" && col("Developer").isNotNull)
       .groupBy(col("Developer"))
-      .agg(sum(dec(col("revenue"))).as("rev_dec"))
-    val globalTotal = g.agg(sum(dec(col("revenue"))).as("tot_dec"))
+      .agg(decSum(col("revenue")).as("rev_dec"))
+    val globalTotal = g.agg(decSum(col("revenue")).as("tot_dec"))
     // developer cardinality grows with the data → no unpartitioned
     // window; two-phase cumsum + rank (see Cumulative), then keep top-50
     Cumulative.withCumsumAndRank(byDev,

@@ -43,6 +43,7 @@ object StarQueries {
   private val D = graft.functions.DecimalSums.D
   private def dsum(c: Column): Column = graft.functions.DecimalSums.dsum(c)
   private def davg(c: Column): Column = graft.functions.DecimalSums.davg(c)
+  private def decSum(c: Column): Column = graft.functions.DecimalSums.decSum(c)
   private def sqlDsum(e: String): String = graft.functions.DecimalSums.sqlDsum(e)
   private def sqlDavg(e: String): String = graft.functions.DecimalSums.sqlDavg(e)
 
@@ -414,7 +415,7 @@ object StarQueries {
     val bySupp = Tables.lineitem(spark, dir)
       .join(broadcast(Tables.supplier(spark, dir)), col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("s_name"))
-      .agg(sum(revenue.cast(D)).as("rev_dec"))
+      .agg(decSum(revenue).as("rev_dec"))
     Cumulative.withCumsumAndRank(bySupp,
         Seq(col("rev_dec").desc, col("s_name")), col("rev_dec"),
         cumName = "cum_dec", rankName = "__rk", totName = "tot_dec")
@@ -1010,24 +1011,26 @@ object StarQueries {
   // lineitem row lands on one of three reduce tasks). Skew.saltedAgg
   // spreads each key over 16 sub-aggregations and merges the partials;
   // the oracle is the PLAIN group-by — salting must be invisible in the
-  // result. Decimal partials keep the double-sum order-proof across the
-  // extra merge level (same convention as dsum).
+  // result. Exact long partials keep the sum order-proof across the
+  // extra merge level (the dsum kernel's parts).
   // ---------------------------------------------------------------------------
-  def q33SaltedFlagStats(spark: SparkSession, dir: String): DataFrame =
+  def q33SaltedFlagStats(spark: SparkSession, dir: String): DataFrame = {
+    val (qtyHi, qtyLo) = graft.functions.DecimalSums.parts(col("l_quantity"))
     Skew.saltedAgg(
         Tables.lineitem(spark, dir),
         keys = Seq("l_returnflag"),
         aggs = Map(
-          // dec() = double-first decimal widening, the single-owner
-          // convention guarding against float32→decimal digit fabrication
-          "sum_qty_dec" -> ("sum", graft.functions.DecimalSums.dec(col("l_quantity"))),
-          "line_count"  -> ("count", lit(1)),
-          "max_qty"     -> ("max", col("l_quantity"))),
+          "qty_hi"     -> ("sum", qtyHi),
+          "qty_lo"     -> ("sum", qtyLo),
+          "line_count" -> ("count", lit(1)),
+          "max_qty"    -> ("max", col("l_quantity"))),
         distributeBy = col("l_orderkey"), buckets = 16)
       .select(col("l_returnflag"),
-        col("sum_qty_dec").cast(DoubleType).as("sum_qty"),
+        graft.functions.DecimalSums.fromParts(col("qty_hi"), col("qty_lo"))
+          .cast(DoubleType).as("sum_qty"),
         col("line_count"), col("max_qty"))
       .orderBy(col("l_returnflag"))
+  }
 
   val q33Sql: String =
     s"""SELECT l_returnflag,

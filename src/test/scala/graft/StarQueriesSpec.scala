@@ -155,13 +155,13 @@ class StarQueriesSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"), s"decorrelation failed:\n$plan")
     val got = q.as[(Long, Long, Double)].collect().toSeq
     // manual decorrelation: spend per customer, threshold per nation
-    import graft.functions.DecimalSums.{dsum, dec}
+    import graft.functions.DecimalSums.{dsum, decSum}
     val spend = Tables.orders(spark, sf)
       .join(Tables.customer(spark, sf), $"o_custkey" === $"c_custkey")
       .groupBy($"c_custkey", $"c_nationkey")
       .agg(dsum($"o_totalprice").as("spend"))
     val thresh = spend.groupBy($"c_nationkey".as("nk"))
-      .agg((sum(dec($"spend")).cast("double") /
+      .agg((decSum($"spend").cast("double") /
         count(lit(1)).cast("double")).as("nation_avg"))
     val ref = spend.join(thresh, $"c_nationkey" === $"nk")
       .filter($"spend" > lit(2) * $"nation_avg")

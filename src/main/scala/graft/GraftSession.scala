@@ -41,4 +41,25 @@ object GraftSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** The one owner of scoped runtime-conf overrides: sets each
+    * `key -> value`, runs `body`, then puts every key back as it was —
+    * its old value, or unset if the session had not set it (a
+    * registered default that `getOption` would read does not count as
+    * set) — whether `body` returns or throws. The override is visible
+    * to the whole session while `body` runs, so callers run their
+    * queries sequentially. Replays stay in the shared session rather
+    * than `spark.newSession()`: a child session's streaming events
+    * never reach listeners registered on the parent's `spark.streams`. */
+  def withConf[A](spark: SparkSession)(overrides: (String, String)*)(body: => A): A = {
+    val conf = spark.conf
+    val set = conf.getAll // explicitly set keys only, no defaults
+    val saved = overrides.map { case (k, _) => k -> set.get(k) }
+    overrides.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
 }

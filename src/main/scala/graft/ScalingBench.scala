@@ -469,9 +469,8 @@ object ScalingBench {
     // store), so this block runs before the RocksDB conf switch.
     if (only.forall(_.contains("v30_throughput"))) {
       import graft.operators.Dedup
-      val prevP = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      GraftSession.withConf(spark)(
+          "spark.sql.shuffle.partitions" -> EventStreams.replayPartitions.toString) {
         val emb = Tables.embeddings(spark, dir)
           .select(col("vec_id"), col("embedding"), col("label"))
         val vSlices = 8
@@ -527,14 +526,11 @@ object ScalingBench {
           s""""rows_per_sec":${f"${nVecs / sec}%.0f"},""" +
           s""""marginal_rows_per_sec":${f"$marginal%.0f"}}""")
         System.out.flush()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevP)
+      }
     }
 
-    val prevProv = spark.conf.getOption(confKey)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(confKey, rocksdb)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    GraftSession.withConf(spark)(confKey -> rocksdb,
+        "spark.sql.shuffle.partitions" -> EventStreams.replayPartitions.toString) {
       for ((name, mk) <- shapes if only.forall(_.contains(name))) {
         val root = s"$dir/__stream_$name"
         new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
@@ -564,12 +560,6 @@ object ScalingBench {
           s""""marginal_rows_per_sec":${f"$marginal%.0f"},""" +
           s""""state_rows":$stateRows,"state_bytes":$stateBytes}""")
         System.out.flush()
-      }
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prevProv match {
-        case Some(p) => spark.conf.set(confKey, p)
-        case None => spark.conf.unset(confKey)
       }
     }
   }
@@ -627,9 +617,8 @@ object ScalingBench {
     def stability(baseline: Seq[String], mk: => DataFrame)
         : (Boolean, Boolean) = {
       val det = baseline == rows(mk)
-      spark.conf.set("spark.sql.shuffle.partitions", "7")
-      val inv = try baseline == rows(mk)
-        finally spark.conf.set("spark.sql.shuffle.partitions", parts)
+      val inv = GraftSession.withConf(spark)(
+        "spark.sql.shuffle.partitions" -> "7")(baseline == rows(mk))
       (det, inv)
     }
     // -1 is the undefined-relative-error sentinel (exact = 0 with a

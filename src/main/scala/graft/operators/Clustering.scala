@@ -120,46 +120,15 @@ object Clustering {
   def c01KmeansAssign(spark: SparkSession, dir: String): DataFrame =
     kmeansAssign(Tables.embeddings(spark, dir))
 
-  /** The shared WITH-chain of the c01/c02/c03 oracles: same init, same
-    * round-9 argmin total order (MIN over a (d, c) struct), same
-    * decimal(18,12) mean update with the string-hop, same empty-cell
-    * carry-forward. Ends with `fin` = the final per-vector assignment
-    * against `cent{numRounds}`. */
-  /** One fit's CTE chain (cent0 → a/m/cent per round → fin), every CTE
-    * name `pfx`-prefixed so several fits with different k can coexist
-    * inside a single WITH (the c05 elbow). Expects an `emb` CTE in
-    * scope. */
-  private def chainBody(k: Int, pfx: String): String = {
-    val dist =
-      "ROUND(-2 * list_inner_product(e.v, ct.clist) + " +
-        "list_inner_product(ct.clist, ct.clist), 9)"
-    val roundsSql = (1 to numRounds).map { i =>
-      s"""${pfx}a$i AS (
-         |  SELECT vec_id, (MIN({'d': $dist, 'c': ct.cell})).c AS cell
-         |  FROM emb e CROSS JOIN ${pfx}cent${i - 1} ct
-         |  GROUP BY vec_id),
-         |${pfx}m$i AS (
-         |  SELECT a.cell, dd.d,
-         |    ROUND(CAST(CAST(SUM(CAST(e.v[dd.d] AS DECIMAL(18,12))) AS VARCHAR)
-         |               AS DOUBLE) / COUNT(*), 9) AS mu
-         |  FROM emb e JOIN ${pfx}a$i a USING (vec_id)
-         |  CROSS JOIN LATERAL (SELECT unnest(range(1, len(e.v) + 1)) AS d) dd
-         |  GROUP BY a.cell, dd.d),
-         |${pfx}cent$i AS (
-         |  SELECT p.cell, COALESCE(m.clist, p.clist) AS clist
-         |  FROM ${pfx}cent${i - 1} p
-         |  LEFT JOIN (SELECT cell, list(mu ORDER BY d) AS clist
-         |             FROM ${pfx}m$i GROUP BY cell) m ON p.cell = m.cell)""".stripMargin
-    }
-    s"""${pfx}cent0 AS (
-       |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cell,
-       |         v AS clist
-       |  FROM (SELECT vec_id, v FROM emb ORDER BY vec_id LIMIT $k)),
-       |${roundsSql.mkString(",\n")},
-       |${pfx}fin AS MATERIALIZED (
-       |  SELECT vec_id, (MIN({'d': $dist, 'c': ct.cell})).c AS cell
+  /** `{pfx}fin` = the final per-vector assignment against
+    * `{pfx}cent{numRounds}` of one oracle fit, replayed by the shared
+    * Lloyd generator ([[Similarity.lloydChainSql]] over the `emb` CTE
+    * with [[numRounds]] rounds; CTE names are `pfx`-prefixed so the
+    * c05 elbow's fits coexist in one WITH). */
+  private def finSql(pfx: String): String =
+    s"""${pfx}fin AS MATERIALIZED (
+       |  SELECT vec_id, (MIN({'d': ${Similarity.sqlDist("e.v", "ct.clist")}, 'c': ct.cell})).c AS cell
        |  FROM emb e CROSS JOIN ${pfx}cent$numRounds ct GROUP BY vec_id)""".stripMargin
-  }
 
   private val embSql =
     """emb AS (
@@ -167,7 +136,8 @@ object Clustering {
 
   private val chainSql: String =
     s"""WITH $embSql,
-       |${chainBody(numCells, "")}""".stripMargin
+       |${Similarity.lloydChainSql("emb", numCells, "", numRounds)},
+       |${finSql("")}""".stripMargin
 
   val c01Sql: String =
     s"""$chainSql
@@ -406,8 +376,12 @@ object Clustering {
          |FROM emb e JOIN ${p}fin a USING (vec_id)
          |JOIN ${p}cent$numRounds ct ON ct.cell = a.cell""".stripMargin
     }
+    val fits = elbowKs.map { k =>
+      val p = s"k${k}_"
+      s"${Similarity.lloydChainSql("emb", k, p, numRounds)},\n${finSql(p)}"
+    }
     s"""WITH $embSql,
-       |${elbowKs.map(k => chainBody(k, s"k${k}_")).mkString(",\n")}
+       |${fits.mkString(",\n")}
        |${perK.mkString("\nUNION ALL\n")}
        |ORDER BY k""".stripMargin
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType}
 
 import graft.sources.GamesSource
+import graft.streaming.Staging
 
 /** The reference's games-table catalog, quirks included — every query
   * from /root/reference/spark_eda.py §2.1 (SURVEY.md) plus the stage-3
@@ -747,9 +748,8 @@ object GameAnalytics {
   // ---------------------------------------------------------------------------
   def g24Dsv2Roundtrip(spark: SparkSession, dir: String): DataFrame = {
     val src = graft.sources.GamesSource.ensureFixture()
-    val base = java.nio.file.Files.createTempDirectory("graft_g24")
-    val rt = base.resolve("games_rt.csv").toString
-    try {
+    Staging.scratch("g24") { base =>
+      val rt = s"$base/games_rt.csv"
       spark.read.format("games-csv").load(src)
         .repartition(3, col("AppID"))
         .write.format("games-csv").mode("overwrite").save(rt)
@@ -759,10 +759,6 @@ object GameAnalytics {
           col("clean_price"), col("avg_owners"), col("Developers"),
           col("Genres"), col("revenue"))
         .orderBy(col("AppID"))
-        .localCheckpoint() // materialize before the temp file is deleted
-    } finally {
-      new scala.reflect.io.Directory(base.toFile).deleteRecursively()
-      ()
     }
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables
+import graft.streaming.Staging
 import graft.functions.VectorOps
 
 /** Similarity search over the `embeddings` table: exact brute-force
@@ -1461,30 +1462,13 @@ object Similarity {
     * EXPLICIT probed-cell partition pruning on the files-read METRIC
     * (one probe reads one of 16 partition files — never a plan-string
     * pin; see [[ivfKnnFromIndex]] for why DPP was rejected). */
-  /** Scratch-index lifecycle shared by the persisted-index gates
-    * (s17/s18/s20): mint a temp parent, run `body` against a `/idx`
-    * SUBDIR of it (maintenance renames the index dir itself — the
-    * parent must survive the swap), wipe the parent afterwards. Every
-    * body localCheckpoints its result before the staging disappears. */
-  private def withScratchIndex(tag: String)
-                              (body: String => DataFrame): DataFrame = {
-    val parent = java.nio.file.Files.createTempDirectory(tag).toString
-    try body(s"$parent/idx")
-    finally {
-      val gone = new scala.reflect.io.Directory(new java.io.File(parent))
-        .deleteRecursively()
-      if (!gone)
-        System.err.println(s"[$tag] temp dir not fully removed: $parent")
-    }
-  }
-
   def s17KnnIvfPersisted(spark: SparkSession, dir: String): DataFrame =
-    withScratchIndex("graft_s17") { base =>
+    Staging.scratch("s17") { scratch =>
+      val base = s"$scratch/idx"
       val emb = Tables.embeddings(spark, dir)
       writeIvfIndex(emb, base)
       ivfKnnFromIndex(emb.filter(col("vec_id") < 20), base, 5)
         .orderBy(col("query_id"), col("rk"))
-        .localCheckpoint() // materialize before the staging is deleted
     }
 
   /** s18 — the APPEND LIFECYCLE of the persisted index, hash-gated:
@@ -1502,7 +1486,8 @@ object Similarity {
     * and orphan-sweep stay ScalaTest-pinned (SimilaritySpec); this
     * gate makes the lifecycle itself a judged query. */
   def s18KnnIvfAppend(spark: SparkSession, dir: String): DataFrame =
-    withScratchIndex("graft_s18") { base =>
+    Staging.scratch("s18") { scratch =>
+      val base = s"$scratch/idx"
       val emb = Tables.embeddings(spark, dir)
       // the same 90% cut the oracle computes: FLOOR(0.9·N) on the
       // (0-based contiguous) vec_id space
@@ -1511,7 +1496,6 @@ object Similarity {
       appendToIvfIndex(emb.filter(col("vec_id") >= cut), base)
       ivfKnnFromIndex(emb.filter(col("vec_id") < 20), base, 5)
         .orderBy(col("query_id"), col("rk"))
-        .localCheckpoint() // materialize before the staging is deleted
     }
 
   /** s20 — the MAINTENANCE lifecycle of the persisted index,
@@ -1532,7 +1516,9 @@ object Similarity {
     * drift-trigger threshold stay ScalaTest-pinned (SimilaritySpec);
     * this gate makes the re-fit path itself a judged query. */
   def s20KnnIvfMaintain(spark: SparkSession, dir: String): DataFrame =
-    withScratchIndex("graft_s20") { base =>
+    Staging.scratch("s20") { scratch =>
+      // maintenance renames the index dir itself, so it is a subdir
+      val base = s"$scratch/idx"
       val emb = Tables.embeddings(spark, dir)
       val cut = math.floor(0.9 * emb.count()).toLong
       writeIvfIndex(emb.filter(col("vec_id") < cut), base)
@@ -1542,7 +1528,6 @@ object Similarity {
       require(refit, "s20: the forced maintenance re-fit did not run")
       ivfKnnFromIndex(emb.filter(col("vec_id") < 20), base, 5)
         .orderBy(col("query_id"), col("rk"))
-        .localCheckpoint() // materialize before the staging is deleted
     }
 
   /** s19 — the multi-quantizer OR-dial ([[ivfKnn]] `quantizers = 2`)
@@ -1760,16 +1745,18 @@ object Similarity {
     s"ROUND(-2 * list_inner_product($v, $c) + " +
       s"list_inner_product($c, $c), 9)"
 
-  /** One [[lloydFit]] replay as DuckDB CTEs over `src` (columns vec_id,
-    * v — already the id-ordered bounded sample): {pfx}cent0 …
-    * {pfx}cent{lloydIters}. Mirrors the driver loop literally: first-k
-    * init in id order, per-round argmin over [[sqlDist]] with the
-    * lowest cell id on ties (MIN over a (d, c) struct), exact
+  /** The one Lloyd SQL generator: a `rounds`-round [[lloydFit]] (or
+    * [[Clustering.kmeansFit]]) replay as DuckDB CTEs over `src`
+    * (columns vec_id, v — already the id-ordered bounded sample):
+    * {pfx}cent0 … {pfx}cent{rounds}. Mirrors the driver loop literally:
+    * first-k init in id order, per-round argmin over [[sqlDist]] with
+    * the lowest cell id on ties (MIN over a (d, c) struct), exact
     * decimal(18,12) means through the string-hop rounded to 9,
-    * empty-cell carry-forward. The c01 chainBody shape with a
-    * parameterized source and [[lloydIters]] rounds. */
-  private def lloydChainSql(src: String, k: Int, pfx: String): String = {
-    val rounds = (1 to lloydIters).map { i =>
+    * empty-cell carry-forward. Every CTE name is `pfx`-prefixed so
+    * several fits can coexist inside one WITH. */
+  private[operators] def lloydChainSql(src: String, k: Int, pfx: String,
+                                       rounds: Int = lloydIters): String = {
+    val roundCtes = (1 to rounds).map { i =>
       s"""${pfx}a$i AS MATERIALIZED (
          |  SELECT vec_id, (MIN({'d': ${sqlDist("s.v", "ct.clist")}, 'c': ct.cell})).c AS cell
          |  FROM $src s CROSS JOIN ${pfx}cent${i - 1} ct
@@ -1791,7 +1778,7 @@ object Similarity {
        |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cell,
        |         v AS clist
        |  FROM (SELECT vec_id, v FROM $src ORDER BY vec_id LIMIT $k)),
-       |${rounds.mkString(",\n")}""".stripMargin
+       |${roundCtes.mkString(",\n")}""".stripMargin
   }
 
   /** The GROUPED Lloyd replay — one independent fit per `coarse` group

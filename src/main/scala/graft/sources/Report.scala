@@ -178,12 +178,6 @@ object Report {
        |</html>""".stripMargin
   }
 
-  /** Write an HTML report document to a file. */
-  def htmlSink(title: String, sections: Seq[(String, DataFrame)],
-               path: String, maxRowsPerTable: Int = 1000): Unit =
-    java.nio.file.Files.write(java.nio.file.Paths.get(path),
-      htmlReport(title, sections, maxRowsPerTable).getBytes("UTF-8"))
-
   // ---------------------------------------------------------------------------
   // The reference's five EDA figures (spark_eda.py:390,457,560,657,739)
   // ---------------------------------------------------------------------------

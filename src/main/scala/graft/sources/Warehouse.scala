@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import graft.streaming.Staging
+
 /** Partitioned parquet serving layer — the engine's write path
   * (replaces the reference's HBase shell-put sink, stage3.ipynb cell 3;
   * semantics preserved as queryable tables, store swapped for a format
@@ -395,8 +397,7 @@ object Warehouse {
     * fixture. */
   def w01IncrementalAggRefresh(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count, lit, year}
-    val base = java.nio.file.Files.createTempDirectory("graft_w01").toString
-    try {
+    Staging.scratch("w01") { base =>
       val (root, aggRoot) = (s"$base/orders", s"$base/orders_by_year")
       val orders = graft.Tables.orders(spark, dir)
         .withColumn("o_year", year(col("o_orderdate")))
@@ -418,11 +419,6 @@ object Warehouse {
       read(spark, aggRoot)
         .select(col("o_year"), col("n_orders"), col("revenue"))
         .orderBy(col("o_year"))
-        .localCheckpoint() // materialize before the staging is deleted
-    } finally {
-      val gone = new scala.reflect.io.Directory(new java.io.File(base))
-        .deleteRecursively()
-      if (!gone) System.err.println(s"[w01] temp dir not fully removed: $base")
     }
   }
 
@@ -473,8 +469,7 @@ object Warehouse {
     val qm = udaf(QuantileSketch.mergeAgg(cap, lo, hi, bins))
     val qq = udf((b: Array[Byte], q: Double) =>
       QuantileSketch.quantile(b, q, lo, hi))
-    val base = java.nio.file.Files.createTempDirectory("graft_w08").toString
-    try {
+    Staging.scratch("w08") { base =>
       val (root, skRoot) = (s"$base/orders", s"$base/sketch_rollup")
       val orders = graft.Tables.orders(spark, dir)
         .withColumn("o_year", year(col("o_orderdate")))
@@ -509,11 +504,6 @@ object Warehouse {
           qq(col("price_yr"), lit(0.5)).as("p50_price"),
           qq(col("price_yr"), lit(0.9)).as("p90_price"))
         .orderBy(col("o_year"))
-        .localCheckpoint() // materialize before the staging is deleted
-    } finally {
-      val gone = new scala.reflect.io.Directory(new java.io.File(base))
-        .deleteRecursively()
-      if (!gone) System.err.println(s"[w08] temp dir not fully removed: $base")
     }
   }
 
@@ -702,8 +692,7 @@ object Warehouse {
           when(col("k") % 7 === 0, col("p") * 2).otherwise(col("p")))
         .unionByName(df.filter(col("k") % 17 === 0)
           .withColumn("k", col("k") + lit(100000000L)))
-    val base = java.nio.file.Files.createTempDirectory("graft_w04").toString
-    try {
+    Staging.scratch("w04") { base =>
       val root = s"$base/orders_versioned"
       val g0 = graft.Tables.orders(spark, dir)
         .select(col("o_orderkey").as("k"), col("o_totalprice").as("p"))
@@ -719,11 +708,6 @@ object Warehouse {
       }.reduce(_ unionByName _)
         .select(col("gen"), col("n_rows"), col("key_sum"), col("price_sum"))
         .orderBy(col("gen"))
-        .localCheckpoint() // materialize before the temp root is deleted
-    } finally {
-      val gone = new scala.reflect.io.Directory(new java.io.File(base))
-        .deleteRecursively()
-      if (!gone) System.err.println(s"[w04] temp dir not fully removed: $base")
     }
   }
 
@@ -795,8 +779,7 @@ object Warehouse {
     import org.apache.spark.sql.functions.{concat, count, floor, lit, when}
     val orders = graft.Tables.orders(spark, dir)
       .select(col("o_orderkey").as("k"), col("o_totalprice").as("p"))
-    val base = java.nio.file.Files.createTempDirectory("graft_w05").toString
-    try {
+    Staging.scratch("w05") { base =>
       val root = s"$base/orders_evolving"
       // v1 stored whole-dollar float32 prices: floor keeps the values
       // float-exact (< 2^24), so the float→double widening is
@@ -820,11 +803,6 @@ object Warehouse {
           graft.functions.DecimalSums.dsum(col("p")).as("price_sum"),
           graft.functions.DecimalSums.dsum(col("disc")).as("disc_sum"))
         .orderBy(col("gen"))
-        .localCheckpoint() // materialize before the temp root is deleted
-    } finally {
-      val gone = new scala.reflect.io.Directory(new java.io.File(base))
-        .deleteRecursively()
-      if (!gone) System.err.println(s"[w05] temp dir not fully removed: $base")
     }
   }
 
@@ -1133,8 +1111,7 @@ object Warehouse {
     * of the SAME table: skipping must be invisible in the result. */
   def w09ZoneMapSkipping(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count, lit, month}
-    val base = java.nio.file.Files.createTempDirectory("graft_w09").toString
-    try {
+    Staging.scratch("w09") { base =>
       val root = s"$base/orders_clustered"
       graft.Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
@@ -1149,11 +1126,6 @@ object Warehouse {
         .agg(count(lit(1)).as("n_orders"),
           graft.functions.DecimalSums.dsum(col("o_totalprice")).as("revenue"))
         .orderBy(col("order_month"))
-        .localCheckpoint() // materialize before the staging is deleted
-    } finally {
-      val gone = new scala.reflect.io.Directory(new java.io.File(base))
-        .deleteRecursively()
-      if (!gone) System.err.println(s"[w09] temp dir not fully removed: $base")
     }
   }
 

@@ -393,6 +393,16 @@ object EventStreams {
 
   private val sinkId = new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** Shuffle (and so state) partitions of the bounded replay harnesses
+    * (v12–v17, v18/v30, the ScalingBench streaming suites): every
+    * stateful operator pays one state-store commit (delta file +
+    * snapshot bookkeeping) per partition per micro-batch, and the
+    * per-batch joins move kilobytes, so 32 partitions quadruple the
+    * fixed IO for zero parallelism benefit. Results are
+    * partition-count-independent (swept in DeterminismSpec); a
+    * production deployment sizes this to the cluster instead. */
+  private[graft] val replayPartitions = 8
+
   /** Far-future sentinel event: pushes the event-time watermark past all
     * real data so every append-mode window closes and emits. */
   private val flushSentinel =
@@ -432,22 +442,6 @@ object EventStreams {
       .sortBy(e => (e.ts.getTime, e.event_id))
     val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"
     val ms = MemoryStream[Ev](spark)
-    // 8 state partitions for the replay: every stateful operator pays
-    // one state-store commit (delta file + snapshot bookkeeping) per
-    // partition per micro-batch, so 32 partitions quadruple the fixed
-    // IO of this bounded harness for zero parallelism benefit. Results
-    // are partition-count-independent (pinned suite-wide); a production
-    // deployment sizes this to the cluster instead.
-    // SEQUENTIAL-EXECUTION ASSUMPTION: this set/restore mutates the
-    // SHARED session's conf for the duration of the replay. A query
-    // launched concurrently on the same SparkSession would plan inside
-    // the 8-partition window — benign for correctness (every gate
-    // result is pinned partition-count-independent, swept in
-    // DeterminismSpec) but a perf surprise. The driver gate and the
-    // test suites both run queries sequentially; a concurrent caller
-    // should clone the session (`spark.newSession()`) first.
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     // Checkpoint the REPLAY HARNESS on tmpfs when the host has one.
     // Every micro-batch commits one fsync'd delta file per state-store
     // instance (a stream-stream join = 4 stores × 8 partitions = 32
@@ -465,7 +459,8 @@ object EventStreams {
       else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
     }
     val ckpt = java.nio.file.Files.createTempDirectory(ckptBase, "graft_replay_ckpt_")
-    try {
+    try graft.GraftSession.withConf(spark)(
+        "spark.sql.shuffle.partitions" -> replayPartitions.toString) {
       val q = transform(ms.toDF()).writeStream
         .format("memory").queryName(name)
         .option("checkpointLocation", ckpt.toString)
@@ -478,11 +473,14 @@ object EventStreams {
         ms.addData(flush); q.processAllAvailable()
       } finally q.stop()
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       // tmpfs is RAM — a leaked checkpoint dir is leaked memory
       new scala.reflect.io.Directory(ckpt.toFile).deleteRecursively()
     }
-    spark.table(name)
+    // the frame keeps the sink's rows through its resolved plan; the
+    // view itself would pin them for the session's lifetime
+    val out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    out
   }
 
   /** v12 — tumbling counts computed by the streaming runtime, hash-gated
@@ -650,8 +648,7 @@ object EventStreams {
     * no loss, no dupes, no driver-fed MemoryStream anywhere. */
   def v15FileSourceTumbling(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_v15").toString
-    try {
+    Staging.scratch("v15") { base =>
       val (src, out, ckpt) = (s"$base/src", s"$base/out", s"$base/ckpt")
       val ev = graft.Tables.events(spark, dir)
       val mm = ev.agg(min(col("ts")), max(col("ts"))).head()
@@ -675,12 +672,6 @@ object EventStreams {
       spark.read.parquet(out)
         .filter(col("event_type") =!= "sentinel").drop("batch_id")
         .orderBy(col("window_start"), col("event_type"))
-        .localCheckpoint() // materialize before the staging is deleted
-    } finally {
-      // a failed run must not leak a staged copy of the events table
-      val gone = new scala.reflect.io.Directory(new java.io.File(base))
-        .deleteRecursively()
-      if (!gone) System.err.println(s"[v15] temp staging not fully removed: $base")
     }
   }
 

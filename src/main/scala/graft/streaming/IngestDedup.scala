@@ -213,8 +213,7 @@ object IngestDedup {
     * involved). The landed survivor set must equal "documents with no
     * smaller-id near-dup at Jaccard ≥ 0.8 among ALL documents". */
   def v18StreamedIngestDedup(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_v18").toString
-    try {
+    Staging.scratch("v18") { base =>
       val (src, out, idx, ckpt) =
         (s"$base/src", s"$base/out", s"$base/idx", s"$base/ckpt")
       val docs = graft.Tables.documents(spark, dir)
@@ -228,29 +227,20 @@ object IngestDedup {
       stage(docs.filter(col("doc_id") <= lit(c1)))
       stage(docs.filter(col("doc_id") > lit(c1) && col("doc_id") <= lit(c2)))
       def start() = dedupingSink(readDocs(spark, src), out, idx, ckpt)
-      // 8 shuffle partitions for the replay, the v12–v17 rationale: the
-      // per-batch joins move kilobytes, so 32-way exchanges are pure
-      // task overhead ×3 batches. Results are partition-count-
-      // independent (width-swept suite-wide); same sequential-execution
-      // contract as replayThroughRuntime.
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      // the replay width: the per-batch joins move kilobytes, so
+      // 32-way exchanges are pure task overhead ×3 batches
+      graft.GraftSession.withConf(spark)(
+          "spark.sql.shuffle.partitions" -> EventStreams.replayPartitions.toString) {
         val q1 = start()
         try q1.processAllAvailable() finally q1.stop()
         // the last slice arrives while the query is down
         stage(docs.filter(col("doc_id") > lit(c2)))
         val q2 = start()
         try q2.processAllAvailable() finally q2.stop()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       spark.read.parquet(out)
         .select(col("doc_id"), col("source"), col("n_chars"))
         .orderBy(col("doc_id"))
-        .localCheckpoint() // materialize before the staging is deleted
-    } finally {
-      val gone = new scala.reflect.io.Directory(new java.io.File(base))
-        .deleteRecursively()
-      if (!gone) System.err.println(s"[v18] temp staging not fully removed: $base")
     }
   }
 
@@ -403,8 +393,7 @@ object IngestDedup {
     * must equal "vectors with no smaller-id near-dup at cosine ≥ 0.45
     * among ALL vectors". */
   def v30StreamedSemanticDedup(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_v30").toString
-    try {
+    Staging.scratch("v30") { base =>
       val (src, out, idx, ckpt) =
         (s"$base/src", s"$base/out", s"$base/idx", s"$base/ckpt")
       val vecs = graft.Tables.embeddings(spark, dir)
@@ -415,23 +404,17 @@ object IngestDedup {
       stage(vecs.filter(col("vec_id") <= lit(c1)))
       stage(vecs.filter(col("vec_id") > lit(c1) && col("vec_id") <= lit(c2)))
       def start() = semanticDedupingSink(readVecs(spark, src), out, idx, ckpt)
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      graft.GraftSession.withConf(spark)(
+          "spark.sql.shuffle.partitions" -> EventStreams.replayPartitions.toString) {
         val q1 = start()
         try q1.processAllAvailable() finally q1.stop()
         stage(vecs.filter(col("vec_id") > lit(c2)))
         val q2 = start()
         try q2.processAllAvailable() finally q2.stop()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       spark.read.parquet(out)
         .select(col("vec_id"), col("label"))
         .orderBy(col("vec_id"))
-        .localCheckpoint()
-    } finally {
-      val gone = new scala.reflect.io.Directory(new java.io.File(base))
-        .deleteRecursively()
-      if (!gone) System.err.println(s"[v30] temp staging not fully removed: $base")
     }
   }
 

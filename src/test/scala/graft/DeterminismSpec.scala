@@ -23,19 +23,15 @@ class DeterminismSpec extends SparkSpec {
     "q33_salted_flag_stats", "q34_salted_brand_revenue",
     "q35_grouping_sets_revenue", "q36_order_value_quartiles", "s07_knn_ivfsq")
 
-  private def pinWidths(names: Seq[String]): Unit = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      names.foreach { name =>
-        val q = SparkEntry.queries(name)
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        val a = digest(q(spark, sf))
-        spark.conf.set("spark.sql.shuffle.partitions", "7")
-        val b = digest(q(spark, sf))
-        assert(a == b, s"$name digest diverges across shuffle widths")
-      }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  private def pinWidths(names: Seq[String]): Unit =
+    names.foreach { name =>
+      val q = SparkEntry.queries(name)
+      def at(width: String) = GraftSession.withConf(spark)(
+        "spark.sql.shuffle.partitions" -> width)(digest(q(spark, sf)))
+      val a = at("4")
+      val b = at("7")
+      assert(a == b, s"$name digest diverges across shuffle widths")
+    }
 
   test("round-3 queries digest identically under different shuffle widths") {
     pinWidths(roundThree)

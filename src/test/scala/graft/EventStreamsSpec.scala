@@ -65,6 +65,20 @@ class EventStreamsSpec extends SparkSpec {
     assertSameRows(streamed, EventQueries.v01TumblingCounts(spark, sf))
   }
 
+  test("replay gates drop their memory-sink views; the frames still collect") {
+    val v12 = EventStreams.v12StreamedTumbling(spark, sf)
+    val v13 = EventStreams.v13StreamedSessions(spark, sf)
+    val sinks = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_stream_sink_"))
+    assert(sinks.isEmpty, s"leaked sink views: ${sinks.mkString(", ")}")
+    assert(v13.count() > 0)
+    val batch = EventQueries.v01TumblingCounts(spark, sf)
+    val cols = batch.columns.sorted.map(col)
+    val got = v12.select(cols: _*).collect().map(_.toString).sorted.toSeq
+    val want = batch.select(cols: _*).collect().map(_.toString).sorted.toSeq
+    assert(got.nonEmpty && got == want)
+  }
+
   test("slidingCounts replay matches batch v04 (first 2000 windows)") {
     val streamed = replay(EventStreams.slidingCounts(_))
       // drop the sentinel's two windows (start >= 2025)

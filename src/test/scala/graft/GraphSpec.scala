@@ -146,9 +146,7 @@ class GraphSpec extends SparkSpec {
     // localCheckpoint drops outputPartitioning, so per-round
     // co-location must come from a bucketed edge table instead — prove
     // it: same round arithmetic, one fewer Exchange, identical result
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try GraftSession.withConf(spark)("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val g = li(1L -> Seq(1L, 2L), 2L -> Seq(2L, 3L), 3L -> Seq(1L, 3L),
         4L -> Seq(3L, 4L))
       val und = Graph.copurchaseEdges(g)
@@ -177,7 +175,6 @@ class GraphSpec extends SparkSpec {
       val b = bucketed.as[(Long, Long)].collect().toSet
       assert(a == b, "bucketed round must compute the identical masses")
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS graft_edges_b")
     }
   }

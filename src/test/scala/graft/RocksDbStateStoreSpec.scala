@@ -22,15 +22,8 @@ class RocksDbStateStoreSpec extends SparkSpec {
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
   private val confKey = "spark.sql.streaming.stateStore.providerClass"
 
-  private def withProvider[A](cls: String)(body: => A): A = {
-    val prev = spark.conf.getOption(confKey)
-    spark.conf.set(confKey, cls)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(confKey, v)
-      case None    => spark.conf.unset(confKey)
-    }
-  }
+  private def withProvider[A](cls: String)(body: => A): A =
+    GraftSession.withConf(spark)(confKey -> cls)(body)
 
   private val gates: Seq[(String, () => DataFrame)] = Seq(
     ("v12_streamed_tumbling", () => EventStreams.v12StreamedTumbling(spark, sf)),

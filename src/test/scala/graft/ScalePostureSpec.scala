@@ -106,10 +106,8 @@ class ScalePostureSpec extends SparkSpec {
   }
 
   test("bucketed tables sort-merge-join with zero exchanges") {
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // force SMJ so the assertion is about bucketing, not broadcast
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // force SMJ so the assertion is about bucketing, not broadcast
+    try GraftSession.withConf(spark)("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       Warehouse.writeBucketed(
         Tables.orders(spark, sf), "graft_orders_b", "o_custkey", 4)
       Warehouse.writeBucketed(
@@ -127,7 +125,6 @@ class ScalePostureSpec extends SparkSpec {
         .count()
       assert(joined.count() == expected)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS graft_orders_b")
       spark.sql("DROP TABLE IF EXISTS graft_customer_b")
     }

@@ -93,12 +93,9 @@ class SketchesSpec extends SparkSpec {
   // scaling.md section before "fixing" anything.
   test("q30 merged yearly estimate is order-independent (repartition-proof)") {
     val a = Sketches.q30HllDistinctRollup(spark, sf)
-    val b = {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "7")
-      try Sketches.q30HllDistinctRollup(spark, sf)
+    val b = GraftSession.withConf(spark)("spark.sql.shuffle.partitions" -> "7") {
+      Sketches.q30HllDistinctRollup(spark, sf)
         .collect().toSeq // materialize under the altered conf
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     }
     assert(a.collect().toSeq == b,
       "q30 layout-sensitivity: likely the set->HLL promotion boundary " +

@@ -376,12 +376,10 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("tfidf ranking is partitioning-independent") {
     val a = TextAnalysis.t11TfidfTopTerms(spark, sf).collect().toSeq
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "7")
-    try {
+    GraftSession.withConf(spark)("spark.sql.shuffle.partitions" -> "7") {
       val b = TextAnalysis.t11TfidfTopTerms(spark, sf).collect().toSeq
       assert(a == b)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
   }
 
   test("lmLogprob matches hand-computed Laplace unigram surprisal") {

@@ -586,7 +586,7 @@ object ScalingBench {
   private def estimationSuite(spark: SparkSession, baseDir: String,
                               scale: Int, only: Option[Set[String]]): Unit = {
     val dir = s"/tmp/graft_scaling/est_x$scale"
-    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    val parts = ScalePolicy.width(spark)
     // capacity/bin-width labels come from the operators' own dials
     // (single owner — Sketches), never re-hardcoded here
     val thetaCap = 1L << operators.Sketches.thetaLgK
@@ -602,11 +602,11 @@ object ScalingBench {
     val wantQ30 = wantEst("q30", "q30_hll_distinct_rollup")
     if (wantQ39)
       ScaleCorpus.lineitem(Tables.lineitem(spark, baseDir), scale, keepPct = 70)
-        .repartition(parts.toInt)
+        .repartition(parts)
         .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     if (wantQ40 || wantQ30)
       ScaleCorpus.orders(Tables.orders(spark, baseDir), scale)
-        .repartition(parts.toInt)
+        .repartition(parts)
         .write.mode("overwrite").parquet(s"$dir/orders.parquet")
 
     def rows(df: DataFrame): Seq[String] =

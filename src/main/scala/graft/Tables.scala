@@ -70,63 +70,4 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
-
-  /** Hash-repartition `df` on `by` across the session's configured
-    * shuffle width — the round-15 fix for compute-dense pipelines whose
-    * parallelism would otherwise be inherited from the INPUT layout.
-    *
-    * Two layout pathologies motivate it (guide §2.5/§6): (a) a
-    * single-row-group parquet file is unsplittable, so a scan of it is
-    * ONE task and everything pipelined on top (shingle explodes,
-    * all-pairs cosine scoring, wedge enumeration) runs on one core of
-    * the whole cluster; (b) AQE's partition coalescing sizes
-    * post-shuffle partitions by their INPUT bytes, so a small frame
-    * feeding a high-fan-out join/generate is coalesced to one partition
-    * and the fan-out work serializes. An explicit numPartitions pins
-    * the width (AQE never coalesces user-specified repartitioning), and
-    * `spark.sql.shuffle.partitions` is the ONE deployment-tracked width
-    * knob ([[GraftSession]]) — cores locally, thousands on a cluster —
-    * so the spread scales with the deployment instead of hardcoding a
-    * local constant. Hash partitioning on an explicit key keeps the
-    * assignment deterministic under task retry (a keyless round-robin
-    * repartition pays a per-partition sort and rides on input order).
-    * Results are partitioning-invariant by the engine's determinism
-    * conventions (DeterminismSpec) — this changes plan shape only. */
-  def spread(df: DataFrame, by: org.apache.spark.sql.Column*): DataFrame = {
-    require(by.nonEmpty, "spread needs an explicit deterministic key")
-    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, by: _*)
-  }
-
-  /** [[spread]] ONLY when the frame's actual scan layout is narrower
-    * than half the configured shuffle width — the input-layout-adaptive
-    * form for heavy aggregations DIRECTLY over a base-table scan.
-    * At deployment scale the fact table arrives as thousands of
-    * splits, the condition is false, and this is the identity: the
-    * partial aggregation stays map-side on the scan and no raw-row
-    * shuffle is ever added (repartitioning a 100 TB scan before its
-    * partial agg would be a full extra pass). On a narrow layout (the
-    * gate fixtures are single-row-group files — unsplittable, one task
-    * per scan) it pays one narrow exchange of the pruned columns to buy
-    * the full width for the per-row work. Column pruning pushes the
-    * projection below the repartition, so only consumed columns move. */
-  def spreadIfNarrow(df: DataFrame, by: org.apache.spark.sql.Column*): DataFrame = {
-    val w = df.sparkSession.sessionState.conf.numShufflePartitions
-    if (2 * df.rdd.getNumPartitions >= w) df else spread(df, by: _*)
-  }
-
-  /** [[spread]] `df` when a REFERENCE scan's layout is narrow — for
-    * spreading a derived frame (joins, aggregations upstream) whose own
-    * `.rdd` probe would be wrong to take: under AQE, `.rdd` on a frame
-    * with exchanges MATERIALIZES every upstream query stage, i.e. runs
-    * the whole chain once just to read a partition count, and the real
-    * action then runs it again (measured: p12 1.8× slower with the
-    * probe on the derived frame, round 16). The base table's scan
-    * layout is the thing the condition is really about — probe THAT
-    * (exchange-free, so `.rdd` is plan-only), spread the derived
-    * frame. */
-  def spreadIfScanNarrow(scan: DataFrame, df: DataFrame,
-                         by: org.apache.spark.sql.Column*): DataFrame = {
-    val w = df.sparkSession.sessionState.conf.numShufflePartitions
-    if (2 * scan.rdd.getNumPartitions >= w) df else spread(df, by: _*)
-  }
 }

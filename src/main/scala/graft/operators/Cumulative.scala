@@ -53,11 +53,8 @@ object Cumulative {
     * data. */
   def withCumsumAndRank(df: DataFrame, sortCols: Seq[Column], valueCol: Column,
                         cumName: String, rankName: String = null,
-                        totName: String = null,
-                        numPartitions: Int = 0): DataFrame = {
-    val p =
-      if (numPartitions > 0) numPartitions
-      else df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+                        totName: String = null): DataFrame = {
+    val p = graft.ScalePolicy.width(df.sparkSession)
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // the input persist keeps the range-boundary sampling job from
     // recomputing its lineage; the eager localCheckpoint materializes
@@ -121,22 +118,17 @@ object Cumulative {
     * be simple named columns with NON-NULL values (the offset/total
     * joins are name-keyed equality joins).
     *
-    * The (pid × group) summary is BROADCAST only while it is actually
-    * small: past `maxBroadcastSummaryRows` (≈ tens of MB at ~50 B/row
-    * — e.g. 32 partitions × >30k strata) the offset/total joins fall
-    * back to ordinary shuffle hash/merge joins, keyed on (pid, group)
-    * and (group) respectively, so stratum cardinality can grow without
-    * bound without risking driver/executor OOM on the broadcast. The
-    * summary is already eagerly checkpointed, so the row count that
-    * picks the strategy is a metadata-cheap action, not a rescan. */
+    * The (pid × group) summary is BROADCAST only while it fits
+    * [[graft.ScalePolicy.rankSummaries]]: past it the offset/total
+    * joins fall back to ordinary shuffle hash/merge joins, keyed on
+    * (pid, group) and (group) respectively, so stratum cardinality can
+    * grow without bound without risking driver/executor OOM on the
+    * broadcast. The row count that picks the strategy rides the
+    * summary's own eager checkpoint — no extra job. */
   def withGroupedRank(df: DataFrame, groupCols: Seq[Column],
                       sortCols: Seq[Column], rankName: String,
-                      totName: String,
-                      numPartitions: Int = 0,
-                      maxBroadcastSummaryRows: Long = 1000000L): DataFrame = {
-    val p =
-      if (numPartitions > 0) numPartitions
-      else df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+                      totName: String): DataFrame = {
+    val p = graft.ScalePolicy.width(df.sparkSession)
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val ownCache =
       df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
@@ -153,10 +145,11 @@ object Cumulative {
       .orderBy(sortCols: _*)
     val local = parted.withColumn("__rn_loc", row_number().over(wLoc))
     // (pid, group) summary — partition-count × groups-per-partition
-    // rows, tiny next to the data
-    val parts = parted.groupBy(col("__pid") +: groupCols: _*)
-      .agg(count(lit(1)).as("__pcnt"))
-      .localCheckpoint(true) // three consumers below
+    // rows, tiny next to the data; checkpointed for its three consumers
+    val partsCp = graft.ScalePolicy.checkpoint(
+      parted.groupBy(col("__pid") +: groupCols: _*)
+        .agg(count(lit(1)).as("__pcnt")))
+    val parts = partsCp.frame
     val gkeys = groupCols.map(_.toString)
     val preds = parts.select(
       col("__pid").as("__bpid") +: col("__pcnt").as("__bpcnt") +:
@@ -169,8 +162,7 @@ object Cumulative {
       .agg(sum(col("__bpcnt")).as("__ocnt"))
     val tots = parts.groupBy(gkeys.map(col): _*)
       .agg(sum(col("__pcnt")).as(totName))
-    val hint: DataFrame => DataFrame =
-      if (parts.count() <= maxBroadcastSummaryRows) broadcast else identity
+    val hint = graft.ScalePolicy.rankSummaries.hint(partsCp.rows)
     local
       .join(hint(offs), Seq("__pid") ++ gkeys)
       .join(hint(tots), gkeys)

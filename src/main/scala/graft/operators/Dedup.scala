@@ -57,11 +57,6 @@ object Dedup {
         i => concat_ws(" ", (1 to n).map(k => element_at(toks, i + k)): _*))))
       .otherwise(array(concat_ws(" ", toks)))
 
-  /** Convenience form over raw text — fine for literals/tests; in
-    * per-row pipelines go through a tokens projection + shingleTokens. */
-  def shingleArray(text: Column, n: Int): Column =
-    shingleTokens(split(text, " "), n)
-
   /** (doc_id, tokens) with the split materialized once per row — and,
     * when the scan layout is narrower than the shuffle width, spread
     * first (round 15): tokenize + shingle-explode + the map-side
@@ -69,9 +64,12 @@ object Dedup {
     * on the document SCAN, whose parallelism is the input's split count
     * (one task on a single-row-group file — measured as the dominant
     * cost of the whole d02 family). On an already-wide layout this is
-    * the identity — no extra pass of the heaviest column (round 16). */
-  private def tokenized(docs: DataFrame): DataFrame =
-    graft.Tables.spreadIfNarrow(docs, col("doc_id"))
+    * the identity — no extra pass of the heaviest column (round 16).
+    * A `docs` derived from the scan (a semi-join) names that `scan` for
+    * the layout probe. */
+  private def tokenized(docs: DataFrame,
+                        scan: Option[DataFrame] = None): DataFrame =
+    graft.ScalePolicy.spreadIfNarrow(docs, col("doc_id"), scan)
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
 
   /** (doc_id, shingle) exploded, optionally dropping shingles hotter
@@ -138,7 +136,7 @@ object Dedup {
     // quadratic cost of the whole family — it must not run on one
     // core); it is the same single shuffle the groupBy needed anyway.
     val ds = col("ds")
-    val lists = graft.Tables.spread(docShingles(docs, n, None), col("shingle"))
+    val lists = graft.ScalePolicy.spread(docShingles(docs, n, None), col("shingle"))
       .groupBy(col("shingle"))
       .agg(collect_list(col("doc_id")).as("ds"))
       .transform(l => maxShingleFreq.fold(l)(lim => l.filter(size(ds) <= lim)))
@@ -171,7 +169,7 @@ object Dedup {
     // ~24 B/row, so AQE coalesces its ENSURE exchange to one partition
     // and the count + size-joins + score filter over the million-pair
     // frame serialize (measured: d02's residual 3.1 s one-task stage)
-    val inter = graft.Tables.spread(
+    val inter = graft.ScalePolicy.spread(
         lists
           .filter(size(ds) > 1)
           .select(posexplode(ds).as(Seq("i", "a")), ds)
@@ -375,7 +373,8 @@ object Dedup {
     val candDocs = c
       .select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
       .distinct()
-    val sets = tokenized(docs.join(candDocs, Seq("doc_id"), "left_semi"))
+    val sets = tokenized(docs.join(candDocs, Seq("doc_id"), "left_semi"),
+        scan = Some(docs))
       .select(col("doc_id"),
         array_distinct(shingleTokens(col("toks"), n)).as("sset"))
     c
@@ -549,7 +548,7 @@ object Dedup {
     // quadratic scoring pipelines on the left scan's split count
     val e = emb.select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
       .withColumn("nrm", VectorOps.norm(col("v")))
-    graft.Tables.spread(e, col("vec_id")).as("a")
+    graft.ScalePolicy.spread(e, col("vec_id")).as("a")
       .join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
       .withColumn("cosine",
         VectorOps.dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm")))
@@ -668,7 +667,7 @@ object Dedup {
     // checkpoint stage inside s23). Identity on already-wide layouts;
     // batch-only (this entry point), the streaming path calls
     // [[embeddingBucketIndex]] directly on its micro-batch frames.
-    val embW = graft.Tables.spreadIfNarrow(emb, col("vec_id"))
+    val embW = graft.ScalePolicy.spreadIfNarrow(emb, col("vec_id"))
     val e = embW.select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
       .withColumn("nrm", VectorOps.norm(col("v")))
     // materialized for the same reason as lshCandidates: the self-join
@@ -861,10 +860,11 @@ object Dedup {
                                  Similarity.IvfCandidateVolumeBudget): DataFrame = {
     require(quantizers >= 1 && quantizers < VectorOps.orMixConstants.size,
       s"quantizers must be in [1, ${VectorOps.orMixConstants.size - 1}]")
-    val e = emb.select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
-      .withColumn("nrm", VectorOps.norm(col("v")))
-      .localCheckpoint(true) // three consumers: count, assign, verify
-    val n = e.count()
+    // two consumers (assign, verify); the row count sizes nlist
+    val cp = graft.ScalePolicy.checkpoint(emb.select(col("vec_id"),
+        VectorOps.asDouble(col("embedding")).as("v"))
+      .withColumn("nrm", VectorOps.norm(col("v"))))
+    val (e, n) = (cp.frame, cp.rows)
     val nlist = math.max(minNlist.toLong, n / targetCell).toInt
     // pre-flight affordability (round 13): refuse un-affordable dials
     // up front — the closed-form volume estimate against the measured
@@ -990,15 +990,13 @@ object Dedup {
       // own materialization as an observed metric, instead of a second
       // action (the old shape paid a next×labels join + count job on
       // top of the checkpoint job every round)
-      val obs = org.apache.spark.sql.Observation()
-      val step = labels.as("l").join(nbrMin.as("n"), Seq("node"))
-        .select(col("node"), col("l.lbl").as("__old"),
-          least(col("l.lbl"), col("n.nlbl")).as("lbl"))
-        .observe(obs, count(when(col("lbl") < col("__old"), 1)).as("changed"))
-        .localCheckpoint(true)
-      val changed = obs.get("changed").asInstanceOf[Long]
-      labels = step.select(col("node"), col("lbl"))
-      converged = changed == 0L
+      val step = graft.ScalePolicy.checkpoint(
+        labels.as("l").join(nbrMin.as("n"), Seq("node"))
+          .select(col("node"), col("l.lbl").as("__old"),
+            least(col("l.lbl"), col("n.nlbl")).as("lbl")),
+        count(when(col("lbl") < col("__old"), 1)).as("changed"))
+      labels = step.frame.select(col("node"), col("lbl"))
+      converged = step.long("changed") == 0L
       iter += 1
     }
     edges.unpersist()
@@ -1429,7 +1427,7 @@ object Dedup {
     // (the embeddingNearDupPairsLSH rationale).
     val buckets = capBuckets(
         embeddingBucketIndex(
-          graft.Tables.spreadIfNarrow(emb, col("vec_id")),
+          graft.ScalePolicy.spreadIfNarrow(emb, col("vec_id")),
           bands = 24, planesPerBand = planes),
         Some(4096L))
       .join(split, Seq("vec_id"))

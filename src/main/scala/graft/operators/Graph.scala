@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DoubleType
 
-import graft.Tables
+import graft.{ScalePolicy, Tables}
 
 /** Graph analytics over the part co-purchase graph — the capability
   * class the rest of the catalog lacks: ITERATIVE edge-propagation
@@ -57,28 +57,6 @@ object Graph {
   val prRounds = 5
   val scale = 1000000000000L // 10^12 micro-units per unit of mass
 
-  /** Broadcast envelope for the per-round NODE-SIZED frames (rank
-    * vectors, label frames, BFS frontiers, keep-sets, degree tables) —
-    * the [[kCore]] size-conditional precedent generalized (round 16):
-    * when the count provably fits (~16 B/row payload, well under the
-    * 8 GB broadcast cap with hash-relation overhead), pin the
-    * exchange-free broadcast join instead of leaving SMJ-vs-BHJ to
-    * AQE's runtime estimate — AQE can only convert AFTER both sides'
-    * shuffles have already materialized (the map-side write is paid
-    * either way), while a planner-time hint never exchanges the
-    * edge-sized side at all. Past the envelope every join falls back
-    * to the keyed-shuffle plan unchanged — results identical either
-    * way (plan shape only). */
-  private val nodeBroadcastRows = 4000000L
-
-  /** Broadcast envelope for an EDGE-SIZED frame (the [[triangles]]
-    * closure list — two longs a row): tighter than the node envelope
-    * because the wedge probe holds the whole relation per task. */
-  private val edgeBroadcastRows = 4000000L
-
-  private def hintIf(small: Boolean): DataFrame => DataFrame =
-    if (small) broadcast else identity
-
   /** Undirected co-purchase edges (src < dst, w = #co-occurring
     * orders) from the distinct (order, part) projection.
     *
@@ -94,7 +72,7 @@ object Graph {
     * counted per order). */
   def copurchaseEdges(lineitem: DataFrame): DataFrame = {
     val ps = col("ps")
-    val sets = graft.Tables.spread(
+    val sets = ScalePolicy.spread(
         lineitem.select(col("l_orderkey").as("o"), col("l_partkey").as("p")),
         col("o"))
       .groupBy(col("o")).agg(collect_set(col("p")).as("ps"))
@@ -129,10 +107,9 @@ object Graph {
   /** (out-strength frame, initial pr vector, teleport base, node
     * count) for a directed-edge frame — the shared fit preamble. */
   private def prSetup(e: DataFrame): (DataFrame, DataFrame, Long, Long) = {
-    val out = e.groupBy(col("src"))
-      .agg(sum(col("w")).as("outw"), count(lit(1)).as("n_nbrs"))
-      .localCheckpoint(true)
-    val n = out.count()
+    val cp = ScalePolicy.checkpoint(e.groupBy(col("src"))
+      .agg(sum(col("w")).as("outw"), count(lit(1)).as("n_nbrs")))
+    val (out, n) = (cp.frame, cp.rows)
     val pr0 = out.select(col("src").as("node"),
       lit(scale / n).as("pr")).localCheckpoint(true)
     (out, pr0, (15L * scale) / (100L * n), n) // teleport mass, integer-exact
@@ -170,14 +147,11 @@ object Graph {
     // (measured: 46 jobs → ~5 AQE stage-jobs at sf0.1). Iterations with
     // a per-round ACTION (convergence tests: kCore, starContract) or a
     // frame consumed twice per round keep their checkpoints.
-    // The pr vector is NODE-sized: while it fits the envelope,
-    // broadcast it into each round's join so the EDGE table is never
-    // exchanged (round 16 — was both sides re-shuffled every round;
-    // AQE's runtime SMJ→BHJ conversion only fires after the edge
-    // shuffle is already written). Per-round shuffle drops to the
-    // node-sized partial aggregate. Past the envelope: the keyed plan,
-    // and [[pagerankBucketed]] is the standing-graph recipe.
-    val nodeHint = hintIf(n <= nodeBroadcastRows)
+    // The pr vector is NODE-sized: while it fits, it is broadcast into
+    // each round's join so the EDGE table is never exchanged (round 16
+    // — was both sides re-shuffled every round). Past the envelope: the
+    // keyed plan, and [[pagerankBucketed]] is the standing-graph recipe.
+    val nodeHint = ScalePolicy.nodeFrames.hint(n)
     var pr = pr0
     for (_ <- 1 to rounds)
       pr = prRound(edges, nodeHint(pr), base)
@@ -238,19 +212,16 @@ object Graph {
     val und = copurchaseEdges(lineitem)
       .select(col("src").as("u"), col("dst").as("v"))
       .localCheckpoint(true)
-    val deg = und.select(col("u").as("node"))
+    // both checkpoints' row counts size the conditional broadcasts below
+    val degCp = ScalePolicy.checkpoint(und.select(col("u").as("node"))
       .unionAll(und.select(col("v").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
-    // both counts are cheap jobs over already-materialized checkpoints;
-    // they size the conditional broadcasts below
-    val nCnt = deg.count()
-    val nodeHint = hintIf(nCnt <= nodeBroadcastRows)
+      .groupBy(col("node")).agg(count(lit(1)).as("deg")))
+    val deg = degCp.frame
+    val nodeHint = ScalePolicy.nodeFrames.hint(degCp.rows)
     // orient each edge from the lower (deg, id) endpoint to the higher:
     // out-degree bounded by O(sqrt m), so the wedge join can't blow up.
-    // deg is node-sized — broadcast it into both orientation lookups
-    // when it fits, so the edge list is never exchanged here (was two
-    // SMJs re-sorting the edge frame; the kCore precedent).
+    // deg is node-sized: broadcast into both lookups while it fits (was
+    // two SMJs re-sorting the edge frame).
     val du = nodeHint(deg.select(col("node").as("u"), col("deg").as("du")))
     val dv = nodeHint(deg.select(col("node").as("v"), col("deg").as("dv")))
     val low = col("du") < col("dv") ||
@@ -258,12 +229,12 @@ object Graph {
     val oe0 = und.join(du, "u").join(dv, "v")
       .select(when(low, col("u")).otherwise(col("v")).as("a"),
         when(low, col("v")).otherwise(col("u")).as("b"))
-    val oe = maxWedgeDegree.fold(oe0) { cap =>
+    val oeCp = ScalePolicy.checkpoint(maxWedgeDegree.fold(oe0) { cap =>
       val w = Window.partitionBy(col("a")).orderBy(col("b"))
       oe0.withColumn("ork", row_number().over(w))
         .filter(col("ork") <= cap).drop("ork")
-    }.localCheckpoint(true)
-    val mCnt = oe.count()
+    })
+    val oe = oeCp.frame
     // spread ONE side to pin the enumeration width (round 15): the
     // oriented edge list is tiny in bytes, so AQE would coalesce the
     // fan-out to one partition and the O(Σ out-deg²) wedge ENUMERATION
@@ -278,14 +249,14 @@ object Graph {
     // shape: identical results, the orientation bound still caps the
     // fan-out, only the closure join pays its shuffle again.
     val tri0 =
-      if (mCnt <= edgeBroadcastRows)
-        graft.Tables.spread(oe, col("a")).as("e1")
+      if (ScalePolicy.edgeFrames.fits(oeCp.rows))
+        ScalePolicy.spread(oe, col("a")).as("e1")
           .join(broadcast(oe.as("e2")), col("e1.b") === col("e2.a"))
           .join(broadcast(oe.as("e3")),
             col("e3.a") === col("e1.a") && col("e3.b") === col("e2.b"))
       else
         oe.as("e1")
-          .join(graft.Tables.spread(oe, col("a")).as("e2"),
+          .join(ScalePolicy.spread(oe, col("a")).as("e2"),
             col("e1.b") === col("e2.a"))
           .join(oe.as("e3"),
             col("e3.a") === col("e1.a") && col("e3.b") === col("e2.b"))
@@ -322,9 +293,11 @@ object Graph {
     * (node, d) and takes MIN(d) per node — level-synchronous BFS and
     * min-over-all-walks agree by definition of shortest path. */
   def bfsHopsFrom(lineitem: DataFrame, maxHops: Int = bfsHops): DataFrame = {
-    val e = directed(copurchaseEdges(lineitem))
-      .select(col("src"), col("dst")).localCheckpoint(true)
-    val seed = e.agg(min(col("src"))).collect()(0).getLong(0)
+    // the seed and the envelope's row count ride the edge checkpoint
+    val cp = ScalePolicy.checkpoint(directed(copurchaseEdges(lineitem))
+      .select(col("src"), col("dst")), min(col("src")).as("seed"))
+    require(cp.rows > 0, "bfsHopsFrom: the co-purchase graph has no edges, so no seed")
+    val (e, seed) = (cp.frame, cp.long("seed"))
     var visited = e.sparkSession.range(1).select(
       lit(seed).as("node"), lit(0).as("dist")).localCheckpoint(true)
     var frontier = visited
@@ -332,7 +305,7 @@ object Graph {
     // into the expansion / anti-join while the graph fits the envelope,
     // so the edge table is never exchanged per hop — the [[pagerank]]
     // round-16 rationale
-    val nodeHint = hintIf(e.count() <= nodeBroadcastRows)
+    val nodeHint = ScalePolicy.nodeFrames.hint(cp.rows)
     for (d <- 1 to maxHops) {
       // only the FRONTIER is eagerly checkpointed per round (it feeds
       // two consumers next round — expansion and anti-join); visited
@@ -365,21 +338,22 @@ object Graph {
   def personalizedPagerank(lineitem: DataFrame,
                            rounds: Int = prRounds): DataFrame = {
     val e = directed(copurchaseEdges(lineitem))
-    val out = e.groupBy(col("src"))
-      .agg(sum(col("w")).as("outw"), count(lit(1)).as("n_nbrs"))
-      .localCheckpoint(true)
+    val isSeed = (c: org.apache.spark.sql.Column) => c % 20 === 0
+    // the seed count and the envelope's row count ride out's checkpoint
+    val cp = ScalePolicy.checkpoint(e.groupBy(col("src"))
+        .agg(sum(col("w")).as("outw"), count(lit(1)).as("n_nbrs")),
+      count(when(isSeed(col("src")), 1)).as("seeds"))
+    val (out, nSeeds) = (cp.frame, cp.long("seeds"))
+    require(nSeeds > 0, "seed set (part_key % 20 == 0) is empty")
     val edges = e.join(out.select(col("src"), col("outw")), "src")
       .localCheckpoint(true)
-    val isSeed = (c: org.apache.spark.sql.Column) => c % 20 === 0
-    val nSeeds = out.filter(isSeed(col("src"))).count()
-    require(nSeeds > 0, "seed set (part_key % 20 == 0) is empty")
     var pr = out.select(col("src").as("node"),
       when(isSeed(col("src")), lit(scale / nSeeds)).otherwise(lit(0L))
         .as("pr")).localCheckpoint(true)
     val base = (15L * scale) / (100L * nSeeds)
     // node-sized rank vector broadcast per round while it fits — the
     // [[pagerank]] round-16 rationale (edge table never exchanged)
-    val nodeHint = hintIf(out.count() <= nodeBroadcastRows)
+    val nodeHint = ScalePolicy.nodeFrames.hint(cp.rows)
     // lazy rounds — the [[pagerank]] round-15 rationale
     for (_ <- 1 to rounds) {
       val prh = nodeHint(pr)
@@ -425,9 +399,9 @@ object Graph {
     val e0 = directed(copurchaseEdges(lineitem))
       .select(col("src"), col("dst"))
     val nodes = e0.select(col("src").as("node")).distinct()
-    val e = e0.unionAll(
-        nodes.select(col("node").as("src"), col("node").as("dst")))
-      .localCheckpoint(true)
+    val cp = ScalePolicy.checkpoint(e0.unionAll(
+        nodes.select(col("node").as("src"), col("node").as("dst"))))
+    val e = cp.frame
     // init from the CHECKPOINTED frame (self-loops make every node a
     // src), so the lazy chain's final action never re-derives e0
     var lbl = e.select(col("src").as("node")).distinct()
@@ -435,7 +409,7 @@ object Graph {
     // the label frame is NODE-sized (≤ the checkpointed edge+self-loop
     // count): broadcast it per round while it fits, so the edge table
     // is never exchanged — the [[pagerank]] round-16 rationale
-    val nodeHint = hintIf(e.count() <= nodeBroadcastRows)
+    val nodeHint = ScalePolicy.nodeFrames.hint(cp.rows)
     for (_ <- 1 to rounds) {
       val lh = nodeHint(lbl)
       lbl = e.join(lh, e("src") === lh("node"))
@@ -537,11 +511,9 @@ object Graph {
     // observed metric — the [[Dedup.dupClusters]] one-action-per-round
     // shape; null sum ⟺ empty edge set
     def checkpointWithSum(e: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val cp = e
-        .observe(obs, coalesce(sum(col("a") + col("b")), lit(0L)).as("s"))
-        .localCheckpoint(true)
-      (cp, obs.get("s").asInstanceOf[Long])
+      val cp = ScalePolicy.checkpoint(e,
+        coalesce(sum(col("a") + col("b")), lit(0L)).as("s"))
+      (cp.frame, cp.long("s"))
     }
 
     val (und, undSum) = checkpointWithSum(pairs
@@ -662,7 +634,7 @@ object Graph {
     // directly on the previous round's checkpointed partitions — with
     // no exchange anywhere in the round, the width set here is the
     // width of EVERY round.
-    val e0 = graft.Tables.spread(
+    val e0 = ScalePolicy.spread(
         directed(copurchaseEdges(lineitem)).select(col("src"), col("dst")),
         col("src"))
       .localCheckpoint(true)
@@ -672,12 +644,10 @@ object Graph {
     val (eCnt, nCnt) = (scalars.getLong(0), scalars.getLong(1))
     val k = if (nCnt == 0L) 0L else 7L * (eCnt / nCnt) / 10L
 
-    // the surviving-node frame is catalog-sized; when it provably fits
-    // the broadcast envelope (~8 B/node), pin the exchange-free
-    // broadcast semi-joins instead of leaving SMJ-vs-BHJ to AQE's
-    // runtime estimate — the measured difference at sf0.1 is the edge
-    // frame re-exchanging twice per round. Results identical either way.
-    val hint = hintIf(nCnt <= nodeBroadcastRows)
+    // the surviving-node frame is catalog-sized: while it fits, the
+    // semi-joins broadcast it (at sf0.1 the edge frame otherwise
+    // re-exchanged twice per round)
+    val hint = ScalePolicy.nodeFrames.hint(nCnt)
     def peel(e: DataFrame): (DataFrame, Long) = {
       // ONE keep-set frame joined twice through explicit conditions
       // (round 16 — was two differently-aliased projections of it):
@@ -687,14 +657,11 @@ object Graph {
       // round-trip and one aggregation job saved per peel round).
       val keep = hint(e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src").as("node")))
-      val obs = org.apache.spark.sql.Observation()
-      val next = e
+      val next = ScalePolicy.checkpoint(e
         .join(keep, e("src") === keep("node"), "left_semi")
         .join(keep, e("dst") === keep("node"), "left_semi")
-        .select(col("src"), col("dst"))
-        .observe(obs, count(lit(1)).as("m"))
-        .localCheckpoint(true)
-      (next, obs.get("m").asInstanceOf[Long])
+        .select(col("src"), col("dst")))
+      (next.frame, next.rows)
     }
 
     var e = e0

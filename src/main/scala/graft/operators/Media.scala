@@ -8,7 +8,6 @@ import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, Audi
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
 
 import graft.Tables
 
@@ -330,7 +329,7 @@ object Media {
     // partitions with no exchange in between, so an unsplittable
     // one-row-group doc scan would run every decode on one core
     // (measured: m07/m08/m09's two ~1.2 s single-task jobs each).
-    graft.Tables.spread(docs.select(col("doc_id")), col("doc_id"))
+    graft.ScalePolicy.spread(docs.select(col("doc_id")), col("doc_id"))
       .as[Long].mapPartitions { ids =>
       ids.map { id =>
         val kind = kinds((id % 3).toInt)
@@ -395,14 +394,6 @@ object Media {
       col("media_id"), col("kind"),
       substring(col("content"), 1, maxBytes).as("content"),
       least(length(col("content")), lit(maxBytes)).as("n_bytes"))
-
-  /** Fixed-dim feature vector from raw payload bytes: seeded xxhash64
-    * per dimension, scaled to [-1, 1] — the cheap opaque-payload
-    * fingerprint for media whose codec is unavailable. For decodable
-    * images use [[Codec.blockMeans]] (real pixel features, m04). */
-  def featureVector(content: Column, dim: Int = 64): Column =
-    transform(sequence(lit(1), lit(dim)), i =>
-      (xxhash64(content, i) / lit(Long.MaxValue.toDouble)).cast(DoubleType))
 
   /** REAL pixel-space resize: decode the PNG, nearest-neighbor resample
     * to `targetW`×`targetH`, re-encode. The sample mapping is the

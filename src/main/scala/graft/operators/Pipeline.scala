@@ -698,8 +698,9 @@ object Pipeline {
     // joins (a measured 0.77 s single-task stage); identity at scale.
     // The narrowness probe reads the DOCS SCAN, not the derived join —
     // probing `train` itself would materialize the whole decontam
-    // chain under AQE (spreadIfScanNarrow doc).
-    val scored = graft.Tables.spreadIfScanNarrow(docs, train, col("doc_id")).select(
+    // chain under AQE (ScalePolicy.spreadIfNarrow doc).
+    val scored = graft.ScalePolicy.spreadIfNarrow(train, col("doc_id"),
+        scan = Some(docs)).select(
       col("doc_id"),
       TextAnalysis.tokenCount(col("text")).cast("long").as("n_tok"),
       TextAnalysis.qualityScore(col("text")).as("q"))

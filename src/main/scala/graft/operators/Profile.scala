@@ -56,22 +56,6 @@ object Profile {
       .orderBy(col("column_name"))
   }
 
-  /** Zero-extra-pass QC: attach row/null counters to a frame so they
-    * are collected DURING whatever action the caller already runs (the
-    * write, the aggregate…) — `Observation` piggybacks on the plan's
-    * existing pass instead of re-scanning, which at 100 TB is the
-    * difference between free QC and a second corpus read. Only
-    * aggregates that fold into one pass belong here (counts, sums,
-    * min/max — no distincts); read `obs.get` after the action
-    * completes. */
-  def observed(df: DataFrame, cols: Seq[String])
-      : (DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation()
-    val metrics = count(lit(1)).as("n_rows") +:
-      cols.map(c => (count(lit(1)) - count(col(c))).as(s"n_nulls_$c"))
-    (df.observe(obs, metrics.head, metrics.tail: _*), obs)
-  }
-
   // ---------------------------------------------------------------------------
   // p03 — the documents-table profile, oracle-checked column for column.
   // ---------------------------------------------------------------------------

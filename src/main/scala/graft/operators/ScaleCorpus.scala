@@ -175,14 +175,15 @@ object ScaleCorpus {
   def write(baseDir: String, outDir: String, replicas: Int,
             spark: org.apache.spark.sql.SparkSession,
             tightPct: Int = 0): Unit = {
+    val width = graft.ScalePolicy.width(spark)
     documents(graft.Tables.documents(spark, baseDir), replicas)
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      .repartition(width)
       .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
     embeddings(graft.Tables.embeddings(spark, baseDir), replicas, tightPct)
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      .repartition(width)
       .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
     events(graft.Tables.events(spark, baseDir), replicas)
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      .repartition(width)
       .write.mode("overwrite").parquet(s"$outDir/events.parquet")
   }
 }

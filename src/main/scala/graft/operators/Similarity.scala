@@ -48,7 +48,7 @@ object Similarity {
     // is the input's split count — one task on a single-row-group file,
     // i.e. the whole quadratic stage on one core (measured: s13's one
     // 3.9 s job). The shuffle moves only the narrow query projection.
-    val q = graft.Tables.spread(
+    val q = graft.ScalePolicy.spread(
       queries.select(col("vec_id").as("query_id"),
         VectorOps.asDouble(col("embedding")).as("qv"))
         .withColumn("qn", VectorOps.norm(col("qv"))),
@@ -451,7 +451,7 @@ object Similarity {
       // dedup aggregate reuses the width-pinned exchange instead of
       // minting its own narrow one first (one exchange of the pair
       // list, was two back-to-back).
-      val idPairs = graft.Tables.spread(
+      val idPairs = graft.ScalePolicy.spread(
         (0 until quantizers).map { qi =>
           val (cells, centroids) =
             ivfIndex(corpus, nlist, VectorOps.orMixConstants(qi))
@@ -471,12 +471,10 @@ object Similarity {
       // measured to exhaust the host's spill disk at 50k×50k q=2.
       // Past the bound, fall back to keyed shuffles of the (narrow)
       // pair list against corpus-sized vector tables.
-      val smallSide = 200000L
-      def vec(df: DataFrame, n: Long) =
-        if (n <= smallSide) broadcast(df) else df
+      val vec = graft.ScalePolicy.vectorFrames
       rankCandidates(
-        idPairs.join(vec(q, nQ0), Seq("query_id"))
-          .join(vec(c0n, nCorpus0), Seq("neighbor_id")), k)
+        idPairs.join(vec.hint(nQ0)(q), Seq("query_id"))
+          .join(vec.hint(nCorpus0)(c0n), Seq("neighbor_id")), k)
     }
   }
 
@@ -501,7 +499,7 @@ object Similarity {
     // nothing for AQE to coalesce), and the BHJ candidate join + rank
     // above inherit the width. Also strictly fewer exchanged bytes:
     // nQ query rows move instead of nQ·nprobe probe rows.
-    graft.Tables.spread(q, col("query_id"))
+    graft.ScalePolicy.spread(q, col("query_id"))
       .crossJoin(broadcast(centroids))
       .withColumn("d2p", round(
         VectorOps.dot(col("qv"), col("centroid")) * lit(-2.0) + col("cn2"), 9))
@@ -759,9 +757,10 @@ object Similarity {
     val q = queries.select(col("vec_id").as("query_id"),
       VectorOps.asDouble(col("embedding")).as("qv"))
       .withColumn("qn", VectorOps.norm(col("qv")))
-    val probed = probeCells(q, centroids, nprobe)
-      // materialized once: consumed by the cell-set pull AND the join
-      .localCheckpoint(true)
+    // materialized once: consumed by the cell-set pull AND the join;
+    // its row count sizes the broadcast below
+    val probedCp = graft.ScalePolicy.checkpoint(probeCells(q, centroids, nprobe))
+    val probed = probedCp.frame
     val probedCells = probed.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).sorted // bounded by nlist
     val pruned = cells.filter(col("cell")
@@ -783,14 +782,9 @@ object Similarity {
       s"ivfKnnFromIndex($indexDir, nprobe=$nprobe — EXACT bound from " +
         "stored cell sizes; shrink nprobe/the query batch, or split " +
         "the batch")
-    // broadcast the probe frame ONLY when it provably fits: it carries
-    // the query VECTORS (|queries|·nprobe rows × dim doubles), so a
-    // million-query batch would OOM the driver under an unconditional
-    // hint (the kCore size-conditional precedent) — past the envelope
-    // the join falls back to a keyed shuffle of the pruned cells
-    val probeRows = probed.count() // cheap: checkpointed above
-    val hint: DataFrame => DataFrame =
-      if (probeRows <= 200000L) broadcast else identity
+    // the probe frame carries query VECTORS: broadcast only while it
+    // fits, else a keyed shuffle of the pruned cells
+    val hint = graft.ScalePolicy.vectorFrames.hint(probedCp.rows)
     rankCandidates(hint(probed).join(pruned, Seq("cell")), k)
   }
 
@@ -2660,7 +2654,7 @@ object Similarity {
     // Spread BELOW the distinct (round 16): the query_id hash width
     // satisfies the dedup's clustering requirement, so one exchange
     // serves both (the ivfKnn idPairs rationale).
-    val pool = graft.Tables.spread(
+    val pool = graft.ScalePolicy.spread(
       directed.select(col("query_id"), col("neighbor_id"))
         .unionAll(directed.select(col("neighbor_id").as("query_id"),
           col("query_id").as("neighbor_id"))),

@@ -59,7 +59,7 @@ object StarQueries {
   def q01PricingSummary(spark: SparkSession, dir: String): DataFrame =
     // layout-adaptive spread (round 15): the partial aggregate pipelines
     // on the scan — one task on a one-row-group file; identity at scale
-    Tables.spreadIfNarrow(Tables.lineitem(spark, dir), col("l_orderkey"))
+    graft.ScalePolicy.spreadIfNarrow(Tables.lineitem(spark, dir), col("l_orderkey"))
       .filter(col("l_quantity").isNotNull && col("l_extendedprice").isNotNull)
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
@@ -92,7 +92,7 @@ object StarQueries {
   def q02PartTypeRevenue(spark: SparkSession, dir: String): DataFrame =
     // layout-adaptive spread — the q01 rationale (broadcast join +
     // partial agg pipeline on the scan)
-    Tables.spreadIfNarrow(Tables.lineitem(spark, dir), col("l_orderkey"))
+    graft.ScalePolicy.spreadIfNarrow(Tables.lineitem(spark, dir), col("l_orderkey"))
       .join(broadcast(Tables.part(spark, dir)), col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_type"))
       .agg(
@@ -249,7 +249,7 @@ object StarQueries {
   def q07FlagPriceStats(spark: SparkSession, dir: String): DataFrame = {
     // layout-adaptive spread — the q01 rationale (percentile buffers
     // collect per-group values map-side)
-    Tables.spreadIfNarrow(Tables.lineitem(spark, dir), col("l_orderkey"))
+    graft.ScalePolicy.spreadIfNarrow(Tables.lineitem(spark, dir), col("l_orderkey"))
       .createOrReplaceTempView("graft_q07_lineitem")
     spark.sql(
       s"""SELECT l_returnflag,
@@ -321,7 +321,7 @@ object StarQueries {
   def q09OrderWidthPerf(spark: SparkSession, dir: String): DataFrame = {
     // layout-adaptive spread on the GROUPING key — the groupBy reuses
     // this exchange (guide §2.4), so no shuffle is added even locally
-    val widths = Tables.spreadIfNarrow(Tables.lineitem(spark, dir),
+    val widths = graft.ScalePolicy.spreadIfNarrow(Tables.lineitem(spark, dir),
         col("l_orderkey"))
       .groupBy(col("l_orderkey"))
       .agg(count(lit(1)).as("line_count"),
@@ -703,7 +703,7 @@ object StarQueries {
     // layout-adaptive spread on the fact-fact JOIN key: the join's own
     // exchange subsumes it, and the post-join broadcast chain + partial
     // aggregate inherit the width
-    Tables.spreadIfNarrow(Tables.lineitem(spark, dir), col("l_orderkey"))
+    graft.ScalePolicy.spreadIfNarrow(Tables.lineitem(spark, dir), col("l_orderkey"))
       .join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(Tables.customer(spark, dir)), col("o_custkey") === col("c_custkey"))
       .join(broadcast(Tables.nation(spark, dir)), col("c_nationkey") === col("n_nationkey"))
@@ -948,7 +948,7 @@ object StarQueries {
     val x = col("l_quantity"); val y = col("l_extendedprice")
     // layout-adaptive spread — the q01 rationale; the six decimal
     // moment sums are exact (order-proof), so width changes nothing
-    Tables.spreadIfNarrow(Tables.lineitem(spark, dir), col("l_orderkey"))
+    graft.ScalePolicy.spreadIfNarrow(Tables.lineitem(spark, dir), col("l_orderkey"))
       .groupBy(col("l_returnflag"))
       .agg(
         count(lit(1)).as("n"),

@@ -650,7 +650,7 @@ object TextAnalysis {
     // layout-adaptive spread (round 15): three regexp_count passes + a
     // triple regexp_replace per row with NO shuffle anywhere — on a
     // one-row-group scan the whole query ran on one core
-    Tables.spreadIfNarrow(Tables.documents(spark, dir), col("doc_id"))
+    graft.ScalePolicy.spreadIfNarrow(Tables.documents(spark, dir), col("doc_id"))
       .select(col("doc_id"), augmented.as("aug"))
       .select(
         col("doc_id"),

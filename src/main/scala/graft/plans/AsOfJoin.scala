@@ -66,7 +66,7 @@ object AsOfJoin {
     /** Hard cap on the collected right side — well above any dimension
       * table, far below a driver-OOMing fact table. Misuse fails with a
       * diagnostic naming the contract instead of an opaque OOM. */
-    val maxBroadcastRows: Int = 10_000_000
+    val maxRightRows: Int = 10_000_000
   }
 
   final case class BroadcastAsOfJoinExec(keyName: String, tsName: String,
@@ -93,10 +93,10 @@ object AsOfJoin {
       // executeTake bounds DRIVER memory during the pull itself (a plain
       // executeCollect would OOM before any guard could fire); within
       // the limit the taken rows ARE the full result.
-      val collected = right.executeTake(BroadcastAsOfJoinExec.maxBroadcastRows + 1)
-      require(collected.length <= BroadcastAsOfJoinExec.maxBroadcastRows,
+      val collected = right.executeTake(BroadcastAsOfJoinExec.maxRightRows + 1)
+      require(collected.length <= BroadcastAsOfJoinExec.maxRightRows,
         s"BroadcastAsOfJoinExec right side exceeds " +
-          s"${BroadcastAsOfJoinExec.maxBroadcastRows} rows: this operator " +
+          s"${BroadcastAsOfJoinExec.maxRightRows} rows: this operator " +
           "broadcasts its right side and requires a dimension-sized state " +
           "table; use graft.operators.AsOf.join (shuffle-based) for a " +
           "fact-sized right side")

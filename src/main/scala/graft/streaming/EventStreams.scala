@@ -94,23 +94,6 @@ object EventStreams {
         col("event_count"), col("total_value"))
 
   // ---------------------------------------------------------------------------
-  // Sliding windows (streaming v04)
-  // ---------------------------------------------------------------------------
-
-  /** 10-minute windows sliding every 5 — each event contributes to two
-    * windows, state keyed per window instance. */
-  def slidingCounts(events: DataFrame, lateness: String = defaultLateness): DataFrame =
-    events
-      .withWatermark("ts", lateness)
-      .groupBy(window(col("ts"), "10 minutes", "5 minutes"))
-      .agg(
-        count(lit(1)).as("event_count"),
-        graft.functions.DecimalSums.dsum(col("value")).as("total_value"))
-      .select(
-        date_format(col("window.start"), tsFmt).as("window_start"),
-        col("event_count"), col("total_value"))
-
-  // ---------------------------------------------------------------------------
   // Session windows (streaming v02)
   // ---------------------------------------------------------------------------
 
@@ -148,23 +131,6 @@ object EventStreams {
       .withWatermark("ts", lateness)
       .dropDuplicatesWithinWatermark("user_id", "event_type", "minute")
       .select(col("user_id"), col("event_type"), col("minute"))
-
-  // ---------------------------------------------------------------------------
-  // Stream-static banded range join (streaming v11)
-  // ---------------------------------------------------------------------------
-
-  /** Tag each streaming event with the static interval(s) containing
-    * it — the streaming face of [[graft.operators.RangeJoin.banded]]
-    * (same band algebra, so each matching (event, interval) pair
-    * emits exactly once). Stream-static joins are STATELESS: the
-    * static side is re-planned per micro-batch and no watermark state
-    * accrues, so append mode works as-is. The banded rewrite matters
-    * here doubly — a per-batch nested loop over a large interval table
-    * would run once per micro-batch, forever. */
-  def inWindows(events: DataFrame, intervals: DataFrame,
-                bandMicros: Long = 3600L * 1000000L): DataFrame =
-    graft.operators.RangeJoin.banded(events, col("ts"),
-      intervals, col("w_start"), col("w_end"), bandMicros)
 
   // ---------------------------------------------------------------------------
   // Stream-stream interval join (streaming v07)

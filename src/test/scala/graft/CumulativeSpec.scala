@@ -13,6 +13,11 @@ class CumulativeSpec extends SparkSpec {
     .select($"id",
       when($"id" % 11 === 0, lit(null)).otherwise($"id" % 37).as("v"))
 
+  // the operators range-partition at the session's shuffle width, read
+  // (and materialized) while the result frame is built
+  private def atWidth[A](p: Int)(body: => A): A =
+    GraftSession.withConf(spark)("spark.sql.shuffle.partitions" -> p.toString)(body)
+
   test("two-phase cumsum + rank equals the one-phase unpartitioned window") {
     val df = fixture
     val sort = Seq($"v".desc_nulls_last, $"id")
@@ -22,8 +27,8 @@ class CumulativeSpec extends SparkSpec {
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .withColumn("rk", row_number().over(w))
       .select($"id", $"cum", $"rk")
-    val twoPhase = Cumulative
-      .withCumsumAndRank(df, sort, $"v", "cum", "rk", numPartitions = 7)
+    val twoPhase = atWidth(7)(Cumulative
+      .withCumsumAndRank(df, sort, $"v", "cum", "rk"))
       .select($"id", $"cum", $"rk")
     assert(twoPhase.exceptAll(onePhase).count() == 0)
     assert(onePhase.exceptAll(twoPhase).count() == 0)
@@ -35,9 +40,9 @@ class CumulativeSpec extends SparkSpec {
     // it must not see a spurious zero
     val df = spark.range(100)
       .select($"id", when($"id" < 40, lit(null)).otherwise($"id").as("v"))
-    val out = Cumulative
+    val out = atWidth(6)(Cumulative
       .withCumsumAndRank(df, Seq($"v".asc_nulls_first, $"id"), $"v",
-        "cum", "rk", numPartitions = 6)
+        "cum", "rk"))
       .orderBy($"rk")
       .select($"cum").as[Option[Long]].collect()
     assert(out.take(40).forall(_.isEmpty), "cum over an all-null prefix must be null")
@@ -48,9 +53,9 @@ class CumulativeSpec extends SparkSpec {
   test("totName column is the exact global sum") {
     val df = fixture
     val expected = df.agg(sum($"v")).as[Long].head()
-    val tot = Cumulative
+    val tot = atWidth(7)(Cumulative
       .withCumsumAndRank(df, Seq($"v".desc_nulls_last, $"id"), $"v",
-        "cum", "rk", totName = "tot", numPartitions = 7)
+        "cum", "rk", totName = "tot"))
       .select($"tot").distinct().as[Long].collect()
     assert(tot.toSeq == Seq(expected))
   }
@@ -58,11 +63,11 @@ class CumulativeSpec extends SparkSpec {
   test("cumsum-only form matches the ranked form and computes no row_number") {
     val df = fixture
     val sort = Seq($"v".desc_nulls_last, $"id")
-    val ranked = Cumulative
-      .withCumsumAndRank(df, sort, $"v", "cum", "rk", numPartitions = 7)
+    val ranked = atWidth(7)(Cumulative
+      .withCumsumAndRank(df, sort, $"v", "cum", "rk"))
       .select($"id", $"cum")
-    val cumOnly = Cumulative
-      .withCumsumAndRank(df, sort, $"v", "cum", numPartitions = 7)
+    val cumOnly = atWidth(7)(Cumulative
+      .withCumsumAndRank(df, sort, $"v", "cum"))
     assert(cumOnly.columns.toSeq == Seq("id", "v", "cum"))
     assert(cumOnly.select($"id", $"cum").exceptAll(ranked).count() == 0)
     // the saved work is real: no RowNumber window function in the plan
@@ -90,9 +95,8 @@ class CumulativeSpec extends SparkSpec {
       .withColumn("rk", row_number().over(w).cast("long"))
       .withColumn("n", count(lit(1)).over(Window.partitionBy($"g")))
       .select($"id", $"rk", $"n")
-    val twoPhase = Cumulative
-      .withGroupedRank(df, Seq($"g"), Seq($"k", $"id"), "rk", "n",
-        numPartitions = 7)
+    val twoPhase = atWidth(7)(Cumulative
+      .withGroupedRank(df, Seq($"g"), Seq($"k", $"id"), "rk", "n"))
       .select($"id", $"rk", $"n")
     assert(twoPhase.exceptAll(onePhase).count() == 0)
     assert(onePhase.exceptAll(twoPhase).count() == 0)

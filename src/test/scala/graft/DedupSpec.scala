@@ -26,14 +26,14 @@ class DedupSpec extends SparkSpec {
 
   test("shingleArray: n-grams are distinct and positional") {
     val got = spark.range(1)
-      .select(Dedup.shingleArray(lit("a b c d"), 3).as("s"))
+      .select(Dedup.shingleTokens(split(lit("a b c d"), " "), 3).as("s"))
       .as[Seq[String]].head()
     assert(got == Seq("a b c", "b c d"))
   }
 
   test("shingleArray: doc shorter than n falls back to whole text") {
     val got = spark.range(1)
-      .select(Dedup.shingleArray(lit("a b"), 3).as("s"))
+      .select(Dedup.shingleTokens(split(lit("a b"), " "), 3).as("s"))
       .as[Seq[String]].head()
     assert(got == Seq("a b"))
   }

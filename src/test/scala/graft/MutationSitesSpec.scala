@@ -4,21 +4,29 @@ import java.io.File
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source-scan guard for query-scoped state: session conf overrides go
-  * through [[GraftSession.withConf]] and scratch dirs through
-  * `Staging.scratch`, so a new `conf.set`/`conf.unset` or
-  * `createTempDirectory` site in `src/main` fails here. The allowed
-  * sites, per file:
+/** Source-scan guard for query-scoped state and scale decisions:
+  * session conf overrides go through [[GraftSession.withConf]], scratch
+  * dirs through `Staging.scratch`, and width and broadcast decisions
+  * through [[ScalePolicy]], so a new `conf.set`/`conf.unset`,
+  * `createTempDirectory`, size-conditional broadcast or shuffle-width
+  * read in `src/main` fails here. The allowed sites, per file:
   *  - `GraftSession.scala`: `withConf`'s set, restore and unset;
   *  - `Tables.scala`: `events`' lazy-scan `nanosAsLong` set (it cannot
   *    be restored: the scan reads the conf at execution time);
   *  - `Staging.scala`: `scratch`'s temp dir;
   *  - `EventStreams.scala`: the replay harness's tmpfs checkpoint;
-  *  - `Bench.scala`: the IO anchor's fsync dir. */
+  *  - `Bench.scala`: the IO anchor's fsync dir;
+  *  - `ScalePolicy.scala` (width reads and broadcast envelopes) and
+  *    `GraftSession.scala` (width reads): any number. Setting the width
+  *    through `withConf` is a write, not a read, and is not matched. */
 class MutationSitesSpec extends AnyFunSuite {
 
   private val confMutation = raw"\bconf\.(set|unset)\(|\bsetConf(String)?\(".r
   private val tempDir = raw"\bcreateTempDirectory\b".r
+  private val sizeBroadcast =
+    raw"\bhintIf\b|\bbroadcast(\([^)]*\))?\s+else\b|\belse\s+broadcast\b|\w*BroadcastRows\b".r
+  private val widthRead =
+    raw"""\bnumShufflePartitions\b|\bconf\.get\(\s*"spark\.sql\.shuffle\.partitions"""".r
 
   private val allowedConf = Map(
     "graft/GraftSession.scala" -> 3, "graft/Tables.scala" -> 1)
@@ -26,6 +34,10 @@ class MutationSitesSpec extends AnyFunSuite {
     "graft/streaming/Staging.scala" -> 1,
     "graft/streaming/EventStreams.scala" -> 1,
     "graft/Bench.scala" -> 1)
+  private val allowedBroadcast = Map("graft/ScalePolicy.scala" -> Int.MaxValue)
+  private val allowedWidth = Map(
+    "graft/ScalePolicy.scala" -> Int.MaxValue,
+    "graft/GraftSession.scala" -> Int.MaxValue)
 
   /** Code lines of `text` matching `pattern`, comments left out. */
   private def sites(text: String, pattern: scala.util.matching.Regex): Int =
@@ -69,6 +81,15 @@ class MutationSitesSpec extends AnyFunSuite {
       s"createTempDirectory outside the owners — use Staging.scratch: $extra")
   }
 
+  test("width and broadcast decisions are made only in ScalePolicy") {
+    val broadcasts = excess(sizeBroadcast, allowedBroadcast)
+    assert(broadcasts.isEmpty,
+      s"size-conditional broadcast outside ScalePolicy — use its envelopes: $broadcasts")
+    val widths = excess(widthRead, allowedWidth)
+    assert(widths.isEmpty,
+      s"shuffle-width read outside ScalePolicy — use ScalePolicy.width: $widths")
+  }
+
   test("the scan sees code sites and skips comments") {
     val src =
       """/** `spark.conf.set` in scaladoc
@@ -79,5 +100,18 @@ class MutationSitesSpec extends AnyFunSuite {
         |val d = java.nio.file.Files.createTempDirectory("x")""".stripMargin
     assert(sites(src, confMutation) == 3)
     assert(sites(src, tempDir) == 1)
+    val scale =
+      """/** hintIf(n <= nodeBroadcastRows) in scaladoc */
+        |// if (small) broadcast else identity
+        |private def hintIf(small: Boolean) = if (small) broadcast else identity
+        |val v = if (n <= cap) broadcast(df) else df
+        |val h = if (big) identity else broadcast
+        |private val edgeBroadcastRows = 4000000L
+        |val w = spark.sessionState.conf.numShufflePartitions
+        |val p = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+        |GraftSession.withConf(spark)("spark.sql.shuffle.partitions" -> "8")(q)
+        |val b = broadcast(offs) // broadcast else, unconditionally""".stripMargin
+    assert(sites(scale, sizeBroadcast) == 5)
+    assert(sites(scale, widthRead) == 2)
   }
 }

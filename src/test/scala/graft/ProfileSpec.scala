@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.functions._
+
 import graft.operators.Profile
 
 class ProfileSpec extends SparkSpec {
@@ -24,7 +26,10 @@ class ProfileSpec extends SparkSpec {
   test("observed metrics are collected by the caller's own action") {
     val df = Seq((1, Some("a")), (2, None), (3, Some("c")))
       .toDF("id", "s")
-    val (tagged, obs) = Profile.observed(df, Seq("id", "s"))
+    val obs = org.apache.spark.sql.Observation()
+    val tagged = df.observe(obs, count(lit(1)).as("n_rows"),
+      (count(lit(1)) - count($"id")).as("n_nulls_id"),
+      (count(lit(1)) - count($"s")).as("n_nulls_s"))
     tagged.write.format("noop").mode("overwrite").save() // the only pass
     val m = obs.get
     assert(m("n_rows") == 3L && m("n_nulls_id") == 0L && m("n_nulls_s") == 1L)

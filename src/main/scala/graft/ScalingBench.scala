@@ -436,7 +436,7 @@ object ScalingBench {
     def drive(name: String, srcDir: String, mk: DataFrame => DataFrame,
               ckpt: String): (Double, Long, Long, Long, Long) = {
       val t0 = System.nanoTime()
-      val q = mk(EventStreams.readEvents(spark, srcDir, maxFilesPerTrigger = 1))
+      val q = mk(EventStreams.readEvents(spark, srcDir))
         .writeStream.format("noop")
         .option("checkpointLocation", s"$srcDir/$ckpt")
         .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
@@ -789,9 +789,9 @@ object ScalingBench {
         Dedup.d13SemanticDedupLshChunked(12) _),
       ("d14_semantic_ivf", true, Dedup.d14SemanticDedupIvf _),
       ("t13_decontam_uncapped", false,
-        (s, d) => TextAnalysis.decontaminate(Tables.documents(s, d), 5)),
+        (s, d) => TextAnalysis.decontaminate(Tables.documents(s, d))),
       ("t15_decontam_capped", true,
-        (s, d) => TextAnalysis.decontaminate(Tables.documents(s, d), 5,
+        (s, d) => TextAnalysis.decontaminate(Tables.documents(s, d),
           maxShingleFreq = Some(8))),
       ("v18_streamed_ingest_dedup", true, IngestDedup.v18StreamedIngestDedup _),
       ("v30_streamed_semantic_dedup", true, IngestDedup.v30StreamedSemanticDedup _),

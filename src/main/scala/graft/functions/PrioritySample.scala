@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Aggregator
 
 /** Deterministic bounded per-group sampling as a typed `Aggregator`
   * (the UDAF surface of SURVEY.md §2.2) — keep the k items with the
-  * smallest md5(salt ++ item) priority. Hash-priority sampling is
+  * smallest md5(item) priority. Hash-priority sampling is
   * the distributed form of reservoir sampling: commutative/associative
   * merges (any partitioning, any order → same result), deterministic
   * across reruns, and uniform over distinct items. The training-data
@@ -30,16 +30,16 @@ object PrioritySample {
 
   type Buf = mutable.PriorityQueue[(String, String)]
 
-  /** Hex md5 of salt ++ item — the [[graft.operators.Pipeline.md5Bucket]]
-    * hash-family discipline; DuckDB twin: `md5(salt || item)`. */
-  private[graft] def priority(salt: String, s: String): String = {
+  /** Hex md5 of the item — the [[graft.operators.Pipeline.md5Bucket]]
+    * hash-family discipline; DuckDB twin: `md5(item)`. */
+  private[graft] def priority(s: String): String = {
     val d = java.security.MessageDigest.getInstance("MD5")
-      .digest((salt + s).getBytes("UTF-8"))
+      .digest(s.getBytes("UTF-8"))
     d.map(b => f"$b%02x").mkString
   }
 
-  /** Sample k strings per group, priority-ordered by salted md5. */
-  def topK(k: Int, salt: String = ""): Aggregator[String, Buf, Seq[String]] =
+  /** Sample k strings per group, priority-ordered by md5. */
+  def topK(k: Int): Aggregator[String, Buf, Seq[String]] =
     new Aggregator[String, Buf, Seq[String]] {
 
       // max-heap on (priority, item): the ROOT is the worst kept entry
@@ -55,7 +55,7 @@ object PrioritySample {
       }
 
       override def reduce(b: Buf, s: String): Buf =
-        offer(b, priority(salt, s), s)
+        offer(b, priority(s), s)
 
       override def merge(a: Buf, b: Buf): Buf = {
         b.foreach { case (p, v) => offer(a, p, v) }

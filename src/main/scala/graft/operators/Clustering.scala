@@ -64,17 +64,16 @@ object Clustering {
         lit(c).as("c"))
     }: _*).getField("c")
 
-  /** Run the fit and return the final per-vector assignment
-    * (vec_id, cell). */
-  def kmeansAssign(emb: DataFrame, k: Int = numCells,
-                   rounds: Int = numRounds): DataFrame =
-    kmeansFit(emb, k, rounds)._2
+  /** Run the [[numRounds]]-round fit and return the final per-vector
+    * assignment (vec_id, cell). */
+  def kmeansAssign(emb: DataFrame, k: Int = numCells): DataFrame =
+    kmeansFit(emb, k)._2
 
   /** The fit with its final centroids exposed (assignment is argmin
     * against exactly THESE — the self-consistency the spec pins). */
-  def kmeansFit(emb: DataFrame, k: Int = numCells, rounds: Int = numRounds)
+  def kmeansFit(emb: DataFrame, k: Int = numCells)
       : (Seq[(Int, Seq[Double])], DataFrame) =
-    kmeansFitOn(checkpointCorpus(emb), k, rounds)
+    kmeansFitOn(checkpointCorpus(emb), k)
 
   /** The cast corpus, materialized once — the multi-consumer frame
     * every fit round scans. Shared by [[c05ElbowCurve]] so the k-ladder
@@ -88,13 +87,13 @@ object Clustering {
       .localCheckpoint(true)
 
   /** [[kmeansFit]] over an already-materialized (vec_id, v) corpus. */
-  private def kmeansFitOn(e: DataFrame, k: Int, rounds: Int)
+  private def kmeansFitOn(e: DataFrame, k: Int)
       : (Seq[(Int, Seq[Double])], DataFrame) = {
     val D12 = DecimalType(18, 12)
     var cents: Seq[(Int, Seq[Double])] = e.orderBy(col("vec_id")).limit(k)
       .select(col("v")).collect().toSeq
       .zipWithIndex.map { case (r, i) => (i, r.getSeq[Double](0).toSeq) }
-    for (_ <- 1 to rounds) {
+    for (_ <- 1 to numRounds) {
       val means = e
         .withColumn("cell", assignCell(col("v"), cents))
         .select(col("cell"), posexplode(col("v")).as(Seq("d", "x")))
@@ -344,7 +343,7 @@ object Clustering {
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     val rows = try elbowKs.map { k =>
       Future {
-        val (cents, assigned) = kmeansFitOn(e, k, numRounds)
+        val (cents, assigned) = kmeansFitOn(e, k)
         val d2own = cents.tail.foldLeft(
           when(col("cell") === cents.head._1, d2Expr(col("v"), cents.head._2))) {
           case (acc, (c, arr)) =>

@@ -44,6 +44,10 @@ object Dedup {
 
   // -- shingling --------------------------------------------------------------
 
+  /** Word n-gram length of every document shingle (the d-family gates
+    * and their oracles all shingle 3-grams). */
+  val shingleN = 3
+
   /** Distinct word n-gram shingles from an ALREADY-MATERIALIZED token
     * array column. The token column must come through a projection
     * boundary (an attribute, not an inline `split(...)`): higher-order
@@ -85,10 +89,10 @@ object Dedup {
     * (birthday-bounded: P ≈ m²/2⁶⁵ over m distinct shingles — ~3e-8
     * even at 10⁹ shingles), and the probabilistic paths re-verify
     * candidates against exact text anyway. */
-  def docShingles(docs: DataFrame, n: Int = 3,
+  def docShingles(docs: DataFrame,
                   maxShingleFreq: Option[Long] = None): DataFrame = {
     val sh = tokenized(docs)
-      .select(col("doc_id"), explode(shingleTokens(col("toks"), n)).as("s"))
+      .select(col("doc_id"), explode(shingleTokens(col("toks"), shingleN)).as("s"))
       .select(col("doc_id"), xxhash64(col("s")).as("shingle"))
     maxShingleFreq match {
       case None => sh
@@ -111,9 +115,9 @@ object Dedup {
     * self-join: one shuffle of the shingle frame instead of two, and
     * the quadratic blow-up is confined to each posting list, which
     * `maxShingleFreq` caps at scale. */
-  def jaccardPairs(docs: DataFrame, threshold: Double, n: Int = 3,
+  def jaccardPairs(docs: DataFrame, threshold: Double,
                    maxShingleFreq: Option[Long] = None): DataFrame =
-    pairIntersections(docs, n, maxShingleFreq)
+    pairIntersections(docs, maxShingleFreq)
       .withColumn("jaccard",
         col("inter").cast(DoubleType) /
           (col("sz_a") + col("sz_b") - col("inter")).cast(DoubleType))
@@ -124,7 +128,7 @@ object Dedup {
     * (id_a < id_b, inter, sz_a, sz_b) for every doc pair sharing at
     * least one surviving shingle. Jaccard, containment, and the
     * incremental variants differ only in how they normalize `inter`. */
-  private def pairIntersections(docs: DataFrame, n: Int,
+  private def pairIntersections(docs: DataFrame,
                                 maxShingleFreq: Option[Long]): DataFrame = {
     // postings grouped ONCE by shingle (round 15): the per-shingle doc
     // list's LENGTH *is* the shingle's document frequency, so the hot-
@@ -136,7 +140,7 @@ object Dedup {
     // quadratic cost of the whole family — it must not run on one
     // core); it is the same single shuffle the groupBy needed anyway.
     val ds = col("ds")
-    val lists = graft.ScalePolicy.spread(docShingles(docs, n, None), col("shingle"))
+    val lists = graft.ScalePolicy.spread(docShingles(docs), col("shingle"))
       .groupBy(col("shingle"))
       .agg(collect_list(col("doc_id")).as("ds"))
       .transform(l => maxShingleFreq.fold(l)(lim => l.filter(size(ds) <= lim)))
@@ -197,9 +201,8 @@ object Dedup {
     * shuffle shape, identical `maxShingleFreq` 100 TB guard — only the
     * normalizer changes, so everything the d02/d08 scale analysis says
     * carries over verbatim. */
-  def containmentPairs(docs: DataFrame, threshold: Double, n: Int = 3,
-                       maxShingleFreq: Option[Long] = None): DataFrame =
-    pairIntersections(docs, n, maxShingleFreq)
+  def containmentPairs(docs: DataFrame, threshold: Double): DataFrame =
+    pairIntersections(docs, None)
       .withColumn("containment",
         col("inter").cast(DoubleType) /
           least(col("sz_a"), col("sz_b")).cast(DoubleType))
@@ -232,8 +235,7 @@ object Dedup {
     * is an order of magnitude more shuffle bytes — measured ~40% of
     * d03's runtime). The groupBy then satisfies its distribution
     * requirement from the repartition: one shuffle total. */
-  def signatures(docs: DataFrame, p: MinHashParams = MinHashParams(),
-                 n: Int = 3): DataFrame = {
+  def signatures(docs: DataFrame, p: MinHashParams = MinHashParams()): DataFrame = {
     val mask = lit(0xFFFFFFFFL)
     // shuffle carries only (doc_id, h) — 16 B/row; h IS docShingles'
     // hashed shingle (64-bit collisions are birthday-bounded and merely
@@ -244,7 +246,7 @@ object Dedup {
     // subexpressions ACROSS aggregate update expressions — referencing
     // attributes keeps it at numBands hash evaluations per row instead
     // of numHashes.
-    val sh = docShingles(docs, n)
+    val sh = docShingles(docs)
       .withColumnRenamed("shingle", "h")
       .repartition(col("doc_id"))
       .select(col("doc_id") +: (0 until p.numBands).map { bnd =>
@@ -309,7 +311,7 @@ object Dedup {
 
   /** Candidate pairs: docs sharing ≥1 LSH band bucket. `maxBucketSize`
     * engages the hot-bucket scale guard ([[capBuckets]]). */
-  def lshCandidates(sig: DataFrame, p: MinHashParams = MinHashParams(),
+  def lshCandidates(sig: DataFrame,
                     maxBucketSize: Option[Long] = None): DataFrame = {
     // materialize before the self-join: the two sides' exchange
     // subtrees are alias-identical but ReuseExchange does not reliably
@@ -317,7 +319,7 @@ object Dedup {
     // executes the signature pipeline once per side (measured: the
     // capped path, which checkpoints internally, beat the uncapped one
     // 1.6s vs 3.4s at sf0.1 before this). 24 B/row.
-    val buckets = capBuckets(bandBuckets(sig, p), maxBucketSize)
+    val buckets = capBuckets(bandBuckets(sig, MinHashParams()), maxBucketSize)
       .localCheckpoint(true)
     buckets.as("a")
       .join(buckets.as("b"),
@@ -334,17 +336,15 @@ object Dedup {
     * stored rows, so per-batch cost is O(batch + candidates), never
     * O(corpus). At 100 TB the store is bucketed by `bucket` so the
     * candidate join is bucket-pruned. */
-  def bucketIndex(docs: DataFrame, p: MinHashParams = MinHashParams(),
-                  n: Int = 3): DataFrame =
-    bandBuckets(signatures(docs, p, n), p)
+  def bucketIndex(docs: DataFrame, p: MinHashParams = MinHashParams()): DataFrame =
+    bandBuckets(signatures(docs, p), p)
 
   /** Exact-Jaccard verification of (id_a, id_b) candidate pairs against
     * document text — public facade over [[verifyCandidates]] for the
     * streaming ingest path (only docs appearing in a candidate are
     * re-shingled). */
-  def verifyPairs(cand: DataFrame, docs: DataFrame, threshold: Double,
-                  n: Int = 3): DataFrame =
-    verifyCandidates(cand, docs, threshold, n)
+  def verifyPairs(cand: DataFrame, docs: DataFrame, threshold: Double): DataFrame =
+    verifyCandidates(cand, docs, threshold)
 
   /** MinHash-LSH near-dup pairs with exact Jaccard verification of the
     * candidates (array_intersect on the collected shingle sets — cheap
@@ -352,20 +352,16 @@ object Dedup {
     * miss probability at j=0.9 is (1-0.9⁴)³² ≈ 3e-15, so the result
     * matches the exact all-pairs oracle. */
   def minhashDedupPairs(docs: DataFrame, threshold: Double,
-                        p: MinHashParams = MinHashParams(), n: Int = 3,
-                        maxBucketSize: Option[Long] = None): DataFrame = {
-    // 128 hashes / 32 bands of 4: P(miss | j=0.9) = (1-0.9^4)^32 ≈ 3e-15.
-
-    verifyCandidates(lshCandidates(signatures(docs, p, n), p, maxBucketSize),
-      docs, threshold, n)
-  }
+                        maxBucketSize: Option[Long] = None): DataFrame =
+    verifyCandidates(lshCandidates(signatures(docs), maxBucketSize),
+      docs, threshold)
 
   /** Exact-Jaccard verification of (id_a, id_b) candidate pairs.
     * Shingle sets are only rebuilt for documents that appear in a
     * candidate pair — semi-join first so the expensive re-shingling is
     * O(candidates), not O(corpus). */
   private def verifyCandidates(cand: DataFrame, docs: DataFrame,
-                               threshold: Double, n: Int): DataFrame = {
+                               threshold: Double): DataFrame = {
     // two consumers (the candidate-doc id list + the verify join), and
     // upstream is the whole candidate-generation pipeline — materialize
     // once; candidate pair lists are small by construction
@@ -376,7 +372,7 @@ object Dedup {
     val sets = tokenized(docs.join(candDocs, Seq("doc_id"), "left_semi"),
         scan = Some(docs))
       .select(col("doc_id"),
-        array_distinct(shingleTokens(col("toks"), n)).as("sset"))
+        array_distinct(shingleTokens(col("toks"), shingleN)).as("sset"))
     c
       .join(sets.as("sa"), col("id_a") === col("sa.doc_id"))
       .join(sets.as("sb"), col("id_b") === col("sb.doc_id"))
@@ -404,8 +400,7 @@ object Dedup {
     * smaller-id new doc. Caller guarantees the two frames' ids are
     * disjoint. Recall argument is [[minhashDedupPairs]]'s. */
   def incrementalPairs(newDocs: DataFrame, existing: DataFrame,
-                       threshold: Double, p: MinHashParams = MinHashParams(),
-                       n: Int = 3, maxBucketSize: Option[Long] = None): DataFrame = {
+                       threshold: Double): DataFrame = {
     // ONE signature pass over the union (one scan + one shuffle — two
     // separate passes measured ~2× the runtime), then a batch-id flag
     // joined onto the bucket rows (ids-only frame, broadcast-sized
@@ -414,7 +409,7 @@ object Dedup {
     // the flagged bucket frame feeds BOTH join sides, and the batch
     // side's extra filter makes the subtrees differ — without an eager
     // materialization the signature pipeline executes once per side
-    val buckets = capBuckets(bandBuckets(signatures(allDocs, p, n), p), maxBucketSize)
+    val buckets = bandBuckets(signatures(allDocs), MinHashParams())
       .join(newDocs.select(col("doc_id"), lit(true).as("is_new")),
         Seq("doc_id"), "left")
       .na.fill(false, Seq("is_new"))
@@ -426,7 +421,7 @@ object Dedup {
           (!col("b.is_new") || col("b.doc_id") < col("a.doc_id")))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
-    verifyCandidates(cand, allDocs, threshold, n)
+    verifyCandidates(cand, allDocs, threshold)
       .select(col("id_a").as("doc_id"), col("id_b").as("dup_id"), col("jaccard"))
   }
 
@@ -434,43 +429,33 @@ object Dedup {
 
   /** 64-bit SimHash over whitespace tokens (multiplicity-weighted).
     *
-    * `md5Mode` (round 15 — the d04 hash-gate conversion, the
-    * s02/s03/d07 md5-plane precedent one hash family over): the
-    * per-token ±1 weights come from the first 16 hex digits of
-    * md5(token) instead of xxhash64 — bit b of the signature reads bit
-    * (b mod 4) of hex digit ⌊b/4⌋, which replays in DuckDB as literal
-    * strpos/shift arithmetic ([[d04Sql]]), so the whole pair set is
-    * pinned cross-engine. The xxhash64 default stays for callers whose
-    * pins predate the family (engine-specific → rows-only). The digit
-    * values are materialized through a projection — never recomputed
-    * inside the 64 aggregate expressions' when() conditions beyond the
-    * cheap shift — so the md5 runs once per token. */
-  def simhashes(docs: DataFrame, md5Mode: Boolean = false): DataFrame = {
-    val tok0 = docs
+    * The per-token ±1 weights come from the first 16 hex digits of
+    * md5(token) (round 15 — the d04 hash-gate conversion, the
+    * s02/s03/d07 md5-plane precedent one hash family over): bit b of
+    * the signature reads bit (b mod 4) of hex digit ⌊b/4⌋, which
+    * replays in DuckDB as literal strpos/shift arithmetic
+    * ([[d04Sql]]), so the whole pair set is pinned cross-engine. The
+    * digit values are materialized through a projection — never
+    * recomputed inside the 64 aggregate expressions' when() conditions
+    * beyond the cheap shift — so the md5 runs once per token. */
+  def simhashes(docs: DataFrame): DataFrame = {
+    // the 16 hex digits packed as TWO 32-bit halves (round 15 — was 16
+    // separate conv(substring) columns, measured ~2× the query): digit
+    // i is a nibble of one half, so each of the 64 bit reads below is
+    // one shift+mask on a long. Digit i = nibble (7 - i%8) of half i/8
+    // (hex strings are big-endian).
+    val halves = (0 until 2).map { h =>
+      conv(substring(md5(col("w")), 8 * h + 1, 8), 16, 10)
+        .cast("long").as(s"hx$h")
+    }
+    val tok = docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-    val (tok, bitSet: (Int => Column)) =
-      if (!md5Mode) {
-        val t = tok0.withColumn("h", xxhash64(col("w")))
-        (t, (b: Int) =>
-          shiftright(col("h"), b).bitwiseAND(lit(1L)) === 1L)
-      } else {
-        // the 16 hex digits packed as TWO 32-bit halves (round 15 —
-        // was 16 separate conv(substring) columns, measured ~2× the
-        // query): digit i is a nibble of one half, so each of the 64
-        // bit reads below is one shift+mask on a long. Same md5-bit
-        // semantics, digit i = nibble (7 - i%8) of half i/8 (hex
-        // strings are big-endian).
-        val halves = (0 until 2).map { h =>
-          conv(substring(md5(col("w")), 8 * h + 1, 8), 16, 10)
-            .cast("long").as(s"hx$h")
-        }
-        val t = tok0.select(col("doc_id") +: halves: _*)
-        (t, (b: Int) => {
-          val digit = b / 4
-          val shift = 4 * (7 - digit % 8) + b % 4
-          shiftright(col(s"hx${digit / 8}"), shift).bitwiseAND(lit(1L)) === 1L
-        })
-      }
+      .select(col("doc_id") +: halves: _*)
+    def bitSet(b: Int): Column = {
+      val digit = b / 4
+      val shift = 4 * (7 - digit % 8) + b % 4
+      shiftright(col(s"hx${digit / 8}"), shift).bitwiseAND(lit(1L)) === 1L
+    }
     val bitSums = (0 until 64).map { b =>
       sum(when(bitSet(b), 1).otherwise(-1)).as(s"b$b")
     }
@@ -482,12 +467,10 @@ object Dedup {
       .select(col("doc_id"), packed.as("simhash"))
   }
 
-  /** Pairs within hamming distance maxDist (≤3 with the 4×16-bit
-    * pigeonhole banding: any such pair agrees on ≥1 band). */
-  def simhashPairs(docs: DataFrame, maxDist: Int = 3,
-                   md5Mode: Boolean = false): DataFrame = {
-    require(maxDist <= 3, "4-band pigeonhole guarantees recall only for maxDist <= 3")
-    val sh = simhashes(docs, md5Mode)
+  /** Pairs within hamming distance 3 (the 4×16-bit pigeonhole banding:
+    * any such pair agrees on ≥1 band). */
+  def simhashPairs(docs: DataFrame): DataFrame = {
+    val sh = simhashes(docs)
     // materialized once for the self-join's two sides (same rationale
     // as lshCandidates — the 64-bit-sum aggregation above is the cost)
     val banded = sh.select(col("doc_id"), col("simhash"),
@@ -503,7 +486,7 @@ object Dedup {
         col("a.simhash").as("sim_a"), col("b.simhash").as("sim_b"))
       .distinct()
       .withColumn("hamming", bit_count(col("sim_a").bitwiseXOR(col("sim_b"))))
-      .filter(col("hamming") <= maxDist)
+      .filter(col("hamming") <= 3)
       .select(col("id_a"), col("id_b"), col("hamming"))
   }
 
@@ -513,12 +496,12 @@ object Dedup {
     * ([[graft.functions.RollingHash]]): per-band window-hash minima are
     * equality-join keys, exactly the MinHash-LSH join shape but with no
     * shingle strings materialized — the whole signature is one pass
-    * over the document bytes. Returns pairs with the number of agreeing
-    * bands (more bands ⇒ longer shared byte runs). */
-  def winnowPairs(docs: DataFrame, k: Int = 24, numBands: Int = 8,
-                  minShared: Int = 1): DataFrame = {
+    * over the document bytes. Returns the pairs agreeing on at least 2
+    * of the 8 bands, with the number of agreeing bands (more bands ⇒
+    * longer shared byte runs). */
+  def winnowPairs(docs: DataFrame, k: Int = 24): DataFrame = {
     val sig = docs.select(col("doc_id"),
-      posexplode(graft.functions.RollingHash.windowMins(col("text"), k, numBands))
+      posexplode(graft.functions.RollingHash.windowMins(col("text"), k))
         .as(Seq("band", "min_hash")))
       // Long.MaxValue marks a band no window hashed into — joining on
       // it would pair every document that shares an empty band
@@ -532,7 +515,7 @@ object Dedup {
           col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .agg(count(lit(1)).as("shared_bands"))
-      .filter(col("shared_bands") >= minShared)
+      .filter(col("shared_bands") >= 2)
   }
 
   // -- embedding cosine near-dup ----------------------------------------------
@@ -557,6 +540,9 @@ object Dedup {
         round(col("cosine"), 6).as("cosine_r"))
   }
 
+  /** Seed of band b's Gaussian hyperplanes is `planeSeed + b`. */
+  private val planeSeed = 42L
+
   /** (vec_id, band, bucket) hyperplane-LSH rows for `emb` — the
     * PERSISTABLE per-vector unit of the streamed semantic ingest dedup
     * ([[graft.streaming.IngestDedup.semanticDedupingSink]]), the exact
@@ -566,9 +552,7 @@ object Dedup {
     * the shared planes), never on batching — the discoverability
     * argument the streamed gate rests on. Same expressions as the batch
     * [[embeddingNearDupPairsLSH]] by construction. */
-  def embeddingBucketIndex(emb: DataFrame, bands: Int = 12,
-                           planesPerBand: Int = 3,
-                           seed: Long = 42L,
+  def embeddingBucketIndex(emb: DataFrame, bands: Int, planesPerBand: Int,
                            md5Tag: Option[String] = None): DataFrame = {
     val e = emb.select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
     val probed = e.select(size(col("v")).as("d"))
@@ -585,7 +569,7 @@ object Dedup {
         case Some(tag) => VectorOps.signBucket(col("v"),
           VectorOps.md5Planes(planesPerBand, dim, s"$tag:$b"))
         case None => VectorOps.hyperplaneBucket(col("v"),
-          VectorOps.randomPlanes(planesPerBand, dim, seed + b))
+          VectorOps.randomPlanes(planesPerBand, dim, planeSeed + b))
       }
     }
     e.select(col("vec_id"),
@@ -620,7 +604,6 @@ object Dedup {
     * fixed-b bend and the scaled-b line. */
   def embeddingNearDupPairsLSH(emb: DataFrame, threshold: Double,
                                bands: Int = 12, planesPerBand: Int = 3,
-                               seed: Long = 42L,
                                maxBucketSize: Option[Long] = None,
                                md5Tag: Option[String] = None,
                                bandChunks: Int = 1,
@@ -680,7 +663,7 @@ object Dedup {
     // while id-pair rows merely shuffle. Vectors re-join AFTER distinct,
     // only for the candidates that survive.
     val bucketed = capBuckets(
-      embeddingBucketIndex(embW, bands, planesPerBand, seed, md5Tag),
+      embeddingBucketIndex(embW, bands, planesPerBand, md5Tag),
       maxBucketSize)
       .localCheckpoint(true)
     def verifiedPairs(bk: DataFrame): DataFrame = {
@@ -722,14 +705,14 @@ object Dedup {
   }
 
   /** Corpus-scaled hyperplane depth: the smallest b ≥ 3 with
-    * 2ᵇ ≥ n/targetBucket, so a band's expected bucket population stays
-    * ~`targetBucket` as the corpus grows and the candidate self-join's
-    * volume stays ~N·targetBucket/2 per band instead of ~N²/2ᵇ.
+    * 2ᵇ ≥ n/256, so a band's expected bucket population stays ~256
+    * (the target bucket) as the corpus grows and the candidate
+    * self-join's volume stays ~N·256/2 per band instead of ~N²/2ᵇ.
     * Pinned in DedupSpec; at gate scale (≤2k vectors) this equals the
     * historical fixed b = 3, so the d13 hash gate is parameter-stable. */
-  def lshPlanesFor(n: Long, targetBucket: Long = 256L): Int = {
+  def lshPlanesFor(n: Long): Int = {
     val needed = math.ceil(
-      math.log(math.max(1.0, n.toDouble / targetBucket)) / math.log(2.0)).toInt
+      math.log(math.max(1.0, n.toDouble / 256L)) / math.log(2.0)).toInt
     math.max(3, needed)
   }
 
@@ -750,11 +733,10 @@ object Dedup {
     * deployment that can't afford the band growth at its depth uses
     * the IVF generator instead ([[embeddingNearDupPairsIVF]]), whose
     * probe cost is flat in N — the same trade, paid in spill-probes.
-    * At gate scale planesPerBand = basePlanes, so this returns
-    * baseBands and every gate hash is untouched (pinned in
-    * DedupSpec). */
-  def lshBandsFor(planesPerBand: Int, threshold: Double = 0.45,
-                  baseBands: Int = 24, basePlanes: Int = 3): Int = {
+    * At gate scale planesPerBand = 3, so this returns 24 and every
+    * gate hash is untouched (pinned in DedupSpec). */
+  def lshBandsFor(planesPerBand: Int): Int = {
+    val (threshold, baseBands, basePlanes) = (0.45, 24, 3)
     require(planesPerBand >= basePlanes,
       s"depth $planesPerBand below the base geometry's $basePlanes")
     if (planesPerBand == basePlanes) baseBands
@@ -790,7 +772,7 @@ object Dedup {
     * again rather than mis-joining. Single-writer discipline is the
     * sink's own (one stream owns an index dir). */
   def rebucketIndex(spark: SparkSession, indexDir: String, bands: Int,
-                    newPlanesPerBand: Int, seed: Long = 42L): Unit = {
+                    newPlanesPerBand: Int): Unit = {
     import org.apache.hadoop.fs.Path
     // a band-count mismatch would silently zero recall on the missing
     // bands (rows re-signed with fewer bands than the sink probes) —
@@ -804,7 +786,7 @@ object Dedup {
     val vecs = spark.read.parquet(s"$indexDir/vecs")
     val resigned = embeddingBucketIndex(
         vecs.select(col("vec_id"), col("embedding")),
-        bands, newPlanesPerBand, seed)
+        bands, newPlanesPerBand)
       .join(vecs.select(col("vec_id"), col("batch_id")), Seq("vec_id"))
     val cur = new Path(s"$indexDir/buckets")
     val tmp = new Path(s"$indexDir/buckets.__rebucket__")
@@ -843,7 +825,7 @@ object Dedup {
     * to three decimals of the independence prediction, dev/scaling.md).
     *
     * Why this scales where banded LSH does not: `nlist` grows with the
-    * corpus (`max(minNlist, N/targetCell)`), so cell population stays
+    * corpus (`max(16, N/targetCell)`), so cell population stays
     * ~`targetCell·spill` regardless of N and candidate volume is
     * Σ_cell C(pop, 2) ≈ N·targetCell·spill²/2 — LINEAR in N at fixed
     * cell size, vs ~N²/2ᵇ for fixed-granularity hyperplane buckets.
@@ -854,7 +836,6 @@ object Dedup {
     * `distinct` for verification only. */
   def embeddingNearDupPairsIVF(emb: DataFrame, threshold: Double,
                                spill: Int = 3, targetCell: Long = 256L,
-                               minNlist: Int = 16,
                                quantizers: Int = 1,
                                volumeBudget: Long =
                                  Similarity.IvfCandidateVolumeBudget): DataFrame = {
@@ -865,7 +846,7 @@ object Dedup {
         VectorOps.asDouble(col("embedding")).as("v"))
       .withColumn("nrm", VectorOps.norm(col("v"))))
     val (e, n) = (cp.frame, cp.rows)
-    val nlist = math.max(minNlist.toLong, n / targetCell).toInt
+    val nlist = math.max(16L, n / targetCell).toInt
     // pre-flight affordability (round 13): refuse un-affordable dials
     // up front — the closed-form volume estimate against the measured
     // disk wall (see [[Similarity.IvfCandidateVolumeBudget]]) — instead
@@ -1211,15 +1192,15 @@ object Dedup {
 
   /** SimHash fingerprint pairs within hamming ≤ 3, HASH-GATED (round
     * 15 — previously rows-only): the md5 hex-digit bit family
-    * ([[simhashes]] `md5Mode`) replays in DuckDB as literal
+    * ([[simhashes]]) replays in DuckDB as literal
     * strpos/shift arithmetic, so the oracle ([[d04Sql]]) re-derives
     * every fingerprint bit, the 4×16 pigeonhole banding, the candidate
     * join, and the hamming cut — the whole approximate pair set pinned
     * cross-engine (the s02/s03/d07 conversion precedent). Semantics
     * (verbatim pair at distance 0, unrelated excluded) stay pinned in
-    * DedupSpec for BOTH families. */
+    * DedupSpec. */
   def d04SimhashPairs(spark: SparkSession, dir: String): DataFrame =
-    simhashPairs(Tables.documents(spark, dir), 3, md5Mode = true)
+    simhashPairs(Tables.documents(spark, dir))
       .orderBy(col("id_a"), col("id_b"))
 
   /** d04's oracle: fingerprints as 64-char bit STRINGS (bit b of the
@@ -1262,7 +1243,7 @@ object Dedup {
   /** Winnowing near-dup pairs (engine-specific wrapping-arithmetic
     * hash → rows-only gate; semantics pinned in ScalaTest). */
   def d06WinnowPairs(spark: SparkSession, dir: String): DataFrame =
-    winnowPairs(Tables.documents(spark, dir), k = 24, minShared = 2)
+    winnowPairs(Tables.documents(spark, dir))
       .orderBy(col("id_a"), col("id_b"))
 
   /** Banded-LSH embedding near-dup at the same threshold, HASH-GATED
@@ -1280,15 +1261,13 @@ object Dedup {
   /** The md5-plane bucket arms of the d07 oracle as a reusable
     * WITH-body fragment over an `emb(vec_id, v)` CTE — single owner of
     * the literal planes shared by [[d07Sql]] and the s23 cross-pool
-    * oracle ([[Similarity.s23Sql]]). Dim pinned 64 (every test
-    * table). */
-  private[operators] def lshBucketArmsSql(bands: Int = 12,
-                                          planes: Int = 3,
-                                          tag: String = "d07"): String = {
+    * oracle ([[Similarity.s23Sql]]): d07's 12 bands × 3 planes, tag
+    * "d07". Dim pinned 64 (every test table). */
+  private[operators] def lshBucketArmsSql(): String = {
     import graft.functions.VectorOps.{md5Planes, sqlSignBucket}
-    (0 until bands).map { b =>
+    (0 until 12).map { b =>
       s"""  SELECT vec_id, $b AS band,
-         |         ${sqlSignBucket("v", md5Planes(planes, 64, s"$tag:$b"))} AS bucket
+         |         ${sqlSignBucket("v", md5Planes(3, 64, s"d07:$b"))} AS bucket
          |  FROM emb""".stripMargin
     }.mkString("\nUNION ALL\n")
   }
@@ -1391,9 +1370,7 @@ object Dedup {
     * train_id, cosine). */
   def crossSplitContamination(emb: DataFrame, split: DataFrame,
                               threshold: Double,
-                              bandChunks: Int = 1,
-                              volumeBudget: Long =
-                                Similarity.IvfCandidateVolumeBudget): DataFrame = {
+                              bandChunks: Int = 1): DataFrame = {
     require(bandChunks >= 1 && bandChunks <= 24,
       s"bandChunks must be in [1, 24]")
     val nVol = emb.count()
@@ -1412,7 +1389,8 @@ object Dedup {
     val trainEst = nVol * 205L / 256L
     val popBound = math.min(4096L, math.max(1L, trainEst >> planes))
     val chunkBands = (24 + bandChunks - 1) / bandChunks
-    Similarity.checkIvfVolume(chunkBands * heldEst * popBound, volumeBudget,
+    Similarity.checkIvfVolume(chunkBands * heldEst * popBound,
+      Similarity.IvfCandidateVolumeBudget,
       s"crossSplitContamination(N=$nVol, bands=24, planesPerBand=$planes, " +
         s"bandChunks=$bandChunks — raising bandChunks divides the peak " +
         "estimate)")

@@ -165,12 +165,12 @@ object Graph {
     * localCheckpoint's outputPartitioning does not, so the per-round
     * join needs no edge-side exchange (GraphSpec pins 2-vs-3 exchanges
     * on [[prRound]] itself under disabled broadcast). At 100 TB this
-    * is the difference between shuffling the edge list `rounds` times
+    * is the difference between shuffling the edge list once per round
     * and shuffling only the (much smaller) rank vector: the one-time
     * bucketed write is amortized over every round and every re-fit on
     * the standing graph. Arithmetic is [[pagerank]]'s bit for bit —
     * same integer rounds, same oracle (x01's generated CTE chain). */
-  def pagerankBucketed(lineitem: DataFrame, rounds: Int = prRounds,
+  def pagerankBucketed(lineitem: DataFrame,
                        table: String = "graft_x07_edges"): DataFrame = {
     val spark = lineitem.sparkSession
     val e = directed(copurchaseEdges(lineitem))
@@ -185,7 +185,7 @@ object Graph {
     // removes the edge-side exchange. Hinting pr would make the gate
     // plan identical to x01's and stop exercising the layout.
     var pr = pr0
-    for (_ <- 1 to rounds)
+    for (_ <- 1 to prRounds)
       pr = prRound(edges, pr, base)
     prFinish(out, pr)
   }
@@ -328,15 +328,14 @@ object Graph {
     * [[pagerank]], but ALL teleport mass returns to a seed set instead
     * of spreading uniformly — the "impact radius" / related-items
     * primitive (scores decay with distance from the seeds, exactly
-    * zero beyond `rounds` hops). The per-round recurrence keeps the
+    * zero beyond [[prRounds]] hops). The per-round recurrence keeps the
     * x01 shape (one edge⋈pr join + one partial-aggregated shuffle on
     * dst; zero-mass nodes ride along as c=0 contributions because the
     * graph is symmetric, so no extra left join is needed), and the
     * all-integer arithmetic lets DuckDB replay every round exactly.
     * Seeds: every 20th part id — a deterministic projection, mirrored
     * literally in [[x05Sql]]. */
-  def personalizedPagerank(lineitem: DataFrame,
-                           rounds: Int = prRounds): DataFrame = {
+  def personalizedPagerank(lineitem: DataFrame): DataFrame = {
     val e = directed(copurchaseEdges(lineitem))
     val isSeed = (c: org.apache.spark.sql.Column) => c % 20 === 0
     // the seed count and the envelope's row count ride out's checkpoint
@@ -355,7 +354,7 @@ object Graph {
     // [[pagerank]] round-16 rationale (edge table never exchanged)
     val nodeHint = ScalePolicy.nodeFrames.hint(cp.rows)
     // lazy rounds — the [[pagerank]] round-15 rationale
-    for (_ <- 1 to rounds) {
+    for (_ <- 1 to prRounds) {
       val prh = nodeHint(pr)
       pr = edges.join(prh, edges("src") === prh("node"))
         .select(col("dst"), expr("pr * w DIV outw").as("c"))

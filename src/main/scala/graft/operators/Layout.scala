@@ -47,12 +47,14 @@ object Layout {
     GraftSqlBridge.column(
       InterleaveBits(buckets.map(GraftSqlBridge.expression), bits))
 
-  /** `df` re-laid-out on the Z-curve of `cols` into `numFiles` range
-    * slices (write with `.parquet(...)` to materialize the layout).
+  /** `df` re-laid-out on the Z-curve of `cols` (8 bits per column)
+    * into `numFiles` range slices (write with `.parquet(...)` to
+    * materialize the layout).
     * Ranges are computed from the data in one tiny broadcast aggregate;
     * ties beyond the Z-key keep the input order within a partition. */
-  def zorderLayout(df: DataFrame, cols: Seq[String], bits: Int = 8,
+  def zorderLayout(df: DataFrame, cols: Seq[String],
                    numFiles: Int = 32): DataFrame = {
+    val bits = 8
     // the helper columns join onto the caller's frame BY NAME: a caller
     // column with a reserved name would either throw an ambiguous
     // reference or be silently swallowed by the final drop()

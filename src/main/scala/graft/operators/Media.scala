@@ -287,10 +287,11 @@ object Media {
       out.result()
     }
 
-    /** grid×grid block-mean grayscale features in [0,1] from a decoded
+    /** 8×8 block-mean grayscale features in [0,1] from a decoded
       * image — a real pixel-space embedding (tiny stand-in for a learned
       * extractor; the plumbing and geometry are what the pipeline needs). */
-    def blockMeans(img: BufferedImage, grid: Int = 8): Array[Double] = {
+    def blockMeans(img: BufferedImage): Array[Double] = {
+      val grid = 8
       val (w, h) = (img.getWidth, img.getHeight)
       val raster = img.getRaster
       val out = new Array[Double](grid * grid)
@@ -431,13 +432,13 @@ object Media {
 
   /** Decode image payloads and emit real pixel-space embeddings
     * (`vec_id`, `embedding`) compatible with the Similarity stack. */
-  def imageFeatures(media: Dataset[MediaRow], grid: Int = 8): DataFrame = {
+  def imageFeatures(media: Dataset[MediaRow]): DataFrame = {
     import media.sparkSession.implicits._
     media.mapPartitions { rows =>
       rows.map { m =>
         val img = ImageIO.read(new ByteArrayInputStream(m.content))
         require(img != null, s"media ${m.media_id}: not a decodable image")
-        (m.media_id, Codec.blockMeans(img, grid))
+        (m.media_id, Codec.blockMeans(img))
       }
     }.toDF("vec_id", "embedding")
   }
@@ -716,7 +717,8 @@ object Media {
     * Near-dup pairing over these is d04's Hamming band join verbatim
     * (split the 64 bits into bands, equi-join on exact band matches) —
     * the signature, not the join, is what is image-specific. */
-  def phash64(img: BufferedImage, grid: Int = 8): (Long, Long, Int) = {
+  def phash64(img: BufferedImage): (Long, Long, Int) = {
+    val grid = 8
     val (w, h) = (img.getWidth, img.getHeight)
     val raster = img.getRaster
     val sums = new Array[Long](grid * grid)
@@ -928,11 +930,11 @@ object Media {
   // Hamming band join over the decoded signatures
   // ---------------------------------------------------------------------------
 
-  /** Near-dup pairs within `maxDist` Hamming over integer signatures —
+  /** Near-dup pairs within Hamming 3 over integer signatures —
     * [[graft.operators.Dedup.simhashPairs]]' pigeonhole band join,
     * generalized: `sig` carries (media_id, signature columns), `chunks`
-    * are the band values (any pair within maxDist < chunks.size must
-    * agree on ≥1 band exactly), candidates come from the (band, chunk)
+    * are the 4 band values (any pair within 3 bits must agree on ≥1
+    * band exactly), candidates come from the (band, chunk)
     * equi-join, and the exact Hamming re-check runs only on candidates.
     * Scale posture: the banded frame is narrow (id + signature ints),
     * the join is an equi-join whose bucket population is bounded by the
@@ -943,10 +945,7 @@ object Media {
     * for pigeonhole recall 1. */
   private[operators] def signatureNearDupPairs(sig: DataFrame, chunks: Seq[Column],
                                     sigCols: Seq[String],
-                                    maxDist: Int,
-                                    maxBucketSize: Option[Long] = None): DataFrame = {
-    require(maxDist < chunks.size,
-      s"${chunks.size}-band pigeonhole guarantees recall only below ${chunks.size}")
+                                    maxBucketSize: Option[Long]): DataFrame = {
     // materialized once for the self-join's two sides (the decode +
     // signing upstream is the cost, not these narrow rows)
     val banded0 = sig
@@ -982,7 +981,7 @@ object Media {
           Seq(col(s"a.$c").as(s"a_$c"), col(s"b.$c").as(s"b_$c"))): _*)
       .distinct()
       .withColumn("hamming", ham.cast("int"))
-      .filter(col("hamming") <= maxDist)
+      .filter(col("hamming") <= 3)
       .select(col("id_a"), col("id_b"), col("hamming"))
   }
 
@@ -998,7 +997,7 @@ object Media {
   /** pHash near-dup pairs over any (media_id, phash_hi, phash_lo)
     * frame — the public operator m10 gates (cap: see
     * [[signatureNearDupPairs]]). */
-  def phashNearDupPairs(sig: DataFrame, maxDist: Int = 3,
+  def phashNearDupPairs(sig: DataFrame,
                         maxBucketSize: Option[Long] = None): DataFrame = {
     val chunks = Seq(
       col("phash_lo").bitwiseAND(lit(0xFFFFL)),
@@ -1006,7 +1005,7 @@ object Media {
       col("phash_hi").bitwiseAND(lit(0xFFFFL)),
       shiftright(col("phash_hi"), 16).bitwiseAND(lit(0xFFFFL)))
     signatureNearDupPairs(sig, chunks, Seq("phash_hi", "phash_lo"),
-      maxDist, maxBucketSize)
+      maxBucketSize)
   }
 
   def m10ImageNearDup(spark: SparkSession, dir: String): DataFrame =
@@ -1069,11 +1068,11 @@ object Media {
     * signature. All-integer on both sides → hash gate. */
   /** Audio-contour near-dup pairs over any (media_id, afp) frame —
     * the public operator m11 gates. */
-  def audioNearDupPairs(sig: DataFrame, maxDist: Int = 3,
+  def audioNearDupPairs(sig: DataFrame,
                         maxBucketSize: Option[Long] = None): DataFrame = {
     val chunks = (0 until 4).map(k =>
       shiftright(col("afp"), 8 * k).bitwiseAND(lit(0xFFL)))
-    signatureNearDupPairs(sig, chunks, Seq("afp"), maxDist, maxBucketSize)
+    signatureNearDupPairs(sig, chunks, Seq("afp"), maxBucketSize)
   }
 
   def m11AudioNearDup(spark: SparkSession, dir: String): DataFrame =

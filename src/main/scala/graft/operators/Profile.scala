@@ -29,13 +29,14 @@ object Profile {
     profileWith(df, cols, c => countDistinct(col(c)))
 
   /** The 100 TB profile: identical shape, but distinct cardinalities via
-    * `approx_count_distinct` (HLL++). No Expand fan-out — each input row
+    * `approx_count_distinct` (HLL++, relative standard deviation
+    * 0.02). No Expand fan-out — each input row
     * is consumed once — and the sketches are mergeable partial
     * aggregates, so the whole profile is one streaming pass whatever the
     * column count. Estimates are engine-specific (rows-only gate); the
     * error envelope vs the exact profile is pinned in ProfileSpec. */
-  def approxProfile(df: DataFrame, cols: Seq[String], rsd: Double = 0.02): DataFrame =
-    profileWith(df, cols, c => approx_count_distinct(col(c), rsd).cast("bigint"))
+  def approxProfile(df: DataFrame, cols: Seq[String]): DataFrame =
+    profileWith(df, cols, c => approx_count_distinct(col(c), 0.02).cast("bigint"))
 
   private def profileWith(df: DataFrame, cols: Seq[String],
                           distinctAgg: String => Column): DataFrame = {

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   *  - ACROSS replicas, documents are NOT near-dups of each other (every
   *    non-shared token carries the replica id, so Jaccard across
   *    replicas collapses), keeping true-pair volume ~linear in R;
-  *  - a deterministic ~`sharedPct`% of the VOCABULARY (token-content
+  *  - a deterministic ~20% of the VOCABULARY (token-content
   *    hashed, so two near-dup docs perturb identically and their
   *    within-replica Jaccard is untouched) keeps the original token in
   *    EVERY replica — corpus-global boilerplate whose shingle
@@ -32,7 +32,7 @@ object ScaleCorpus {
 
   /** `docs` replicated `replicas`×. Ids offset by replica stride; text
     * token-perturbed as in the class doc; `n_chars` recomputed. */
-  def documents(docs: DataFrame, replicas: Int, sharedPct: Int = 20): DataFrame = {
+  def documents(docs: DataFrame, replicas: Int): DataFrame = {
     val spark = docs.sparkSession
     val stride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1
     val reps = spark.range(replicas.toLong).select(col("id").cast("int").as("k"))
@@ -42,7 +42,7 @@ object ScaleCorpus {
       split(col("text"), " ").as("toks"))
     val perturbed = toks.crossJoin(reps)
       .withColumn("toks2", transform(col("toks"), t =>
-        when(col("k") === 0 || pmod(xxhash64(t), lit(100)) < lit(sharedPct), t)
+        when(col("k") === 0 || pmod(xxhash64(t), lit(100)) < lit(20), t)
           .otherwise(concat(t, lit("~"), col("k")))))
       .select(
         (col("doc_id") + col("k").cast("long") * stride).as("doc_id"),
@@ -59,9 +59,9 @@ object ScaleCorpus {
     * 100) become, in every replica k ≥ 1, a small multiplicative
     * perturbation of the ORIGINAL vector instead of the sign-flipped
     * scatter: v′ᵢ = vᵢ·(1 + ε·sᵢ) with per-(vec_id, k, dim) signs
-    * sᵢ = ±1 and ε = `tightEps`. Closed-form geometry: with random
+    * sᵢ = ±1 and ε = 0.2. Closed-form geometry: with random
     * signs, cos(v, v′) ≈ 1/√(1+ε²) and cos(v′(k₁), v′(k₂)) ≈ 1/(1+ε²)
-    * — at the default ε = 0.2 that is ≈ 0.980 and ≈ 0.962, with
+    * — at ε = 0.2 that is ≈ 0.980 and ≈ 0.962, with
     * per-pair spread ~ε/√dim ≈ 0.03 — so each tight id carries a
     * deterministic clique of `replicas` mutually ≥ 0.9-cosine vectors
     * (the regime real near-dup corpora concentrate in), while every
@@ -71,8 +71,7 @@ object ScaleCorpus {
     * form predicts the population, the scan defines it.
     * `tightPct` = 0 (the default, and every non-recall path) is
     * bit-identical to the historical replication. */
-  def embeddings(emb: DataFrame, replicas: Int, tightPct: Int = 0,
-                 tightEps: Double = 0.2): DataFrame = {
+  def embeddings(emb: DataFrame, replicas: Int, tightPct: Int = 0): DataFrame = {
     val spark = emb.sparkSession
     val stride = emb.agg(max(col("vec_id"))).head().getLong(0) + 1
     val reps = spark.range(replicas.toLong).select(col("id").cast("int").as("k"))
@@ -92,7 +91,7 @@ object ScaleCorpus {
         when(col("k") === 0, col("embedding"))
           .otherwise(when(isTight,
             transform(col("embedding"), (x, i) =>
-              x * (lit(1.0) + lit(tightEps) *
+              x * (lit(1.0) + lit(0.2) *
                 when(pmod(xxhash64(col("vec_id"), col("k"), i), lit(2)) === 0,
                   lit(1.0)).otherwise(lit(-1.0)))))
           .otherwise(transform(col("embedding"), (x, i) =>

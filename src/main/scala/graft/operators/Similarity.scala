@@ -1038,8 +1038,8 @@ object Similarity {
     * ENGINES, which the old seeded-shuffle init could never be. */
   private[operators] val lloydIters = 10
 
-  private[operators] def lloydFit(pts: Array[Array[Double]], k: Int,
-                                  iters: Int = lloydIters): Array[Array[Double]] = {
+  private[operators] def lloydFit(pts: Array[Array[Double]],
+                                  k: Int): Array[Array[Double]] = {
     import java.math.{BigDecimal => JBD, RoundingMode}
     require(pts.nonEmpty, "empty fit sample")
     val dim = pts(0).length
@@ -1052,7 +1052,7 @@ object Similarity {
     // PQ fits (m × ksub × sample × iters conversions)
     val pts12: Array[Array[JBD]] = pts.map(_.map(x =>
       JBD.valueOf(x).setScale(12, RoundingMode.HALF_UP)))
-    for (_ <- 0 until iters) {
+    for (_ <- 0 until lloydIters) {
       var c = 0
       while (c < kEff) {
         var s = 0.0; var j = 0
@@ -1162,6 +1162,11 @@ object Similarity {
     (0 until m).map(s =>
       element_at(col(s"__lut$s"), col(s"__c$s") + 1)).reduce(_ + _)
 
+  /** PQ geometry of [[pqKnn]] and [[ivfPqKnn]]: `pqM` subspaces of
+    * `pqKsub` centroids each. */
+  private val pqM = 8
+  private val pqKsub = 32
+
   /** PQ-ADC kNN: the query stays full precision, every corpus vector
     * is replaced by its m codebook codes, and each scored pair costs m
     * table lookups into the query's per-subspace lookup tables (built
@@ -1181,9 +1186,10 @@ object Similarity {
     * SimilaritySpec; rerank depth ≥ corpus degenerates to exact brute
     * force (also pinned). */
   def pqKnn(queries: DataFrame, corpus: DataFrame, k: Int,
-            m: Int = 8, ksub: Int = 32, rerankFactor: Int = 8): DataFrame = {
-    require(m >= 1 && ksub >= 1 && rerankFactor >= 1)
-    val cb = pqCodebooks(corpus, m, ksub)
+            rerankFactor: Int = 8): DataFrame = {
+    require(rerankFactor >= 1)
+    val m = pqM
+    val cb = pqCodebooks(corpus, m, pqKsub)
     val codes = pqEncode(corpus, "neighbor_id", cb)
     val luts = pqLuts(queries, cb)
 
@@ -1227,11 +1233,12 @@ object Similarity {
     * Exhaustive probe (nprobe = nlist) + a corpus-deep re-rank buffer
     * degenerates to exact brute force — pinned, as s07. */
   def ivfPqKnn(queries: DataFrame, corpus: DataFrame, k: Int,
-               nlist: Int = 16, nprobe: Int = 4, m: Int = 8, ksub: Int = 32,
+               nlist: Int = 16, nprobe: Int = 4,
                rerankFactor: Int = 8): DataFrame = {
     require(nprobe >= 1 && nprobe <= nlist)
     val (cells, centroids) = ivfIndex(corpus, nlist)
-    val cb = pqCodebooks(corpus, m, ksub)
+    val m = pqM
+    val cb = pqCodebooks(corpus, m, pqKsub)
     // the candidate-join payload: (cell, id, m codes) — cell keys the
     // shuffle, the codes are all the coarse stage ever reads
     val codes = pqEncode(corpus, "neighbor_id", cb)
@@ -1329,8 +1336,8 @@ object Similarity {
     * Scale: both inputs are already top-k-per-query (bounded), so the
     * join and the final rank window touch k·|queries| rows, never the
     * corpus. */
-  def rrfFuse(vector: DataFrame, lexical: DataFrame, k: Int,
-              c: Int = 60): DataFrame = {
+  def rrfFuse(vector: DataFrame, lexical: DataFrame, k: Int): DataFrame = {
+    val c = 60
     val v = vector.withColumnRenamed("rk", "vrk")
     val l = lexical.withColumnRenamed("rk", "lrk")
     val fused = v.join(l, Seq("query_id", "neighbor_id"), "full_outer")
@@ -2437,17 +2444,17 @@ object Similarity {
   // -- MMR diversified retrieval ---------------------------------------------
 
   /** Maximal-marginal-relevance diversified top-k: greedily select
-    * argmax λ·rel(d) − (1−λ)·max_{s∈S} cos(d, s) from a bounded
+    * argmax λ·rel(d) − (1−λ)·max_{s∈S} cos(d, s), λ = 0.7, from a bounded
     * relevance pool — the retrieval step that returns k RESULTS, not k
     * near-duplicates of the best result (the dedup-aware flavor of
     * retrieval a curation pipeline wants for eval mining and few-shot
     * selection).
     *
     * Distributed shape: the pool is the [[bruteForceKnn]] join +
-    * window (top poolFactor·k per query by relevance — at deployment
+    * window (top 4·k per query by relevance — at deployment
     * scale, any of the s02–s10 ANN paths produces the same
     * (query, candidate, rel, vector) frame); the greedy selection then
-    * runs per query over ≤ poolFactor·k rows inside one
+    * runs per query over ≤ 4·k rows inside one
     * `flatMapGroups` — O(k·pool·dim) work on ~20 rows, no cross-query
     * state, no driver involvement.
     *
@@ -2459,9 +2466,9 @@ object Similarity {
     * lowest id. DuckDB replays the identical selection as an unrolled
     * per-step CTE chain (anti-join exclusion + MAX-over-selected +
     * struct-min argmax), so the gate pins every pick of every step. */
-  def mmrKnn(queries: DataFrame, corpus: DataFrame, k: Int,
-             lambdaRel: Double = 0.7, poolFactor: Int = 4): DataFrame = {
+  def mmrKnn(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     import corpus.sparkSession.implicits._
+    val (lambdaRel, poolFactor) = (0.7, 4)
     val q = queries.select(col("vec_id").as("query_id"),
       VectorOps.asDouble(col("embedding")).as("qv"))
       .withColumn("qn", VectorOps.norm(col("qv")))

@@ -1024,7 +1024,7 @@ object StarQueries {
           "qty_lo"     -> ("sum", qtyLo),
           "line_count" -> ("count", lit(1)),
           "max_qty"    -> ("max", col("l_quantity"))),
-        distributeBy = col("l_orderkey"), buckets = 16)
+        distributeBy = col("l_orderkey"))
       .select(col("l_returnflag"),
         graft.functions.DecimalSums.fromParts(col("qty_hi"), col("qty_lo"))
           .cast(DoubleType).as("sum_qty"),
@@ -1057,7 +1057,7 @@ object StarQueries {
           col("l_quantity"), col("l_extendedprice"), col("l_discount")),
         Tables.part(spark, dir).select(
           col("p_partkey").as("partkey"), col("p_brand")),
-        key = "partkey", distributeBy = col("l_orderkey"), buckets = 16)
+        key = "partkey", distributeBy = col("l_orderkey"))
       .groupBy(col("p_brand"))
       .agg(
         dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))

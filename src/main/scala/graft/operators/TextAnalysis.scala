@@ -682,7 +682,7 @@ object TextAnalysis {
 
   /** Train/test contamination scan — the decontamination pass every
     * LLM training pipeline runs before evaluation is trustable: find
-    * test-split documents sharing word n-grams with any train-split
+    * test-split documents sharing word 5-grams with any train-split
     * document. The split is [[Pipeline.p04HashSplit]]'s deterministic
     * md5 bucketing (so the scan is stable across engines and re-runs);
     * shingling reuses [[Dedup.shingleTokens]] (distinct n-grams,
@@ -696,7 +696,7 @@ object TextAnalysis {
     * shared by k train docs costs k rows per matching test gram, which
     * the cap bounds; the gate runs uncapped because the oracle is
     * exact. */
-  def decontaminate(docs: DataFrame, n: Int = 5,
+  def decontaminate(docs: DataFrame,
                     maxShingleFreq: Option[Long] = None): DataFrame = {
     // THE canonical split (single owner: Pipeline) — t13 must scan the
     // same train/test frontier the rest of the pipeline uses
@@ -709,7 +709,7 @@ object TextAnalysis {
     // pinned here is (doc_id, split, int64) rows, not text
     val sh0 = tagged
       .select(col("doc_id"), col("split"),
-        explode(Dedup.shingleTokens(col("toks"), n)).as("s"))
+        explode(Dedup.shingleTokens(col("toks"), 5)).as("s"))
       .select(col("doc_id"), col("split"), xxhash64(col("s")).as("shingle"))
       .localCheckpoint(true)
     val sh = maxShingleFreq match {
@@ -745,7 +745,7 @@ object TextAnalysis {
 
   /** t13 — 5-gram test-vs-train contamination report. */
   def t13Decontamination(spark: SparkSession, dir: String): DataFrame =
-    decontaminate(Tables.documents(spark, dir), 5)
+    decontaminate(Tables.documents(spark, dir))
 
   /** t15 — the decontamination scan WITH the hot-shingle cap ENGAGED —
     * the 100 TB join-expansion guard made executable, not just a
@@ -766,7 +766,7 @@ object TextAnalysis {
     * documented, intended behavior of a capped approximation off its
     * measured corpus; the gate contract holds at the gate SF. */
   def t15DecontaminationCapped(spark: SparkSession, dir: String): DataFrame =
-    decontaminate(Tables.documents(spark, dir), 5, maxShingleFreq = Some(2))
+    decontaminate(Tables.documents(spark, dir), maxShingleFreq = Some(2))
 
   val t13Sql: String =
     """WITH b AS (
@@ -1018,17 +1018,16 @@ object TextAnalysis {
     *
     * Returns the learned merge table: (merge_rank, pair, merged,
     * pair_count). */
-  def bpeMergeTable(docs: DataFrame, k: Int = bpeMerges,
-                    passes: Int = bpeReplacePasses): Seq[(Int, String, String, Long)] =
-    bpeFit(docs, k, passes)._1
+  def bpeMergeTable(docs: DataFrame,
+                    k: Int = bpeMerges): Seq[(Int, String, String, Long)] =
+    bpeFit(docs, k)._1
 
   /** The fit with its post-merge vocabulary exposed: word → final
     * space-separated symbol sequence (what [[t20BpeEncode]] joins the
     * corpus against). Carrying `word` through the rounds changes
     * nothing about the learned sequence — pair counts read only
     * (freq, syms). */
-  def bpeFit(docs: DataFrame, k: Int = bpeMerges,
-             passes: Int = bpeReplacePasses)
+  def bpeFit(docs: DataFrame, k: Int = bpeMerges)
       : (Seq[(Int, String, String, Long)], DataFrame) = {
     var vocab = docs
       .select(explode(wsTokens(col("text"))).as("word"))
@@ -1053,7 +1052,7 @@ object TextAnalysis {
       val cnt = best.getLong(1)
       val merged = pair.replace(" ", "")
       merges += ((rank, pair, merged, cnt))
-      val applied = (1 to passes).foldLeft(col("syms")) { (c, _) =>
+      val applied = (1 to bpeReplacePasses).foldLeft(col("syms")) { (c, _) =>
         call_function("replace", c, lit(s" $pair "), lit(s" $merged "))
       }
       vocab = vocab.select(col("word"), col("freq"), applied.as("syms"))
@@ -1253,7 +1252,7 @@ object TextAnalysis {
   // -- vocabulary growth ------------------------------------------------------
 
   /** t19 — vocabulary-growth (Heaps-law) report over 3-GRAM types:
-    * ingest the corpus in doc-id order, split it into `buckets` equal
+    * ingest the corpus in doc-id order, split it into 20 equal
     * id-ranges, and report per bucket how many NEVER-SEEN-BEFORE
     * trigram types debut and the cumulative type inventory — the
     * corpus-health curve that tells a crawl whether new data still
@@ -1267,13 +1266,14 @@ object TextAnalysis {
     * "First seen" is an aggregate, not a scan-order dependence: a
     * type's debut bucket is bucket(min doc_id containing it) — one
     * exploded-shingle pass, one type-keyed min over the 8-byte hashed
-    * gram, one grouped count, and a `buckets`-row window for the
+    * gram, one grouped count, and a 20-row window for the
     * running total. All integers; the hash never surfaces (the oracle
     * uses the raw gram — the d02 collision argument). */
-  def vocabGrowth(docs: DataFrame, buckets: Int = 20): DataFrame = {
+  def vocabGrowth(docs: DataFrame): DataFrame = {
+    val buckets = 20
     val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
     val span = maxId / buckets + 1 // ids 0..maxId → buckets 0..buckets-1
-    val debut = Dedup.docShingles(docs, 3)
+    val debut = Dedup.docShingles(docs)
       .groupBy(col("shingle")).agg(min(col("doc_id")).as("first_id"))
       .select(expr(s"first_id DIV $span").as("bucket"))
     val w = org.apache.spark.sql.expressions.Window

@@ -82,9 +82,9 @@ object Report {
     }
   }
 
-  /** Render one bar chart to PNG bytes. */
-  def chartPng(panel: Panel, width: Int = 640, height: Int = 480): Array[Byte] =
-    panelsPng(Seq(panel), cols = 1, panelWidth = width, panelHeight = height)
+  /** Render one 640×480 bar chart to PNG bytes. */
+  def chartPng(panel: Panel): Array[Byte] =
+    panelsPng(Seq(panel), cols = 1)
 
   /** Render a grid of bar charts to one PNG — the reference's 2×2
     * `plt.subplots` figure shape (`spark_eda.py:395,560`). */
@@ -111,14 +111,13 @@ object Report {
   /** Bounded chart SINK for an aggregated frame: takes the top
     * `maxBars` rows of (labelCol, valueCol) under a deterministic total
     * order (value desc, label asc — same convention as every gate
-    * LIMIT) and writes one bar-chart PNG. The cap is the driver-safety
-    * contract: this sink can never collect more than `maxBars` rows. */
+    * LIMIT) and writes one 640×480 bar-chart PNG. The cap is the
+    * driver-safety contract: this sink can never collect more than
+    * `maxBars` rows. */
   def chartSink(df: DataFrame, labelCol: String, valueCol: String,
-                title: String, path: String, maxBars: Int = 20,
-                width: Int = 640, height: Int = 480): Unit =
+                title: String, path: String, maxBars: Int = 20): Unit =
     java.nio.file.Files.write(java.nio.file.Paths.get(path),
-      chartPng(Panel(title, topBars(df, labelCol, valueCol, maxBars)),
-        width, height))
+      chartPng(Panel(title, topBars(df, labelCol, valueCol, maxBars))))
 
   // ---------------------------------------------------------------------------
   // HTML report (convert_md_to_html.py's document shape, sans markdown dep)
@@ -148,11 +147,11 @@ object Report {
   /** Full styled HTML document around named report sections — the
     * document wrapper `convert_md_to_html.py:12-75` builds (title,
     * charset, body styling, h1/h2 rules), with DataFrame tables as the
-    * section bodies instead of converted markdown. */
-  def htmlReport(title: String, sections: Seq[(String, DataFrame)],
-                 maxRowsPerTable: Int = 1000): String = {
+    * section bodies instead of converted markdown; each table shows at
+    * most 1000 rows. */
+  def htmlReport(title: String, sections: Seq[(String, DataFrame)]): String = {
     val body = sections.map { case (name, df) =>
-      s"<h2>${esc(name)}</h2>\n${htmlTable(df, maxRowsPerTable)}"
+      s"<h2>${esc(name)}</h2>\n${htmlTable(df)}"
     }.mkString("\n")
     s"""<!DOCTYPE html>
        |<html>

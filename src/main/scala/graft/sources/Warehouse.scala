@@ -34,6 +34,9 @@ object Warehouse {
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
+  /** Output file size [[compact]] aims at (128 MiB). */
+  private val targetFileBytes = 128L * 1024 * 1024
+
   /** Small-file compaction — the standing maintenance job of any
     * long-lived parquet warehouse: streaming/append producers leave
     * thousands of KB-scale files per directory, and at 100 TB the
@@ -58,8 +61,7 @@ object Warehouse {
     * `name=value` partition directories is refused.
     *
     * Returns (filesBefore, filesAfter). */
-  def compact(spark: SparkSession, path: String,
-              targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
+  def compact(spark: SparkSession, path: String): (Int, Int) = {
     import java.nio.file.{Files, Path, Paths}
     import scala.jdk.CollectionConverters._
     // Files.walk streams hold open DirectoryStreams — materialize under
@@ -158,8 +160,7 @@ object Warehouse {
     * same rationale as [[compact]]'s flat-dir refusal.
     *
     * Returns (filesBefore, filesAfter) summed over leaves. */
-  def compactPartitions(spark: SparkSession, root: String,
-                        targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
+  def compactPartitions(spark: SparkSession, root: String): (Int, Int) = {
     import java.nio.file.{Files, Path, Paths}
     import scala.jdk.CollectionConverters._
     def children(p: Path): Seq[Path] = {
@@ -180,7 +181,7 @@ object Warehouse {
         Files.isDirectory(p) && p.getFileName.toString.contains("=")),
       s"compactPartitions: $root has no name=value partition " +
         "directories — use compact for flat directories")
-    val results = leafDirs(rootPath).map(l => compact(spark, l.toString, targetFileBytes))
+    val results = leafDirs(rootPath).map(l => compact(spark, l.toString))
     (results.map(_._1).sum, results.map(_._2).sum)
   }
 
@@ -926,12 +927,11 @@ object Warehouse {
     * convention). Scale: two partial-aggregated shuffles onto the bin
     * key (cardinality = value range / width, independent of row
     * count), one broadcast of the 3-scalar totals. */
-  def distributionDrift(old: DataFrame, neu: DataFrame, valueCol: String,
-                        binWidth: Long = psiBinWidth): DataFrame = {
+  def distributionDrift(old: DataFrame, neu: DataFrame, valueCol: String): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, coalesce, count,
       floor, lit, log, round, sum}
     def binned(df: DataFrame, nAs: String) = df
-      .select(floor(col(valueCol) / binWidth).cast("long").as("bin"))
+      .select(floor(col(valueCol) / psiBinWidth).cast("long").as("bin"))
       .groupBy(col("bin")).agg(count(lit(1)).as(nAs))
     val j = binned(old, "n_old")
       .join(binned(neu, "n_new"), Seq("bin"), "full_outer")
@@ -1039,7 +1039,7 @@ object Warehouse {
     * post-append directory inside the union and double-count the new
     * files. */
   def appendWithZoneStats(batch: DataFrame, root: String, zoneCol: String,
-                          stats: DataFrame, files: Int = 4): DataFrame = {
+                          stats: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{count, lit, max, min}
     val spark = batch.sparkSession
     // Hadoop FS, not java.nio: the rest of the zone-map layer works
@@ -1053,7 +1053,7 @@ object Warehouse {
         .filter(_.endsWith(".parquet")).toSet
     val before = listParquet()
     batch
-      .repartitionByRange(files, col(zoneCol))
+      .repartitionByRange(4, col(zoneCol))
       .sortWithinPartitions(col(zoneCol))
       .write.mode(SaveMode.Append).parquet(root)
     val fresh = (listParquet() -- before).toSeq.sorted
@@ -1171,7 +1171,7 @@ object Warehouse {
     * this is the standing-warehouse layout decision, made once at
     * write time and amortized over every subsequent join. */
   def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-                    buckets: Int, mode: SaveMode = SaveMode.Overwrite): Unit = {
+                    buckets: Int): Unit = {
     val spark = df.sparkSession
     // a managed-table LOCATION can outlive its catalog entry (the
     // default in-memory catalog dies with the session, the warehouse
@@ -1182,8 +1182,7 @@ object Warehouse {
     // cleanup assumes the session-per-process single-writer discipline
     // the repo already runs (sbt invocations are serialized; two JVMs
     // concurrently owning one table name would race here regardless)
-    if (mode == SaveMode.Overwrite && !table.contains(".") &&
-        !spark.catalog.tableExists(table)) {
+    if (!table.contains(".") && !spark.catalog.tableExists(table)) {
       val loc = new org.apache.hadoop.fs.Path(
         spark.conf.get("spark.sql.warehouse.dir"),
         table.toLowerCase(java.util.Locale.ROOT))
@@ -1200,7 +1199,7 @@ object Warehouse {
     // (bucket membership is a pure function of the column).
     df.repartition(buckets, df(bucketCol))
       .write
-      .mode(mode)
+      .mode(SaveMode.Overwrite)
       .bucketBy(buckets, bucketCol)
       .sortBy(bucketCol)
       .format("parquet")

@@ -38,7 +38,7 @@ object EventStreams {
   private val D = DecimalType(18, 4)
   private val tsFmt = "yyyy-MM-dd HH:mm:ss"
 
-  /** Default allowed event-time lateness. */
+  /** Allowed event-time lateness of every watermarked transform. */
   val defaultLateness = "15 minutes"
 
   // ---------------------------------------------------------------------------
@@ -48,9 +48,9 @@ object EventStreams {
   /** 10-minute tumbling counts+sums per event type. Append-mode capable:
     * a (window, type) result row is emitted once the watermark passes
     * window end. */
-  def tumblingCounts(events: DataFrame, lateness: String = defaultLateness): DataFrame =
+  def tumblingCounts(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", lateness)
+      .withWatermark("ts", defaultLateness)
       .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
       .agg(
         count(lit(1)).as("event_count"),
@@ -78,10 +78,9 @@ object EventStreams {
     * sentinel, user −1) still advance event time at the watermark
     * node, so windows close even when the last rows seen are
     * non-joining. */
-  def segmentRollup(events: DataFrame, customer: DataFrame,
-                    lateness: String = defaultLateness): DataFrame =
+  def segmentRollup(events: DataFrame, customer: DataFrame): DataFrame =
     events
-      .withWatermark("ts", lateness)
+      .withWatermark("ts", defaultLateness)
       .join(broadcast(customer.select(col("c_custkey").as("user_id"),
         col("c_mktsegment"))), Seq("user_id"))
       .groupBy(window(col("ts"), "10 minutes"), col("c_mktsegment"))
@@ -102,11 +101,10 @@ object EventStreams {
     * session) state and merges windows as late events arrive. Semantics
     * match the batch lag()-based sessionizer in EventQueries.v02Sessions
     * (same 30-min gap rule). */
-  def sessions(events: DataFrame, gap: String = "30 minutes",
-               lateness: String = defaultLateness): DataFrame =
+  def sessions(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", lateness)
-      .groupBy(col("user_id"), session_window(col("ts"), gap))
+      .withWatermark("ts", defaultLateness)
+      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(
         count(lit(1)).as("event_count"),
         date_format(min(col("ts")), tsFmt).as("session_start"),
@@ -124,11 +122,11 @@ object EventStreams {
     * watermark horizon — the streaming form of the batch
     * dropDuplicates in v03. Emits the first arrival, suppresses
     * duplicates arriving within the watermark delay. */
-  def minuteDedup(events: DataFrame, lateness: String = defaultLateness): DataFrame =
+  def minuteDedup(events: DataFrame): DataFrame =
     events
       .select(col("user_id"), col("event_type"),
         date_trunc("minute", col("ts")).as("minute"), col("ts"))
-      .withWatermark("ts", lateness)
+      .withWatermark("ts", defaultLateness)
       .dropDuplicatesWithinWatermark("user_id", "event_type", "minute")
       .select(col("user_id"), col("event_type"), col("minute"))
 
@@ -146,17 +144,21 @@ object EventStreams {
     * whole history. Semantics match the batch
     * EventQueries.v07AttributedPurchases (oracle-checked); equivalence
     * pinned in EventStreamsSpec. */
-  def attributedPurchases(events: DataFrame,
-                          lateness: String = defaultLateness,
-                          joinType: String = "inner"): DataFrame = {
+  def attributedPurchases(events: DataFrame): DataFrame =
+    attributionJoin(events, "inner")
+
+  /** The watermarked click⋈purchase interval join behind
+    * [[attributedPurchases]] (inner) and [[attributionFunnel]]
+    * (left outer). */
+  private def attributionJoin(events: DataFrame, joinType: String): DataFrame = {
     val clicks = events.filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"),
         col("ts").as("click_ts"))
-      .withWatermark("click_ts", lateness)
+      .withWatermark("click_ts", defaultLateness)
     val purchases = events.filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
         col("ts").as("purchase_ts"), col("value"))
-      .withWatermark("purchase_ts", lateness)
+      .withWatermark("purchase_ts", defaultLateness)
     clicks.join(purchases,
         col("user_id") === col("p_user") &&
           col("purchase_ts") >= col("click_ts") &&
@@ -173,9 +175,8 @@ object EventStreams {
     * watermark proves no in-window purchase can still arrive, i.e. the
     * null row for a click surfaces after the purchase-side watermark
     * passes click_ts + 30 min. Same state bound as the inner form. */
-  def attributionFunnel(events: DataFrame,
-                        lateness: String = defaultLateness): DataFrame =
-    attributedPurchases(events, lateness, "left_outer")
+  def attributionFunnel(events: DataFrame): DataFrame =
+    attributionJoin(events, "left_outer")
 
   // ---------------------------------------------------------------------------
   // Custom state: per-user running profile via flatMapGroupsWithState
@@ -200,48 +201,37 @@ object EventStreams {
   /** Per-user lifetime profile with explicit state — the escape hatch
     * for aggregations the built-in operators can't express (here:
     * first/last-seen span plus running totals, emitted incrementally).
-    * State: one UserState per user. Pass `idleTimeout = Some("1 hour")`
-    * in production so abandoned users don't pin memory forever; the
-    * default keeps timers off, which lets bounded replays terminate
-    * (processing-time timers force perpetual no-data micro-batches). */
-  def userProfiles(events: Dataset[Ev],
-                   idleTimeout: Option[String] = None): Dataset[UserProfile] = {
+    * State: one UserState per user, kept without timers: processing-time
+    * timers force perpetual no-data micro-batches, so a bounded replay
+    * would never settle. */
+  def userProfiles(events: Dataset[Ev]): Dataset[UserProfile] = {
     import events.sparkSession.implicits._
-    val timeoutConf = if (idleTimeout.isDefined)
-      GroupStateTimeout.ProcessingTimeTimeout() else GroupStateTimeout.NoTimeout()
     events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[UserState, UserProfile](
-        OutputMode.Append(), timeoutConf) {
+        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (userId: Long, rows: Iterator[Ev], state: GroupState[UserState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val prev = state.getOption.getOrElse(
-              UserState(0L, 0L, Long.MaxValue, Long.MinValue))
-            // integer accumulation in ten-thousandths: micro-batch
-            // boundaries are not deterministic, so the state must not
-            // round between batches (see UserState doc)
-            var n = prev.events
-            var totE4 = prev.totalValueE4
-            var first = prev.firstTs
-            var last = prev.lastTs
-            rows.foreach { e =>
-              n += 1
-              totE4 += BigDecimal(e.value)
-                .setScale(4, BigDecimal.RoundingMode.HALF_UP)
-                .bigDecimal.unscaledValue.longValueExact()
-              val t = e.ts.getTime
-              if (t < first) first = t
-              if (t > last) last = t
-            }
-            val next = UserState(n, totE4, first, last)
-            state.update(next)
-            idleTimeout.foreach(state.setTimeoutDuration)
-            Iterator.single(UserProfile(
-              userId, n, totE4 / 1e4, (last - first) / 1000.0))
+          val prev = state.getOption.getOrElse(
+            UserState(0L, 0L, Long.MaxValue, Long.MinValue))
+          // integer accumulation in ten-thousandths: micro-batch
+          // boundaries are not deterministic, so the state must not
+          // round between batches (see UserState doc)
+          var n = prev.events
+          var totE4 = prev.totalValueE4
+          var first = prev.firstTs
+          var last = prev.lastTs
+          rows.foreach { e =>
+            n += 1
+            totE4 += BigDecimal(e.value)
+              .setScale(4, BigDecimal.RoundingMode.HALF_UP)
+              .bigDecimal.unscaledValue.longValueExact()
+            val t = e.ts.getTime
+            if (t < first) first = t
+            if (t > last) last = t
           }
+          state.update(UserState(n, totE4, first, last))
+          Iterator.single(UserProfile(
+            userId, n, totE4 / 1e4, (last - first) / 1000.0))
       }
   }
 
@@ -302,10 +292,9 @@ object EventStreams {
     * goes quiet and returns continues its baseline exactly like the
     * batch ROWS frame over observed hours. State per key is O(6)
     * longs — watermark-independent, unconditionally bounded. */
-  def spikeHourly(events: Dataset[Ev],
-                  lateness: String = defaultLateness): Dataset[SpikeRow] = {
+  def spikeHourly(events: Dataset[Ev]): Dataset[SpikeRow] = {
     import events.sparkSession.implicits._
-    events.toDF().withWatermark("ts", lateness).as[Ev]
+    events.toDF().withWatermark("ts", defaultLateness).as[Ev]
       .groupByKey(_.event_type)
       .flatMapGroupsWithState[HourState, SpikeRow](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
@@ -626,7 +615,7 @@ object EventStreams {
       stage(ev.filter(col("ts") < lit(cut1)))
       stage(ev.filter(col("ts") >= lit(cut1) && col("ts") < lit(cut2)))
       def start() = sinkToWarehouse(
-        tumblingCounts(readEvents(spark, src, maxFilesPerTrigger = 1)), out, ckpt)
+        tumblingCounts(readEvents(spark, src)), out, ckpt)
       val q1 = start()
       try q1.processAllAvailable() finally q1.stop()
       // the rest of the stream (and the flush sentinel) lands while down
@@ -652,14 +641,13 @@ object EventStreams {
       "event_type STRING, value DOUBLE, props STRING"
 
   /** Unbounded file-source reader for an events directory: new parquet
-    * files appearing under `dir` become micro-batches. `maxFilesPerTrigger`
-    * bounds batch size so one huge backlog file can't blow executor
-    * memory at 100 TB replay. */
-  def readEvents(spark: SparkSession, dir: String,
-                 maxFilesPerTrigger: Int = 16): DataFrame =
+    * files appearing under `dir` become micro-batches, one file per
+    * batch, so one huge backlog can't blow executor memory at 100 TB
+    * replay. */
+  def readEvents(spark: SparkSession, dir: String): DataFrame =
     spark.readStream
       .schema(eventsSchemaDdl)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("maxFilesPerTrigger", 1)
       .parquet(dir)
 
   /** Production sink: land a streaming result in the parquet warehouse

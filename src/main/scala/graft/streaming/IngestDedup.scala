@@ -32,9 +32,9 @@ import graft.operators.Dedup.MinHashParams
   * O(batch + candidates), never O(corpus). The index grows with the
   * corpus but is only ever equi-joined (production stores it bucketed
   * by `bucket`, and the text store bucketed by `doc_id`, so both joins
-  * are bucket-pruned); degenerate boilerplate buckets are bounded by
-  * the same hot-bucket cap as the batch path (`maxBucketSize`,
-  * d11-gate-proven). Both landings partition by `batch_id` and use
+  * are bucket-pruned). The sink runs without the batch path's
+  * hot-bucket cap (`maxBucketSize`, d11-gate-proven): no bucket of the
+  * v18 gate's corpus is hot. Both landings partition by `batch_id` and use
   * dynamic partition overwrite, so a retried micro-batch overwrites its
   * own partition instead of duplicating it (exactly-once, the
   * [[EventStreams.sinkToWarehouse]] pattern), and the index read
@@ -58,13 +58,12 @@ object IngestDedup {
     "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
 
   /** Unbounded file-source reader for a documents directory: new
-    * parquet files become micro-batches; `maxFilesPerTrigger` bounds
-    * batch size so one backlog file cannot blow executor memory. */
-  def readDocs(spark: SparkSession, dir: String,
-               maxFilesPerTrigger: Int = 1): DataFrame =
+    * parquet files become micro-batches, one file per batch, so one
+    * backlog file cannot blow executor memory. */
+  def readDocs(spark: SparkSession, dir: String): DataFrame =
     spark.readStream
       .schema(StructType.fromDDL(docsSchemaDdl))
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("maxFilesPerTrigger", 1)
       .parquet(dir)
 
   private def readStateOrEmpty(spark: SparkSession, dir: String,
@@ -149,11 +148,12 @@ object IngestDedup {
 
   /** Start the deduplicating ingest: survivors land under `outDir`,
     * the seen-docs index under `indexDir` (both batch_id-partitioned,
-    * see class doc for the exactly-once argument). */
+    * see class doc for the exactly-once argument). A document is a
+    * near-duplicate at shingle-Jaccard ≥ 0.8 (the d-family gates'
+    * threshold); `p` are the MinHash dials the index is signed with. */
   def dedupingSink(streamed: DataFrame, outDir: String, indexDir: String,
-                   checkpointDir: String, threshold: Double = 0.8,
-                   p: MinHashParams = MinHashParams(), n: Int = 3,
-                   maxBucketSize: Option[Long] = None): StreamingQuery =
+                   checkpointDir: String,
+                   p: MinHashParams = MinHashParams()): StreamingQuery =
     streamed.writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append())
@@ -166,11 +166,11 @@ object IngestDedup {
         // dials would silently match nothing and land near-dups as
         // survivors. First batch records the dials; every batch checks.
         checkSigningMeta(spark, indexDir,
-          s"minhash ${p.numHashes} ${p.bandRows} $n")
+          s"minhash ${p.numHashes} ${p.bandRows} ${Dedup.shingleN}")
         // one signature pass over the BATCH only; three consumers
         // (candidate probe, within-batch authority side, index landing)
         // — materialize once
-        val mine = Dedup.bucketIndex(docs, p, n).localCheckpoint(true)
+        val mine = Dedup.bucketIndex(docs, p).localCheckpoint(true)
         val seenBuckets = readStateOrEmpty(spark, s"$indexDir/buckets",
           "doc_id BIGINT, band INT, bucket BIGINT", id)
           .select(col("doc_id"), col("band"), col("bucket"))
@@ -178,11 +178,8 @@ object IngestDedup {
           "doc_id BIGINT, text STRING", id)
           .select(col("doc_id"), col("text"))
         // authorities: any smaller-id doc — seen in an earlier batch or
-        // earlier in this one. The hot-bucket cap (when engaged) counts
-        // populations over the COMBINED frame, exactly the batch path's
-        // accounting.
-        val authorities = Dedup.capBuckets(
-          seenBuckets.unionByName(mine), maxBucketSize)
+        // earlier in this one
+        val authorities = seenBuckets.unionByName(mine)
         val cand = mine.as("a")
           .join(authorities.as("b"),
             col("a.band") === col("b.band") &&
@@ -191,7 +188,7 @@ object IngestDedup {
           .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
           .distinct()
         val rejected = Dedup.verifyPairs(cand,
-            docs.unionByName(seenText), threshold, n)
+            docs.unionByName(seenText), 0.8)
           .select(col("id_a").as("doc_id")).distinct()
         landPartitioned(batch.join(rejected, Seq("doc_id"), "left_anti"),
           id, outDir)
@@ -249,12 +246,14 @@ object IngestDedup {
     "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
 
   /** Unbounded file-source reader for an embeddings directory. */
-  def readVecs(spark: SparkSession, dir: String,
-               maxFilesPerTrigger: Int = 1): DataFrame =
+  def readVecs(spark: SparkSession, dir: String): DataFrame =
     spark.readStream
       .schema(StructType.fromDDL(vecsSchemaDdl))
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("maxFilesPerTrigger", 1)
       .parquet(dir)
+
+  /** LSH bands of [[semanticDedupingSink]]'s index. */
+  private val semanticBands = 24
 
   /** Streamed SEMANTIC ingest dedup — [[dedupingSink]]'s embedding
     * twin, same warehouse-as-state pattern with the banded hyperplane
@@ -267,11 +266,12 @@ object IngestDedup {
     *    cosine verification of candidates.
     *
     * A vector LANDS only if no smaller-id vector seen so far sits at
-    * cosine ≥ `threshold` (min-id-wins); rejected vectors still become
+    * cosine ≥ 0.45 (min-id-wins); rejected vectors still become
     * authorities. Per-batch cost is O(batch + candidates): the batch
     * buckets only its own vectors and equi-joins the stored index.
-    * The default dials are the d13 gate's (24 bands × 3 planes, the
-    * setting DedupSpec pins to recall 1 at 0.45 on the gate corpus) —
+    * The dials are the d13 gate's (24 bands × 3 planes, the setting
+    * DedupSpec pins to recall 1 at 0.45 on the gate corpus, seed 42,
+    * hot buckets capped at 4096 rows) —
     * that pin is exactly what makes the exact-all-pairs oracle sound
     * for the streamed gate: LSH discoverability of a pair depends only
     * on the two vectors, never on batching.
@@ -290,15 +290,12 @@ object IngestDedup {
     * pins both the bit-identity and survivor-set invariance across a
     * mid-stream re-bucket). At gate scale `lshPlanesFor` floors at the
     * d13 dials' b = 3, so the v30 hash gate is parameter-stable; a
-    * deployment holding boundary recall raises `bands` as depth grows
-    * (the [[graft.operators.Dedup.embeddingNearDupPairsLSH]] E2LSH
-    * note). */
+    * deployment holding boundary recall raises the band count as depth
+    * grows (the [[graft.operators.Dedup.embeddingNearDupPairsLSH]]
+    * E2LSH note). */
   def semanticDedupingSink(streamed: DataFrame, outDir: String,
                            indexDir: String, checkpointDir: String,
-                           threshold: Double = 0.45, bands: Int = 24,
-                           planesPerBand: Option[Int] = None,
-                           seed: Long = 42L,
-                           maxBucketSize: Option[Long] = Some(4096L)): StreamingQuery =
+                           planesPerBand: Option[Int] = None): StreamingQuery =
     streamed.writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append())
@@ -314,25 +311,25 @@ object IngestDedup {
         // batch's buckets and the index's are always join-compatible
         val meta = readPlanesMeta(spark, indexDir)
         meta.foreach { case (_, b) =>
-          require(b == bands,
-            s"index at $indexDir is signed with $b bands, sink runs $bands" +
+          require(b == semanticBands,
+            s"index at $indexDir is signed with $b bands, sink runs $semanticBands" +
               " — change neither mid-index, or re-bucket offline first")
         }
         val depth = planesPerBand match {
           case Some(d) =>
             // explicit mode still RECORDS its signing so an auto-mode
             // resume (or an offline re-bucket) knows the stored depth
-            if (meta.isEmpty) writePlanesMeta(spark, indexDir, d, bands)
+            if (meta.isEmpty) writePlanesMeta(spark, indexDir, d, semanticBands)
             d
           case None =>
             val want = Dedup.lshPlanesFor(seenVecs.count() + vecs.count())
             meta match {
               case Some((have, _)) if want > have =>
-                Dedup.rebucketIndex(spark, indexDir, bands, want, seed)
+                Dedup.rebucketIndex(spark, indexDir, semanticBands, want)
                 want
               case Some((have, _)) => have // never shrink below stored depth
               case None if seenVecs.isEmpty =>
-                writePlanesMeta(spark, indexDir, want, bands)
+                writePlanesMeta(spark, indexDir, want, semanticBands)
                 want
               case None =>
                 // committed rows exist but their signing is unrecorded
@@ -340,11 +337,11 @@ object IngestDedup {
                 // move is to re-sign everything at `want` — rebucket is
                 // idempotent, depth-agnostic about the old rows, and
                 // writes the meta last
-                Dedup.rebucketIndex(spark, indexDir, bands, want, seed)
+                Dedup.rebucketIndex(spark, indexDir, semanticBands, want)
                 want
             }
         }
-        val mine = Dedup.embeddingBucketIndex(vecs, bands, depth, seed)
+        val mine = Dedup.embeddingBucketIndex(vecs, semanticBands, depth)
           .localCheckpoint(true)
         val seenBuckets = readStateOrEmpty(spark, s"$indexDir/buckets",
           "vec_id BIGINT, band INT, bucket BIGINT", id)
@@ -357,7 +354,7 @@ object IngestDedup {
         // (no organic bucket approaches it) and bounds every bucket's
         // pair contribution at 100 TB.
         val authorities = Dedup.capBuckets(
-          seenBuckets.unionByName(mine), maxBucketSize)
+          seenBuckets.unionByName(mine), Some(4096L))
         val cand = mine.as("a")
           .join(authorities.as("b"),
             col("a.band") === col("b.band") &&
@@ -374,7 +371,7 @@ object IngestDedup {
           .join(all.select(col("vec_id").as("id_b"), col("v").as("vb"),
             col("nrm").as("nb")), Seq("id_b"))
           .filter(graft.functions.VectorOps.dot(col("va"), col("vb")) /
-            (col("na") * col("nb")) >= threshold)
+            (col("na") * col("nb")) >= 0.45)
           .select(col("id_a").as("vec_id")).distinct()
         landPartitioned(batch.join(rejected, Seq("vec_id"), "left_anti"),
           id, outDir)

@@ -100,7 +100,7 @@ class ClusteringSpec extends SparkSpec {
       (0L, Seq(0.0f, 0.0f)), (1L, Seq(9.0f, 9.0f)), (2L, Seq(9.0f, 9.0f)),
       (3L, Seq(0.1f, 0.0f)), (4L, Seq(9.0f, 9.0f))
     ).toDF("vec_id", "embedding")
-    val a = Clustering.kmeansAssign(pts, k = 3, rounds = 4)
+    val a = Clustering.kmeansAssign(pts, k = 3)
       .as[(Long, Int)].collect().sortBy(_._1)
     assert(a.length == 5)
     // cell 2 (the starved twin) never receives a member

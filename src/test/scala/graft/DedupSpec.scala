@@ -39,7 +39,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("jaccardPairs finds the verbatim pair at j=1.0 and excludes unrelated docs") {
-    val pairs = Dedup.jaccardPairs(docs, 0.5, n = 3)
+    val pairs = Dedup.jaccardPairs(docs, 0.5)
       .as[(Long, Long, Double)].collect().toSet
     val exact = pairs.find(p => p._1 == 1L && p._2 == 3L)
     assert(exact.exists(_._3 == 1.0), s"expected (1,3,1.0) in $pairs")
@@ -77,9 +77,9 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhashDedupPairs matches exact jaccardPairs on the same corpus") {
-    val exact = Dedup.jaccardPairs(docs, 0.4, n = 3)
+    val exact = Dedup.jaccardPairs(docs, 0.4)
       .as[(Long, Long, Double)].collect().toSet
-    val lsh = Dedup.minhashDedupPairs(docs, 0.4, n = 3)
+    val lsh = Dedup.minhashDedupPairs(docs, 0.4)
       .as[(Long, Long, Double)].collect().toSet
     assert(lsh == exact)
   }
@@ -92,14 +92,14 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhashPairs: verbatim pair at distance 0, unrelated excluded") {
-    val pairs = Dedup.simhashPairs(docs, maxDist = 3)
+    val pairs = Dedup.simhashPairs(docs)
       .as[(Long, Long, Int)].collect().toSet
     assert(pairs.exists(p => p._1 == 1L && p._2 == 3L && p._3 == 0))
     assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L))
-    // the d04 gate family (md5 hex-digit bits, round 15): identical
-    // token multisets still collide at distance 0 and unrelated docs
-    // stay excluded — the semantic contract is family-independent
-    val md5Pairs = Dedup.simhashPairs(docs, maxDist = 3, md5Mode = true)
+    // the d04 gate family (md5 hex-digit bits, round 15, the only
+    // family): identical token multisets collide at distance 0 and
+    // unrelated docs stay excluded
+    val md5Pairs = Dedup.simhashPairs(docs)
       .as[(Long, Long, Int)].collect().toSet
     assert(md5Pairs.exists(p => p._1 == 1L && p._2 == 3L && p._3 == 0))
     assert(!md5Pairs.exists(p => p._1 == 4L || p._2 == 4L))
@@ -309,7 +309,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("hot-shingle guard drops high-frequency shingles before the join") {
-    val n = Dedup.docShingles(docs, n = 3, maxShingleFreq = Some(2L))
+    val n = Dedup.docShingles(docs, maxShingleFreq = Some(2L))
     // shingles travel as xxhash64 of the n-gram string — probe by hash
     def h(s: String): Long =
       spark.range(1).select(xxhash64(lit(s))).as[Long].head()
@@ -342,9 +342,9 @@ class DedupSpec extends SparkSpec {
   }
 
   test("capped minhashDedupPairs still equals exact when clusters fit the cap") {
-    val exact = Dedup.jaccardPairs(docs, 0.4, n = 3)
+    val exact = Dedup.jaccardPairs(docs, 0.4)
       .as[(Long, Long, Double)].collect().toSet
-    val capped = Dedup.minhashDedupPairs(docs, 0.4, n = 3,
+    val capped = Dedup.minhashDedupPairs(docs, 0.4,
       maxBucketSize = Some(32L))
       .as[(Long, Long, Double)].collect().toSet
     assert(capped == exact)

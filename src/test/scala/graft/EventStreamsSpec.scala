@@ -129,7 +129,7 @@ class EventStreamsSpec extends SparkSpec {
       qn += 1
       val name = s"stream_out_$qn"
       val q = EventStreams.tumblingCounts(
-          EventStreams.readEvents(spark, dir, maxFilesPerTrigger = 1))
+          EventStreams.readEvents(spark, dir))
         .writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Append()).start()
       q.processAllAvailable()
@@ -237,7 +237,7 @@ class EventStreamsSpec extends SparkSpec {
       ev.filter($"ts" >= c1 && $"ts" < c2).coalesce(1).write.mode("append").parquet(src)
       val q1 = EventStreams.sinkToWarehouse(
         EventStreams.tumblingCounts(
-          EventStreams.readEvents(spark, src, maxFilesPerTrigger = 1)),
+          EventStreams.readEvents(spark, src)),
         out, ckpt)
       q1.processAllAvailable()
       q1.stop() // "crash": the third file lands while the query is down
@@ -248,7 +248,7 @@ class EventStreamsSpec extends SparkSpec {
         .coalesce(1).write.mode("append").parquet(src)
       val q2 = EventStreams.sinkToWarehouse(
         EventStreams.tumblingCounts(
-          EventStreams.readEvents(spark, src, maxFilesPerTrigger = 1)),
+          EventStreams.readEvents(spark, src)),
         out, ckpt)
       q2.processAllAvailable()
       q2.stop()

@@ -92,7 +92,7 @@ class LayoutSpec extends SparkSpec {
     }
 
     val (zScan, zTotal) = scanSet(
-      Layout.zorderLayout(li, Seq("l_partkey", "l_suppkey"), bits = 8, numFiles = 16))
+      Layout.zorderLayout(li, Seq("l_partkey", "l_suppkey"), numFiles = 16))
     val (lScan, lTotal) = scanSet(
       li.repartitionByRange(16, $"l_partkey").sortWithinPartitions($"l_partkey"))
     assert(zTotal == 16 && lTotal == 16, s"expected 16 files, got $zTotal/$lTotal")
@@ -137,7 +137,7 @@ class LayoutSpec extends SparkSpec {
       meanRange
     }
     val z = Layout.zorderLayout(li, Seq("l_partkey", "l_suppkey"),
-      bits = 8, numFiles = 16)
+      numFiles = 16)
     val linear = li.repartitionByRange(16, $"l_partkey")
       .sortWithinPartitions($"l_partkey")
     // z-order: each of 16 files covers ~1/4 of each dimension's range

@@ -4,12 +4,16 @@ import java.io.File
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source-scan guard for query-scoped state and scale decisions:
-  * session conf overrides go through [[GraftSession.withConf]], scratch
-  * dirs through `Staging.scratch`, and width and broadcast decisions
-  * through [[ScalePolicy]], so a new `conf.set`/`conf.unset`,
-  * `createTempDirectory`, size-conditional broadcast or shuffle-width
-  * read in `src/main` fails here. The allowed sites, per file:
+/** Source-scan guard for query-scoped state, scale decisions and
+  * operator dials: session conf overrides go through
+  * [[GraftSession.withConf]], scratch dirs through `Staging.scratch`,
+  * and width and broadcast decisions through [[ScalePolicy]], so a new
+  * `conf.set`/`conf.unset`, `createTempDirectory`, size-conditional
+  * broadcast or shuffle-width read in `src/main` fails here. So does a
+  * new defaulted `def` parameter: each file may hold only the dials
+  * listed in `allowedDefaults` (every other operator value is a
+  * constant), and adding one means raising that file's allowance in
+  * the same change. The allowed state and scale sites, per file:
   *  - `GraftSession.scala`: `withConf`'s set, restore and unset;
   *  - `Tables.scala`: `events`' lazy-scan `nanosAsLong` set (it cannot
   *    be restored: the scan reads the conf at execution time);
@@ -39,15 +43,135 @@ class MutationSitesSpec extends AnyFunSuite {
     "graft/ScalePolicy.scala" -> Int.MaxValue,
     "graft/GraftSession.scala" -> Int.MaxValue)
 
+  /** Defaulted `def` parameters per file: the dials a query, bench or
+    * spec sets to more than one value, plus deployment names and
+    * SQL-function arities. */
+  private val allowedDefaults = Map(
+    "graft/ScalePolicy.scala" -> 1,
+    "graft/functions/RollingHash.scala" -> 2,
+    "graft/operators/Clustering.scala" -> 2,
+    "graft/operators/Cumulative.scala" -> 2,
+    "graft/operators/Dedup.scala" -> 21,
+    "graft/operators/Graph.scala" -> 7,
+    "graft/operators/Layout.scala" -> 1,
+    "graft/operators/Media.scala" -> 5,
+    "graft/operators/Pipeline.scala" -> 1,
+    "graft/operators/ScaleCorpus.scala" -> 3,
+    "graft/operators/Similarity.scala" -> 28,
+    "graft/operators/Skew.scala" -> 2,
+    "graft/operators/TextAnalysis.scala" -> 4,
+    "graft/sources/Report.scala" -> 6,
+    "graft/sources/Warehouse.scala" -> 3,
+    "graft/streaming/EventStreams.scala" -> 2,
+    "graft/streaming/IngestDedup.scala" -> 2)
+
   /** Code lines of `text` matching `pattern`, comments left out. */
   private def sites(text: String, pattern: scala.util.matching.Regex): Int =
     text.linesIterator.map(_.trim)
       .filterNot(l => l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
       .map(l => pattern.findAllIn(l.split("//", 2)(0)).size).sum
 
-  /** (path relative to src/main/scala, count) for every file with a site
-    * beyond its allowance. */
-  private def excess(pattern: scala.util.matching.Regex,
+  /** `text` with comments dropped and string and char literals emptied,
+    * so that only code reaches [[defaultedParams]]. */
+  private def codeOnly(text: String): String = {
+    val out = new StringBuilder
+    val n = text.length
+    var i = 0
+    while (i < n) {
+      if (text.startsWith("\"\"\"", i)) {
+        val j = text.indexOf("\"\"\"", i + 3)
+        i = if (j < 0) n else j + 3
+        out ++= "\"\""
+      } else if (text.charAt(i) == '"') {
+        var j = i + 1
+        while (j < n && text.charAt(j) != '"' && text.charAt(j) != '\n') {
+          if (text.charAt(j) == '\\') j += 1
+          j += 1
+        }
+        i = j + 1
+        out ++= "\"\""
+      } else if (text.startsWith("//", i)) {
+        val j = text.indexOf('\n', i)
+        i = if (j < 0) n else j
+      } else if (text.startsWith("/*", i)) {
+        val j = text.indexOf("*/", i + 2)
+        i = if (j < 0) n else j + 2
+        out += ' '
+      } else if (text.charAt(i) == '\'' && i + 2 < n && text.charAt(i + 2) == '\'') {
+        out ++= "'x'"
+        i += 3
+      } else {
+        out += text.charAt(i)
+        i += 1
+      }
+    }
+    out.toString
+  }
+
+  /** Defaulted parameters in the `def` parameter lists of `text`, over
+    * any number of lines: a parameter counts when it holds a `=` at
+    * bracket depth 0 that is not part of `=>`, `==`, `<=`, `>=` or `!=`. */
+  private def defaultedParams(text: String): Int = {
+    val code = codeOnly(text)
+    val n = code.length
+    def skipWs(k: Int): Int = {
+      var j = k
+      while (j < n && code.charAt(j).isWhitespace) j += 1
+      j
+    }
+    /** Index of the bracket that closes the one at `k`. */
+    def close(k: Int): Int = {
+      var (d, j) = (0, k)
+      while (j < n) {
+        val c = code.charAt(j)
+        if ("([{".indexOf(c) >= 0) d += 1
+        else if (")]}".indexOf(c) >= 0) {
+          d -= 1
+          if (d == 0) return j
+        }
+        j += 1
+      }
+      n
+    }
+    /** `list` cut at its depth-0 commas. */
+    def params(list: String): Seq[String] = {
+      val out = Seq.newBuilder[String]
+      var (d, from) = (0, 0)
+      list.indices.foreach { j =>
+        val c = list.charAt(j)
+        if ("([{".indexOf(c) >= 0) d += 1
+        else if (")]}".indexOf(c) >= 0) d -= 1
+        else if (c == ',' && d == 0) { out += list.substring(from, j); from = j + 1 }
+      }
+      (out += list.substring(from)).result()
+    }
+    def hasDefault(p: String): Boolean = {
+      var d = 0
+      p.indices.exists { j =>
+        val c = p.charAt(j)
+        if ("([{".indexOf(c) >= 0) d += 1
+        else if (")]}".indexOf(c) >= 0) d -= 1
+        c == '=' && d == 0 &&
+          (j == 0 || "=<>!".indexOf(p.charAt(j - 1)) < 0) &&
+          (j + 1 == p.length || "=>".indexOf(p.charAt(j + 1)) < 0)
+      }
+    }
+    raw"\bdef\s+(?:[\w$$]+|[^\s\w(\[:]+)".r.findAllMatchIn(code).map { m =>
+      var i = skipWs(m.end)
+      if (i < n && code.charAt(i) == '[') i = skipWs(close(i) + 1)
+      var count = 0
+      while (i < n && code.charAt(i) == '(') {
+        val j = close(i)
+        count += params(code.substring(i + 1, math.min(j, n))).count(hasDefault)
+        i = skipWs(j + 1)
+      }
+      count
+    }.sum
+  }
+
+  /** (path relative to src/main/scala, count) for every file whose
+    * `count` is beyond its allowance. */
+  private def excess(count: String => Int,
                      allowed: Map[String, Int]): Seq[(String, Int)] = {
     def scalaFiles(f: File): Seq[File] =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(scalaFiles)
@@ -56,7 +180,7 @@ class MutationSitesSpec extends AnyFunSuite {
     scalaFiles(root).flatMap { f =>
       val rel = root.toPath.relativize(f.toPath).toString.replace('\\', '/')
       val src = scala.io.Source.fromFile(f, "UTF-8")
-      val n = try sites(src.mkString, pattern) finally src.close()
+      val n = try count(src.mkString) finally src.close()
       if (n > allowed.getOrElse(rel, 0)) Some(rel -> n) else None
     }.sortBy(_._1)
   }
@@ -70,24 +194,31 @@ class MutationSitesSpec extends AnyFunSuite {
       .getOrElse(fail("src/main/scala not found above the working directory"))
 
   test("session conf is mutated only inside GraftSession.withConf (and Tables.events)") {
-    val extra = excess(confMutation, allowedConf)
+    val extra = excess(sites(_, confMutation), allowedConf)
     assert(extra.isEmpty,
       s"conf.set/unset outside the owners — use GraftSession.withConf: $extra")
   }
 
   test("scratch dirs are created only by Staging.scratch (and the two anchors)") {
-    val extra = excess(tempDir, allowedTempDirs)
+    val extra = excess(sites(_, tempDir), allowedTempDirs)
     assert(extra.isEmpty,
       s"createTempDirectory outside the owners — use Staging.scratch: $extra")
   }
 
   test("width and broadcast decisions are made only in ScalePolicy") {
-    val broadcasts = excess(sizeBroadcast, allowedBroadcast)
+    val broadcasts = excess(sites(_, sizeBroadcast), allowedBroadcast)
     assert(broadcasts.isEmpty,
       s"size-conditional broadcast outside ScalePolicy — use its envelopes: $broadcasts")
-    val widths = excess(widthRead, allowedWidth)
+    val widths = excess(sites(_, widthRead), allowedWidth)
     assert(widths.isEmpty,
       s"shuffle-width read outside ScalePolicy — use ScalePolicy.width: $widths")
+  }
+
+  test("no file gains a defaulted def parameter beyond its allowance") {
+    val extra = excess(defaultedParams, allowedDefaults)
+    assert(extra.isEmpty,
+      s"new operator dials — fold the value into a constant, or raise the " +
+        s"file's allowedDefaults entry with the reason: $extra")
   }
 
   test("the scan sees code sites and skips comments") {
@@ -113,5 +244,19 @@ class MutationSitesSpec extends AnyFunSuite {
         |val b = broadcast(offs) // broadcast else, unconditionally""".stripMargin
     assert(sites(scale, sizeBroadcast) == 5)
     assert(sites(scale, widthRead) == 2)
+    val defs =
+      """/** def doc(a: Int = 1) in scaladoc */
+        |// def line(a: Int = 1)
+        |def one(a: Int = 1, f: Int => Int = identity,
+        |        g: (Int, Int) => Boolean = _ == _): Int = a
+        |def two[T](x: T)(p: Boolean = 1 <= 2, q: String = "a = b, c")
+        |          (implicit s: Ordering[T]): Int = 0
+        |def none(f: Int => Int, eq: Boolean): Boolean = f(1) == 2
+        |val v = call(named = 3)
+        |def multi(
+        |    a: Int,
+        |    b: Map[String, Int] = Map("x" -> 1), // b: Int = 2
+        |    /* c: Int = 3, */ d: Long = 4L): Unit = ()""".stripMargin
+    assert(defaultedParams(defs) == 7)
   }
 }

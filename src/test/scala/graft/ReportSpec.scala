@@ -13,7 +13,7 @@ class ReportSpec extends SparkSpec {
   private val bars = Seq(("alpha", 100.0), ("beta", 50.0), ("gamma", 25.0))
 
   test("chartPng: decodable PNG, right dims, white ground, blue bars") {
-    val png = Report.chartPng(Panel("t", bars), width = 640, height = 480)
+    val png = Report.chartPng(Panel("t", bars))
     val img = ImageIO.read(new ByteArrayInputStream(png))
     assert(img.getWidth == 640 && img.getHeight == 480)
     assert(img.getRGB(639, 0) == java.awt.Color.WHITE.getRGB,

@@ -56,7 +56,7 @@ class RollingHashSpec extends SparkSpec {
       (3L, "PREFIX the quick brown fox jumps over the lazy dog and keeps running far"),
       (4L, "zzz completely unrelated bytes qqq with nothing shared at all yyy")
     ).toDF("doc_id", "text")
-    val pairs = Dedup.winnowPairs(docs, k = 8, minShared = 2)
+    val pairs = Dedup.winnowPairs(docs, k = 8)
       .as[(Long, Long, Long)].collect().toSet
     assert(pairs.exists(p => p._1 == 1L && p._2 == 2L && p._3 == 8L),
       s"verbatim pair must agree on all 8 bands: $pairs")

@@ -24,7 +24,7 @@ class ScaleCorpusSpec extends SparkSpec {
     byKey.agg(sum(col("pop") * (col("pop") - 1))).head().getLong(0) / 2
 
   private def shingleVolume(docs: DataFrame, freq: Option[Long]): Long =
-    pairVolume(Dedup.docShingles(docs, 3, freq)
+    pairVolume(Dedup.docShingles(docs, freq)
       .groupBy(col("shingle")).agg(count(lit(1)).as("pop")))
 
   test("replicas preserve structure: linear rows, no cross-replica dup floods") {

@@ -298,7 +298,7 @@ class TextAnalysisSpec extends SparkSpec {
     // every doc: one corpus-wide 5-gram + one unique trailing token
     val docs = ids.map(i => (i, s"alpha beta gamma delta epsilon unique$i"))
       .toDF("doc_id", "text")
-    val out = TextAnalysis.decontaminate(docs, 5).collect()
+    val out = TextAnalysis.decontaminate(docs).collect()
     assert(out.map(_.getLong(0)).toSeq == testIds, "every test doc is contaminated")
     out.foreach { r =>
       assert(r.getLong(1) == 2, "6 tokens yield two distinct 5-grams")
@@ -307,7 +307,7 @@ class TextAnalysisSpec extends SparkSpec {
       assert(r.getLong(4) == trainIds.size, "every train doc shares it")
     }
     // the hot-shingle cap drops the corpus-wide gram entirely
-    assert(TextAnalysis.decontaminate(docs, 5, Some(1L)).count() == 0)
+    assert(TextAnalysis.decontaminate(docs, Some(1L)).count() == 0)
   }
 
   test("decontaminate cap bounds join expansion on a stopword-heavy corpus") {
@@ -330,7 +330,7 @@ class TextAnalysisSpec extends SparkSpec {
       if (i == rareTrain) (i, "zz1 zz2 zz3 r1 r2 r3 r4 r5")
       else (i, s"the of and to in u$i")
     } :+ (testId, "the of and to in r1 r2 r3 r4 r5")).toDF("doc_id", "text")
-    val un = TextAnalysis.decontaminate(docs, 5)
+    val un = TextAnalysis.decontaminate(docs)
       .filter($"doc_id" === testId).head()
     // uncapped: the boilerplate gram joins the test doc to EVERY train
     // doc — the k-rows-per-test-gram expansion the cap exists to bound
@@ -342,7 +342,7 @@ class TextAnalysisSpec extends SparkSpec {
     // join, the rare gram (df = 2) survives — expansion collapses from
     // |train| rows to one while the DENOMINATOR stays the true gram
     // count (sizes are computed pre-cap)
-    val cp = TextAnalysis.decontaminate(docs, 5, Some(2L))
+    val cp = TextAnalysis.decontaminate(docs, Some(2L))
       .filter($"doc_id" === testId).head()
     assert(cp.getLong(1) == 6, "n_grams must not shrink under the cap")
     assert(cp.getLong(2) == 1, "only the rare gram survives the cap")

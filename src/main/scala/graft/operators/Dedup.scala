@@ -61,6 +61,20 @@ object Dedup {
         i => concat_ws(" ", (1 to n).map(k => element_at(toks, i + k)): _*))))
       .otherwise(array(concat_ws(" ", toks)))
 
+  /** DuckDB text of [[docShingles]] for the body of an `sh` (doc_id,
+    * shingle) CTE over `src`'s (doc_id, text): distinct word 3-grams,
+    * and a doc shorter than 3 tokens as its whole text, the
+    * [[shingleTokens]] rule. */
+  def sqlShingles(src: String): String =
+    s"""SELECT DISTINCT doc_id,
+       |         w[i.i] || ' ' || w[i.i+1] || ' ' || w[i.i+2] AS shingle
+       |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM $src
+       |        WHERE len(string_split(text, ' ')) >= 3)
+       |  CROSS JOIN LATERAL (SELECT unnest(range(1, len(w) - 1)) AS i) i
+       |  UNION ALL
+       |  SELECT doc_id, text AS shingle FROM $src
+       |  WHERE len(string_split(text, ' ')) < 3""".stripMargin
+
   /** (doc_id, tokens) with the split materialized once per row — and,
     * when the scan layout is narrower than the shuffle width, spread
     * first (round 15): tokenize + shingle-explode + the map-side
@@ -76,12 +90,12 @@ object Dedup {
     graft.ScalePolicy.spreadIfNarrow(docs, col("doc_id"), scan)
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
 
-  /** (doc_id, shingle) exploded, optionally dropping shingles hotter
-    * than maxShingleFreq (scale guard — see class doc).
+  /** (doc_id, shingle) exploded. The hot-shingle cap (scale guard —
+    * see class doc) is [[pairIntersections]]' posting-list filter.
     *
     * `shingle` is the xxhash64 of the n-gram STRING, hashed in the
     * projection right after the explode: every downstream shuffle
-    * (posting-list groupBy, hot-shingle count, anti-join) carries
+    * (posting-list groupBy, pair expansion, size joins) carries
     * 16-byte (long, long) rows instead of full n-gram strings — at
     * 3-gram × ~7-byte words that is ~2× fewer shuffle bytes, and the
     * sort/hash comparisons inside the exchanges become single-word
@@ -89,21 +103,10 @@ object Dedup {
     * (birthday-bounded: P ≈ m²/2⁶⁵ over m distinct shingles — ~3e-8
     * even at 10⁹ shingles), and the probabilistic paths re-verify
     * candidates against exact text anyway. */
-  def docShingles(docs: DataFrame,
-                  maxShingleFreq: Option[Long] = None): DataFrame = {
-    val sh = tokenized(docs)
+  def docShingles(docs: DataFrame): DataFrame =
+    tokenized(docs)
       .select(col("doc_id"), explode(shingleTokens(col("toks"), shingleN)).as("s"))
       .select(col("doc_id"), xxhash64(col("s")).as("shingle"))
-    maxShingleFreq match {
-      case None => sh
-      case Some(limit) =>
-        val hot = sh.groupBy(col("shingle"))
-          .agg(count(lit(1)).as("df"))
-          .filter(col("df") > limit)
-          .select(col("shingle"))
-        sh.join(hot, Seq("shingle"), "left_anti")
-    }
-  }
 
   // -- exact n-gram Jaccard ---------------------------------------------------
 
@@ -123,6 +126,24 @@ object Dedup {
           (col("sz_a") + col("sz_b") - col("inter")).cast(DoubleType))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
+
+  /** DuckDB text of [[pairIntersections]] and [[jaccardPairs]]' score
+    * over an `sh` (doc_id, shingle) CTE ([[sqlShingles]]): the CTEs
+    * `sizes` (doc_id, sz), `inter` (id_a < id_b, c = shared shingles)
+    * and `scored` (id_a, id_b, c, sz_a, sz_b, jaccard). Oracles filter
+    * or select `scored`; none joins `sizes` itself. */
+  val sqlScoredPairs: String =
+    """sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
+      |inter AS (
+      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
+      |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      |  GROUP BY 1, 2),
+      |scored AS (
+      |  SELECT id_a, id_b, c, sa.sz AS sz_a, sb.sz AS sz_b,
+      |         CAST(c AS DOUBLE) / CAST(sa.sz + sb.sz - c AS DOUBLE) AS jaccard
+      |  FROM inter
+      |    JOIN sizes sa ON id_a = sa.doc_id
+      |    JOIN sizes sb ON id_b = sb.doc_id)""".stripMargin
 
   /** The shared pair frame under every exact shingle-overlap scorer:
     * (id_a < id_b, inter, sz_a, sz_b) for every doc pair sharing at
@@ -993,6 +1014,21 @@ object Dedup {
     labels
   }
 
+  /** DuckDB text of [[dupClusters]] over a `pairs` (id_a, id_b) CTE, for
+    * a `WITH RECURSIVE`: `edges` both ways, `reach` (the transitive
+    * closure by recursive CTE) and `labels` (node, lbl = the least
+    * reachable id). */
+  val sqlClosure: String =
+    """edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+      |          UNION SELECT id_b, id_a FROM pairs),
+      |reach AS (
+      |  SELECT src, dst FROM edges
+      |  UNION
+      |  SELECT r.src, e2.dst FROM reach r JOIN edges e2 ON r.dst = e2.src),
+      |labels AS (
+      |  SELECT src AS node, least(src, MIN(dst)) AS lbl
+      |  FROM reach GROUP BY src)""".stripMargin
+
   // ---------------------------------------------------------------------------
   // Gate queries
   // ---------------------------------------------------------------------------
@@ -1025,27 +1061,12 @@ object Dedup {
       .orderBy(col("id_a"), col("id_b"))
 
   val d02Sql: String =
-    """WITH sh AS (
-      |  SELECT DISTINCT doc_id,
-      |         w[i.i] || ' ' || w[i.i+1] || ' ' || w[i.i+2] AS shingle
-      |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-      |        WHERE len(string_split(text, ' ')) >= 3)
-      |  CROSS JOIN LATERAL (SELECT unnest(range(1, len(w) - 1)) AS i) i
-      |  UNION ALL
-      |  SELECT doc_id, text AS shingle FROM documents
-      |  WHERE len(string_split(text, ' ')) < 3),
-      |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-      |inter AS (
-      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-      |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2)
-      |SELECT id_a, id_b,
-      |       ROUND(CAST(c AS DOUBLE) / CAST(sa.sz + sb.sz - c AS DOUBLE), 6)
-      |         AS jaccard_r
-      |FROM inter
-      |  JOIN sizes sa ON id_a = sa.doc_id
-      |  JOIN sizes sb ON id_b = sb.doc_id
-      |WHERE CAST(c AS DOUBLE) / CAST(sa.sz + sb.sz - c AS DOUBLE) >= 0.8
+    s"""WITH sh AS (
+      |  ${sqlShingles("documents")}),
+      |$sqlScoredPairs
+      |SELECT id_a, id_b, ROUND(jaccard, 6) AS jaccard_r
+      |FROM scored
+      |WHERE jaccard >= 0.8
       |ORDER BY id_a, id_b""".stripMargin
 
   /** Jaccard pairs WITH the hot-shingle cap engaged — the 100 TB scale
@@ -1059,29 +1080,14 @@ object Dedup {
       .orderBy(col("id_a"), col("id_b"))
 
   val d08Sql: String =
-    """WITH sh_all AS (
-      |  SELECT DISTINCT doc_id,
-      |         w[i.i] || ' ' || w[i.i+1] || ' ' || w[i.i+2] AS shingle
-      |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-      |        WHERE len(string_split(text, ' ')) >= 3)
-      |  CROSS JOIN LATERAL (SELECT unnest(range(1, len(w) - 1)) AS i) i
-      |  UNION ALL
-      |  SELECT doc_id, text AS shingle FROM documents
-      |  WHERE len(string_split(text, ' ')) < 3),
+    s"""WITH sh_all AS (
+      |  ${sqlShingles("documents")}),
       |hot AS (SELECT shingle FROM sh_all GROUP BY shingle HAVING COUNT(*) > 8),
       |sh AS (SELECT * FROM sh_all ANTI JOIN hot USING (shingle)),
-      |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-      |inter AS (
-      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-      |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2)
-      |SELECT id_a, id_b,
-      |       ROUND(CAST(c AS DOUBLE) / CAST(sa.sz + sb.sz - c AS DOUBLE), 6)
-      |         AS jaccard_r
-      |FROM inter
-      |  JOIN sizes sa ON id_a = sa.doc_id
-      |  JOIN sizes sb ON id_b = sb.doc_id
-      |WHERE CAST(c AS DOUBLE) / CAST(sa.sz + sb.sz - c AS DOUBLE) >= 0.8
+      |$sqlScoredPairs
+      |SELECT id_a, id_b, ROUND(jaccard, 6) AS jaccard_r
+      |FROM scored
+      |WHERE jaccard >= 0.8
       |ORDER BY id_a, id_b""".stripMargin
 
   /** d15 — one-sided containment pairs ≥ 0.8. On this corpus every
@@ -1098,27 +1104,14 @@ object Dedup {
       .orderBy(col("id_a"), col("id_b"))
 
   val d15Sql: String =
-    """WITH sh AS (
-      |  SELECT DISTINCT doc_id,
-      |         w[i.i] || ' ' || w[i.i+1] || ' ' || w[i.i+2] AS shingle
-      |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-      |        WHERE len(string_split(text, ' ')) >= 3)
-      |  CROSS JOIN LATERAL (SELECT unnest(range(1, len(w) - 1)) AS i) i
-      |  UNION ALL
-      |  SELECT doc_id, text AS shingle FROM documents
-      |  WHERE len(string_split(text, ' ')) < 3),
-      |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-      |inter AS (
-      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-      |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2)
+    s"""WITH sh AS (
+      |  ${sqlShingles("documents")}),
+      |$sqlScoredPairs
       |SELECT id_a, id_b,
-      |       ROUND(CAST(c AS DOUBLE) / CAST(LEAST(sa.sz, sb.sz) AS DOUBLE), 6)
+      |       ROUND(CAST(c AS DOUBLE) / CAST(LEAST(sz_a, sz_b) AS DOUBLE), 6)
       |         AS containment_r
-      |FROM inter
-      |  JOIN sizes sa ON id_a = sa.doc_id
-      |  JOIN sizes sb ON id_b = sb.doc_id
-      |WHERE CAST(c AS DOUBLE) / CAST(LEAST(sa.sz, sb.sz) AS DOUBLE) >= 0.8
+      |FROM scored
+      |WHERE CAST(c AS DOUBLE) / CAST(LEAST(sz_a, sz_b) AS DOUBLE) >= 0.8
       |ORDER BY id_a, id_b""".stripMargin
 
   /** MinHash-LSH near-dup pairs ≥ 0.8 — same oracle as d02: the LSH
@@ -1164,29 +1157,13 @@ object Dedup {
   }
 
   val d10Sql: String =
-    """WITH sh AS (
-      |  SELECT DISTINCT doc_id,
-      |         w[i.i] || ' ' || w[i.i+1] || ' ' || w[i.i+2] AS shingle
-      |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-      |        WHERE len(string_split(text, ' ')) >= 3)
-      |  CROSS JOIN LATERAL (SELECT unnest(range(1, len(w) - 1)) AS i) i
-      |  UNION ALL
-      |  SELECT doc_id, text AS shingle FROM documents
-      |  WHERE len(string_split(text, ' ')) < 3),
-      |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-      |split AS (SELECT 2 * MAX(doc_id) // 3 AS s FROM documents),
-      |inter AS (
-      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-      |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2)
-      |SELECT id_b AS doc_id, id_a AS dup_id,
-      |       ROUND(CAST(c AS DOUBLE) / CAST(sa.sz + sb.sz - c AS DOUBLE), 6)
-      |         AS jaccard_r
-      |FROM inter
-      |  JOIN sizes sa ON id_a = sa.doc_id
-      |  JOIN sizes sb ON id_b = sb.doc_id
-      |  CROSS JOIN split
-      |WHERE CAST(c AS DOUBLE) / CAST(sa.sz + sb.sz - c AS DOUBLE) >= 0.8
+    s"""WITH sh AS (
+      |  ${sqlShingles("documents")}),
+      |$sqlScoredPairs,
+      |split AS (SELECT 2 * MAX(doc_id) // 3 AS s FROM documents)
+      |SELECT id_b AS doc_id, id_a AS dup_id, ROUND(jaccard, 6) AS jaccard_r
+      |FROM scored CROSS JOIN split
+      |WHERE jaccard >= 0.8
       |  AND id_b >= s
       |ORDER BY doc_id, dup_id""".stripMargin
 
@@ -1450,8 +1427,7 @@ object Dedup {
   val d16Sql: String =
     s"""WITH sp AS (
       |  SELECT vec_id,
-      |    CASE WHEN bucket < 205 THEN 'train'
-      |         WHEN bucket < 230 THEN 'val' ELSE 'test' END AS split
+      |    ${Pipeline.sqlSplitOf("bucket")} AS split
       |  FROM (SELECT vec_id, ${Pipeline.sqlMd5Bucket("vec_id")} AS bucket
       |        FROM embeddings)),
       |h AS (SELECT e.vec_id, sp.split, e.embedding
@@ -1610,15 +1586,7 @@ object Dedup {
       |  JOIN emb ea ON ea.vec_id = cand.id_a
       |  JOIN emb eb ON eb.vec_id = cand.id_b
       |  WHERE list_cosine_similarity(ea.v, eb.v) >= 0.45),
-      |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-      |          UNION SELECT id_b, id_a FROM pairs),
-      |reach AS (
-      |  SELECT src, dst FROM edges
-      |  UNION
-      |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-      |labels AS (
-      |  SELECT src AS node, least(src, MIN(dst)) AS lbl
-      |  FROM reach GROUP BY src),
+      |$sqlClosure,
       |dropped AS (SELECT node FROM labels WHERE node <> lbl)
       |SELECT COUNT(*) AS kept_vecs,
       |  CAST(SUM(vec_id) AS BIGINT) AS kept_id_sum,
@@ -1627,20 +1595,12 @@ object Dedup {
       |WHERE vec_id NOT IN (SELECT node FROM dropped)""".stripMargin
 
   val d12Sql: String =
-    """WITH RECURSIVE pairs AS (
+    s"""WITH RECURSIVE pairs AS (
       |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
       |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
       |  WHERE list_cosine_similarity(a.embedding::DOUBLE[],
       |                               b.embedding::DOUBLE[]) >= 0.45),
-      |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-      |          UNION SELECT id_b, id_a FROM pairs),
-      |reach AS (
-      |  SELECT src, dst FROM edges
-      |  UNION
-      |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-      |labels AS (
-      |  SELECT src AS node, least(src, MIN(dst)) AS lbl
-      |  FROM reach GROUP BY src),
+      |$sqlClosure,
       |dropped AS (SELECT node FROM labels WHERE node <> lbl)
       |SELECT COUNT(*) AS kept_vecs,
       |  CAST(SUM(vec_id) AS BIGINT) AS kept_id_sum,
@@ -1669,34 +1629,11 @@ object Dedup {
   }
 
   val d09Sql: String =
-    """WITH RECURSIVE sh AS (
-      |  SELECT DISTINCT doc_id,
-      |         w[i.i] || ' ' || w[i.i+1] || ' ' || w[i.i+2] AS shingle
-      |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-      |        WHERE len(string_split(text, ' ')) >= 3)
-      |  CROSS JOIN LATERAL (SELECT unnest(range(1, len(w) - 1)) AS i) i
-      |  UNION ALL
-      |  SELECT doc_id, text AS shingle FROM documents
-      |  WHERE len(string_split(text, ' ')) < 3),
-      |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-      |inter AS (
-      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-      |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2),
-      |pairs AS (
-      |  SELECT id_a, id_b FROM inter
-      |    JOIN sizes sa ON id_a = sa.doc_id
-      |    JOIN sizes sb ON id_b = sb.doc_id
-      |  WHERE CAST(c AS DOUBLE) / CAST(sa.sz + sb.sz - c AS DOUBLE) >= 0.8),
-      |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-      |          UNION SELECT id_b, id_a FROM pairs),
-      |reach AS (
-      |  SELECT src, dst FROM edges
-      |  UNION
-      |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-      |labels AS (
-      |  SELECT src AS node, least(src, MIN(dst)) AS lbl
-      |  FROM reach GROUP BY src)
+    s"""WITH RECURSIVE sh AS (
+      |  ${sqlShingles("documents")}),
+      |$sqlScoredPairs,
+      |pairs AS (SELECT id_a, id_b FROM scored WHERE jaccard >= 0.8),
+      |$sqlClosure
       |SELECT lbl AS cluster_id,
       |  COUNT(*) AS cluster_size,
       |  CAST(SUM(node) AS BIGINT) AS member_id_sum,

@@ -640,7 +640,7 @@ object Media {
   // max(x0+1,·)/min(·,w) guards are inert on the fixture); the pixel
   // formula is frame 0 of [[Codec.pixel]]
   val m04Sql: String =
-    """WITH img AS (
+    s"""WITH img AS (
       |  SELECT doc_id AS id, 8 + doc_id % 24 AS w, 8 + (doc_id * 7) % 24 AS h
       |  FROM documents WHERE doc_id % 3 = 0 AND doc_id < 150),
       |blocks AS (
@@ -662,9 +662,7 @@ object Media {
       |vecs AS (SELECT id, list(mu ORDER BY b) AS v FROM blocks GROUP BY id),
       |scored AS (
       |  SELECT a.id AS query_id, b.id AS neighbor_id,
-      |         ROUND(list_inner_product(a.v, b.v) /
-      |               (sqrt(list_inner_product(a.v, a.v)) *
-      |                sqrt(list_inner_product(b.v, b.v))), 9) AS cosine
+      |         ${Similarity.sqlCosine9("a.v", "b.v")} AS cosine
       |  FROM vecs a JOIN vecs b ON a.id <> b.id)
       |SELECT query_id, CAST(rk AS INT) AS rk, neighbor_id
       |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id

@@ -120,34 +120,10 @@ object Pipeline {
        |qf AS (
        |  SELECT * FROM dd WHERE q >= $minQuality AND kept_tok >= $minKeptTokens),
        |sh AS (
-       |  SELECT DISTINCT doc_id,
-       |         w[i.i] || ' ' || w[i.i+1] || ' ' || w[i.i+2] AS shingle
-       |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM qf
-       |        WHERE len(string_split(text, ' ')) >= 3)
-       |  CROSS JOIN LATERAL (SELECT unnest(range(1, len(w) - 1)) AS i) i
-       |  UNION ALL
-       |  SELECT doc_id, text AS shingle FROM qf
-       |  WHERE len(string_split(text, ' ')) < 3),
-       |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-       |inter AS (
-       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-       |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
-       |pairs AS (
-       |  SELECT id_a, id_b FROM inter
-       |    JOIN sizes sa ON id_a = sa.doc_id
-       |    JOIN sizes sb ON id_b = sb.doc_id
-       |  WHERE CAST(c AS DOUBLE) / CAST(sa.sz + sb.sz - c AS DOUBLE)
-       |          >= $nearDupThreshold),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-       |          UNION SELECT id_b, id_a FROM pairs),
-       |reach AS (
-       |  SELECT src, dst FROM edges
-       |  UNION
-       |  SELECT r.src, e2.dst FROM reach r JOIN edges e2 ON r.dst = e2.src),
-       |labels AS (
-       |  SELECT src AS node, least(src, MIN(dst)) AS lbl
-       |  FROM reach GROUP BY src),
+       |  ${Dedup.sqlShingles("qf")}),
+       |${Dedup.sqlScoredPairs},
+       |pairs AS (SELECT id_a, id_b FROM scored WHERE jaccard >= $nearDupThreshold),
+       |${Dedup.sqlClosure},
        |dropped AS (SELECT node FROM labels WHERE node <> lbl),
        |fin AS (SELECT * FROM qf ANTI JOIN dropped ON doc_id = node)
        |SELECT CAST(0 AS INT) AS stage_id, 'ingest' AS stage,
@@ -161,10 +137,20 @@ object Pipeline {
   /** THE canonical md5 bucket (last two hex digits of md5(doc_id),
     * uniform over 0..255) — single owner for every deterministic
     * keep/split decision in the pipeline (p04 split, p06 mix, t13
-    * decontamination). Retuning the split means changing THIS and the
-    * oracle SQLs that mirror it, nowhere else. */
+    * decontamination). Retuning it means changing THIS and
+    * [[sqlMd5Bucket]], nowhere else. */
   def md5Bucket(idCol: Column): Column =
     conv(substring(md5(idCol.cast("string")), 31, 2), 16, 10).cast("int")
+
+  /** DuckDB text of [[md5Bucket]] — DuckDB has no base-16 conv(); the
+    * two hex digits are decoded by position in the hex alphabet
+    * instead, value-identical to the Spark side's conv(substr,16,10). */
+  def sqlMd5Bucket(id: String): String =
+    s"""CAST(16 * (strpos('0123456789abcdef',
+       |                  substring(md5(CAST($id AS VARCHAR)), 31, 1)) - 1)
+       |     +    (strpos('0123456789abcdef',
+       |                  substring(md5(CAST($id AS VARCHAR)), 32, 1)) - 1)
+       |  AS INT)""".stripMargin
 
   /** The canonical ~80/10/10 split over [[md5Bucket]]:
     * train < 205 (≈80.1%), val < 230 (≈9.8%), test otherwise (≈10.2%). */
@@ -172,6 +158,11 @@ object Pipeline {
     when(bucket < lit(205), lit("train"))
       .when(bucket < lit(230), lit("val"))
       .otherwise(lit("test"))
+
+  /** DuckDB text of [[splitOf]] over the SQL expression `bucket`. */
+  def sqlSplitOf(bucket: String): String =
+    s"""CASE WHEN $bucket < 205 THEN 'train'
+       |     WHEN $bucket < 230 THEN 'val' ELSE 'test' END""".stripMargin
 
   /** p04 — deterministic train/val/test split keyed on md5(doc_id):
     * the split a training pipeline needs to be STABLE across runs,
@@ -193,34 +184,13 @@ object Pipeline {
       .orderBy(col("doc_id"))
   }
 
-  /** DuckDB text of [[md5Bucket]] — DuckDB has no base-16 conv(); the
-    * two hex digits are decoded by position in the hex alphabet
-    * instead, value-identical to the Spark side's conv(substr,16,10).
-    * (The older oracle strings below inline this same text verbatim;
-    * new consumers should call THIS.) */
-  def sqlMd5Bucket(id: String): String =
-    s"""CAST(16 * (strpos('0123456789abcdef',
-       |                  substring(md5(CAST($id AS VARCHAR)), 31, 1)) - 1)
-       |     +    (strpos('0123456789abcdef',
-       |                  substring(md5(CAST($id AS VARCHAR)), 32, 1)) - 1)
-       |  AS INT)""".stripMargin
-
-  // DuckDB has no base-16 conv(); the two hex digits are decoded by
-  // position in the hex alphabet instead — value-identical to the
-  // Spark side's conv(substr, 16, 10).
   val p04Sql: String =
-    """WITH b AS (
+    s"""WITH b AS (
       |  SELECT doc_id,
-      |    CAST(16 * (strpos('0123456789abcdef',
-      |                      substring(md5(CAST(doc_id AS VARCHAR)), 31, 1)) - 1)
-      |         +    (strpos('0123456789abcdef',
-      |                      substring(md5(CAST(doc_id AS VARCHAR)), 32, 1)) - 1)
-      |      AS INT) AS bucket
+      |    ${sqlMd5Bucket("doc_id")} AS bucket
       |  FROM documents)
       |SELECT doc_id, bucket,
-      |  CASE WHEN bucket < 205 THEN 'train'
-      |       WHEN bucket < 230 THEN 'val'
-      |       ELSE 'test' END AS split
+      |  ${sqlSplitOf("bucket")} AS split
       |FROM b
       |ORDER BY doc_id""".stripMargin
 
@@ -268,13 +238,9 @@ object Pipeline {
   }
 
   val p06Sql: String =
-    """WITH b AS (
+    s"""WITH b AS (
       |  SELECT source,
-      |    CAST(16 * (strpos('0123456789abcdef',
-      |                      substring(md5(CAST(doc_id AS VARCHAR)), 31, 1)) - 1)
-      |         +    (strpos('0123456789abcdef',
-      |                      substring(md5(CAST(doc_id AS VARCHAR)), 32, 1)) - 1)
-      |      AS INT) AS bucket,
+      |    ${sqlMd5Bucket("doc_id")} AS bucket,
       |    (TRY_CAST(regexp_extract(source, '([0-9]+)', 1) AS INT) % 4 + 1) / 4.0
       |      AS rate
       |  FROM documents)
@@ -394,7 +360,7 @@ object Pipeline {
   }
 
   val p09Sql: String =
-    """WITH counts AS (
+    s"""WITH counts AS (
       |  SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY source),
       |m AS (SELECT MIN(n_docs) AS mn FROM counts),
       |rates AS (
@@ -404,11 +370,7 @@ object Pipeline {
       |  FROM counts CROSS JOIN m),
       |b AS (
       |  SELECT d.source, r.n_docs, r.temp_rate,
-      |    CAST(16 * (strpos('0123456789abcdef',
-      |                      substring(md5(CAST(d.doc_id AS VARCHAR)), 31, 1)) - 1)
-      |         +    (strpos('0123456789abcdef',
-      |                      substring(md5(CAST(d.doc_id AS VARCHAR)), 32, 1)) - 1)
-      |      AS INT) AS bucket
+      |    ${sqlMd5Bucket("d.doc_id")} AS bucket
       |  FROM documents d JOIN rates r USING (source))
       |SELECT source, n_docs, temp_rate,
       |  CAST(SUM(CASE WHEN bucket < temp_rate * 256 THEN 1 ELSE 0 END)
@@ -510,57 +472,23 @@ object Pipeline {
   // d09's recursive-CTE transitive closure feeding p04's md5 decode,
   // applied to the cluster head — per-document assignments pinned.
   val p10Sql: String =
-    """WITH RECURSIVE sh AS (
-      |  SELECT DISTINCT doc_id,
-      |         w[i.i] || ' ' || w[i.i+1] || ' ' || w[i.i+2] AS shingle
-      |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-      |        WHERE len(string_split(text, ' ')) >= 3)
-      |  CROSS JOIN LATERAL (SELECT unnest(range(1, len(w) - 1)) AS i) i
-      |  UNION ALL
-      |  SELECT doc_id, text AS shingle FROM documents
-      |  WHERE len(string_split(text, ' ')) < 3),
-      |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-      |inter AS (
-      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-      |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2),
-      |pairs AS (
-      |  SELECT id_a, id_b FROM inter
-      |    JOIN sizes sa ON id_a = sa.doc_id
-      |    JOIN sizes sb ON id_b = sb.doc_id
-      |  WHERE CAST(c AS DOUBLE) / CAST(sa.sz + sb.sz - c AS DOUBLE) >= 0.8),
-      |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-      |          UNION SELECT id_b, id_a FROM pairs),
-      |reach AS (
-      |  SELECT src, dst FROM edges
-      |  UNION
-      |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-      |labels AS (
-      |  SELECT src AS node, least(src, MIN(dst)) AS lbl
-      |  FROM reach GROUP BY src),
+    s"""WITH RECURSIVE sh AS (
+      |  ${Dedup.sqlShingles("documents")}),
+      |${Dedup.sqlScoredPairs},
+      |pairs AS (SELECT id_a, id_b FROM scored WHERE jaccard >= 0.8),
+      |${Dedup.sqlClosure},
       |heads AS (
       |  SELECT d.doc_id, COALESCE(l.lbl, d.doc_id) AS head_id
       |  FROM documents d LEFT JOIN labels l ON d.doc_id = l.node),
       |bk AS (
       |  SELECT doc_id, head_id,
-      |    CAST(16 * (strpos('0123456789abcdef',
-      |                      substring(md5(CAST(head_id AS VARCHAR)), 31, 1)) - 1)
-      |         +    (strpos('0123456789abcdef',
-      |                      substring(md5(CAST(head_id AS VARCHAR)), 32, 1)) - 1)
-      |      AS INT) AS hb,
-      |    CAST(16 * (strpos('0123456789abcdef',
-      |                      substring(md5(CAST(doc_id AS VARCHAR)), 31, 1)) - 1)
-      |         +    (strpos('0123456789abcdef',
-      |                      substring(md5(CAST(doc_id AS VARCHAR)), 32, 1)) - 1)
-      |      AS INT) AS ob
+      |    ${sqlMd5Bucket("head_id")} AS hb,
+      |    ${sqlMd5Bucket("doc_id")} AS ob
       |  FROM heads)
       |SELECT doc_id, head_id,
-      |  CASE WHEN hb < 205 THEN 'train'
-      |       WHEN hb < 230 THEN 'val' ELSE 'test' END AS split,
-      |  (CASE WHEN hb < 205 THEN 'train'
-      |        WHEN hb < 230 THEN 'val' ELSE 'test' END) <>
-      |  (CASE WHEN ob < 205 THEN 'train'
-      |        WHEN ob < 230 THEN 'val' ELSE 'test' END) AS regrouped
+      |  ${sqlSplitOf("hb")} AS split,
+      |  (${sqlSplitOf("hb")}) <>
+      |  (${sqlSplitOf("ob")}) AS regrouped
       |FROM bk
       |ORDER BY doc_id""".stripMargin
 
@@ -722,37 +650,13 @@ object Pipeline {
   val p12Sql: String = {
     import TextAnalysis.sqlQuality
     s"""WITH RECURSIVE sh AS (
-       |  SELECT DISTINCT doc_id,
-       |         w[i.i] || ' ' || w[i.i+1] || ' ' || w[i.i+2] AS shingle
-       |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-       |        WHERE len(string_split(text, ' ')) >= 3)
-       |  CROSS JOIN LATERAL (SELECT unnest(range(1, len(w) - 1)) AS i) i
-       |  UNION ALL
-       |  SELECT doc_id, text AS shingle FROM documents
-       |  WHERE len(string_split(text, ' ')) < 3),
-       |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-       |inter AS (
-       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-       |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
-       |pairs AS (
-       |  SELECT id_a, id_b FROM inter
-       |    JOIN sizes sa ON id_a = sa.doc_id
-       |    JOIN sizes sb ON id_b = sb.doc_id
-       |  WHERE CAST(c AS DOUBLE) / CAST(sa.sz + sb.sz - c AS DOUBLE) >= 0.8),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-       |          UNION SELECT id_b, id_a FROM pairs),
-       |reach AS (
-       |  SELECT src, dst FROM edges
-       |  UNION
-       |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-       |labels AS (
-       |  SELECT src AS node, least(src, MIN(dst)) AS lbl
-       |  FROM reach GROUP BY src),
+       |  ${Dedup.sqlShingles("documents")}),
+       |${Dedup.sqlScoredPairs},
+       |pairs AS (SELECT id_a, id_b FROM scored WHERE jaccard >= 0.8),
+       |${Dedup.sqlClosure},
        |sp AS (
        |  SELECT doc_id,
-       |    CASE WHEN hb < 205 THEN 'train'
-       |         WHEN hb < 230 THEN 'val' ELSE 'test' END AS split
+       |    ${sqlSplitOf("hb")} AS split
        |  FROM (SELECT d.doc_id,
        |          ${sqlMd5Bucket("COALESCE(l.lbl, d.doc_id)")} AS hb
        |        FROM documents d LEFT JOIN labels l ON d.doc_id = l.node)),

@@ -1421,9 +1421,7 @@ object Similarity {
        |  WHERE c.vec_id <> p.query_id),
        |scored AS (
        |  SELECT c.query_id, c.neighbor_id,
-       |         ROUND(list_inner_product(eq.v, en.v) /
-       |               (sqrt(list_inner_product(eq.v, eq.v)) *
-       |                sqrt(list_inner_product(en.v, en.v))), 9) AS cosine
+       |         ${sqlCosine9("eq.v", "en.v")} AS cosine
        |  FROM cand c
        |  JOIN emb eq ON eq.vec_id = c.query_id
        |  JOIN emb en ON en.vec_id = c.neighbor_id)
@@ -1642,9 +1640,7 @@ object Similarity {
        |  SELECT query_id, neighbor_id FROM (
        |    SELECT c.query_id, c.neighbor_id,
        |           ROW_NUMBER() OVER (PARTITION BY c.query_id ORDER BY
-       |             ROUND(list_inner_product(eq.v, en.v) /
-       |                   (sqrt(list_inner_product(eq.v, eq.v)) *
-       |                    sqrt(list_inner_product(en.v, en.v))), 9) DESC,
+       |             ${sqlCosine9("eq.v", "en.v")} DESC,
        |             c.neighbor_id) AS rk
        |    FROM cand c JOIN emb eq ON eq.vec_id = c.query_id
        |    JOIN emb en ON en.vec_id = c.neighbor_id) t
@@ -1672,19 +1668,12 @@ object Similarity {
        |  SELECT query_id, neighbor_id, rk FROM (
        |    SELECT p.query_id, p.neighbor_id,
        |           ROW_NUMBER() OVER (PARTITION BY p.query_id ORDER BY
-       |             ROUND(list_inner_product(eq.v, en.v) /
-       |                   (sqrt(list_inner_product(eq.v, eq.v)) *
-       |                    sqrt(list_inner_product(en.v, en.v))), 9) DESC,
+       |             ${sqlCosine9("eq.v", "en.v")} DESC,
        |             p.neighbor_id) AS rk
        |    FROM pool p JOIN emb eq ON eq.vec_id = p.query_id
        |    JOIN emb en ON en.vec_id = p.neighbor_id) t
        |  WHERE rk <= 5)
-       |SELECT f.query_id AS id_a, f.neighbor_id AS id_b,
-       |       CAST(f.rk AS INT) AS rk_ab, CAST(r.rk AS INT) AS rk_ba
-       |FROM knn f JOIN knn r
-       |  ON r.query_id = f.neighbor_id AND r.neighbor_id = f.query_id
-       |WHERE f.query_id < f.neighbor_id
-       |ORDER BY id_a, id_b""".stripMargin
+       |${sqlMutualPairs("query_id", "neighbor_id")}""".stripMargin
   }
 
   /** Corpus bucket histogram — exercises the bucketing shape the
@@ -1876,9 +1865,7 @@ object Similarity {
        |  WHERE crk <= $nprobe),
        |scored AS (
        |  SELECT p.query_id, f.vec_id AS neighbor_id,
-       |         ROUND(list_inner_product(eq.qv, en.v) /
-       |               (sqrt(list_inner_product(eq.qv, eq.qv)) *
-       |                sqrt(list_inner_product(en.v, en.v))), 9) AS cosine
+       |         ${sqlCosine9("eq.qv", "en.v")} AS cosine
        |  FROM probe p
        |  JOIN fin f ON f.cell = p.cell AND f.vec_id <> p.query_id
        |  JOIN q eq ON eq.query_id = p.query_id
@@ -1978,19 +1965,12 @@ object Similarity {
        |  SELECT query_id, neighbor_id, rk FROM (
        |    SELECT c.query_id, c.neighbor_id,
        |           ROW_NUMBER() OVER (PARTITION BY c.query_id ORDER BY
-       |             ROUND(list_inner_product(eq.v, en.v) /
-       |                   (sqrt(list_inner_product(eq.v, eq.v)) *
-       |                    sqrt(list_inner_product(en.v, en.v))), 9) DESC,
+       |             ${sqlCosine9("eq.v", "en.v")} DESC,
        |             c.neighbor_id) AS rk
        |    FROM cand c JOIN emb eq ON eq.vec_id = c.query_id
        |    JOIN emb en ON en.vec_id = c.neighbor_id) t
        |  WHERE rk <= 5)
-       |SELECT f.query_id AS id_a, f.neighbor_id AS id_b,
-       |       CAST(f.rk AS INT) AS rk_ab, CAST(r.rk AS INT) AS rk_ba
-       |FROM knn f JOIN knn r
-       |  ON r.query_id = f.neighbor_id AND r.neighbor_id = f.query_id
-       |WHERE f.query_id < f.neighbor_id
-       |ORDER BY id_a, id_b""".stripMargin
+       |${sqlMutualPairs("query_id", "neighbor_id")}""".stripMargin
   }
 
   /** s22: s21's chain with the pool-depth tail — directed lists cut at
@@ -2011,9 +1991,7 @@ object Similarity {
        |  SELECT query_id, neighbor_id FROM (
        |    SELECT c.query_id, c.neighbor_id,
        |           ROW_NUMBER() OVER (PARTITION BY c.query_id ORDER BY
-       |             ROUND(list_inner_product(eq.v, en.v) /
-       |                   (sqrt(list_inner_product(eq.v, eq.v)) *
-       |                    sqrt(list_inner_product(en.v, en.v))), 9) DESC,
+       |             ${sqlCosine9("eq.v", "en.v")} DESC,
        |             c.neighbor_id) AS rk
        |    FROM cand c JOIN emb eq ON eq.vec_id = c.query_id
        |    JOIN emb en ON en.vec_id = c.neighbor_id) t
@@ -2027,19 +2005,12 @@ object Similarity {
        |  SELECT query_id, neighbor_id, rk FROM (
        |    SELECT p.query_id, p.neighbor_id,
        |           ROW_NUMBER() OVER (PARTITION BY p.query_id ORDER BY
-       |             ROUND(list_inner_product(eq.v, en.v) /
-       |                   (sqrt(list_inner_product(eq.v, eq.v)) *
-       |                    sqrt(list_inner_product(en.v, en.v))), 9) DESC,
+       |             ${sqlCosine9("eq.v", "en.v")} DESC,
        |             p.neighbor_id) AS rk
        |    FROM pool p JOIN emb eq ON eq.vec_id = p.query_id
        |    JOIN emb en ON en.vec_id = p.neighbor_id) t
        |  WHERE rk <= 5)
-       |SELECT f.query_id AS id_a, f.neighbor_id AS id_b,
-       |       CAST(f.rk AS INT) AS rk_ab, CAST(r.rk AS INT) AS rk_ba
-       |FROM knn f JOIN knn r
-       |  ON r.query_id = f.neighbor_id AND r.neighbor_id = f.query_id
-       |WHERE f.query_id < f.neighbor_id
-       |ORDER BY id_a, id_b""".stripMargin
+       |${sqlMutualPairs("query_id", "neighbor_id")}""".stripMargin
   }
 
   /** The int8 quantization mirror: x → CAST(ROUND(x·(127/m)) AS
@@ -2067,6 +2038,24 @@ object Similarity {
        |              (sqrt(list_inner_product($a, $a)) *
        |               sqrt(list_inner_product($b, $b))) END""".stripMargin
 
+  /** DuckDB text of the round-9 cosine of list columns `a` and `b`
+    * that [[rankCandidates]] ranks on. */
+  private[operators] def sqlCosine9(a: String, b: String): String =
+    s"""ROUND(list_inner_product($a, $b) /
+       |      (sqrt(list_inner_product($a, $a)) *
+       |       sqrt(list_inner_product($b, $b))), 9)""".stripMargin
+
+  /** DuckDB text of [[mutualKnn]] over a `knn` (q, n, rk) CTE whose
+    * query and neighbor columns are named `q` and `n`: each pair
+    * (id_a < id_b) that both ends rank, with both ranks. */
+  private def sqlMutualPairs(q: String, n: String): String =
+    s"""SELECT f.$q AS id_a, f.$n AS id_b,
+       |       CAST(f.rk AS INT) AS rk_ab, CAST(r.rk AS INT) AS rk_ba
+       |FROM knn f JOIN knn r
+       |  ON r.$q = f.$n AND r.$n = f.$q
+       |WHERE f.$q < f.$n
+       |ORDER BY id_a, id_b""".stripMargin
+
   /** Exact round-9 cosine re-rank tail over a (query_id, neighbor_id)
     * candidate CTE — [[rankCandidates]]' mirror, shared by s06/s07. */
   private def sqlRerank(candCte: String, k: Int): String =
@@ -2074,9 +2063,7 @@ object Similarity {
        |FROM (
        |  SELECT c.query_id, c.neighbor_id,
        |         ROW_NUMBER() OVER (PARTITION BY c.query_id ORDER BY
-       |           ROUND(list_inner_product(eq.v, en.v) /
-       |                 (sqrt(list_inner_product(eq.v, eq.v)) *
-       |                  sqrt(list_inner_product(en.v, en.v))), 9) DESC,
+       |           ${sqlCosine9("eq.v", "en.v")} DESC,
        |           c.neighbor_id) AS rk
        |  FROM $candCte c JOIN emb eq ON eq.vec_id = c.query_id
        |  JOIN emb en ON en.vec_id = c.neighbor_id) t
@@ -2690,7 +2677,7 @@ object Similarity {
   }
 
   val s13Sql: String =
-    """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings),
+    s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings),
       |knn AS (
       |  SELECT a.vec_id AS q, b.vec_id AS n,
       |         ROW_NUMBER() OVER (PARTITION BY a.vec_id
@@ -2698,11 +2685,7 @@ object Similarity {
       |                    b.vec_id) AS rk
       |  FROM v a JOIN v b ON a.vec_id <> b.vec_id
       |  QUALIFY rk <= 5)
-      |SELECT f.q AS id_a, f.n AS id_b,
-      |       CAST(f.rk AS INT) AS rk_ab, CAST(r.rk AS INT) AS rk_ba
-      |FROM knn f JOIN knn r ON r.q = f.n AND r.n = f.q
-      |WHERE f.q < f.n
-      |ORDER BY id_a, id_b""".stripMargin
+      |${sqlMutualPairs("q", "n")}""".stripMargin
 
   /** Negatives per anchor in the s14 gate (mirrored in [[s14Sql]]). */
   val negativesPerAnchor = 3
@@ -2821,21 +2804,14 @@ object Similarity {
        |  SELECT query_id, neighbor_id, rk FROM (
        |    SELECT p.query_id, a.vec_id AS neighbor_id,
        |           ROW_NUMBER() OVER (PARTITION BY p.query_id
-       |             ORDER BY ROUND(list_inner_product(eq.v, en.v) /
-       |                      (sqrt(list_inner_product(eq.v, eq.v)) *
-       |                       sqrt(list_inner_product(en.v, en.v))), 9) DESC,
+       |             ORDER BY ${sqlCosine9("eq.v", "en.v")} DESC,
        |                      a.vec_id) AS rk
        |    FROM probe p
        |    JOIN asn a ON a.cell = p.cell AND a.vec_id <> p.query_id
        |    JOIN emb eq ON eq.vec_id = p.query_id
        |    JOIN emb en ON en.vec_id = a.vec_id) t
        |  WHERE rk <= 5)
-       |SELECT f.query_id AS id_a, f.neighbor_id AS id_b,
-       |       CAST(f.rk AS INT) AS rk_ab, CAST(r.rk AS INT) AS rk_ba
-       |FROM knn f JOIN knn r
-       |  ON r.query_id = f.neighbor_id AND r.neighbor_id = f.query_id
-       |WHERE f.query_id < f.neighbor_id
-       |ORDER BY id_a, id_b""".stripMargin
+       |${sqlMutualPairs("query_id", "neighbor_id")}""".stripMargin
 
   /** Pool count for the s16 bucketed negative draw (mirrored in
     * [[s16Sql]]): candidates are pooled by md5-bucket mod this, and an

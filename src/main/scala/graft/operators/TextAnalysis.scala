@@ -769,19 +769,13 @@ object TextAnalysis {
     decontaminate(Tables.documents(spark, dir), maxShingleFreq = Some(2))
 
   val t13Sql: String =
-    """WITH b AS (
+    s"""WITH b AS (
       |  SELECT doc_id, text,
-      |    CAST(16 * (strpos('0123456789abcdef',
-      |                      substring(md5(CAST(doc_id AS VARCHAR)), 31, 1)) - 1)
-      |         +    (strpos('0123456789abcdef',
-      |                      substring(md5(CAST(doc_id AS VARCHAR)), 32, 1)) - 1)
-      |      AS INT) AS bucket
+      |    ${Pipeline.sqlMd5Bucket("doc_id")} AS bucket
       |  FROM documents),
       |tagged AS (
       |  SELECT doc_id, text,
-      |    CASE WHEN bucket < 205 THEN 'train'
-      |         WHEN bucket < 230 THEN 'val'
-      |         ELSE 'test' END AS split
+      |    ${Pipeline.sqlSplitOf("bucket")} AS split
       |  FROM b),
       |sh AS (
       |  SELECT DISTINCT doc_id, split,
@@ -1288,19 +1282,10 @@ object TextAnalysis {
   def t19VocabGrowth(spark: SparkSession, dir: String): DataFrame =
     vocabGrowth(Tables.documents(spark, dir))
 
-  // the sh CTE is d02Sql's shingle frame verbatim (incl. the <3-token
-  // whole-text fallback docShingles applies)
   val t19Sql: String =
-    """WITH mx AS (SELECT MAX(doc_id) // 20 + 1 AS span FROM documents),
+    s"""WITH mx AS (SELECT MAX(doc_id) // 20 + 1 AS span FROM documents),
       |sh AS (
-      |  SELECT DISTINCT doc_id,
-      |         w[i.i] || ' ' || w[i.i+1] || ' ' || w[i.i+2] AS shingle
-      |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-      |        WHERE len(string_split(text, ' ')) >= 3)
-      |  CROSS JOIN LATERAL (SELECT unnest(range(1, len(w) - 1)) AS i) i
-      |  UNION ALL
-      |  SELECT doc_id, text AS shingle FROM documents
-      |  WHERE len(string_split(text, ' ')) < 3),
+      |  ${Dedup.sqlShingles("documents")}),
       |debut AS (
       |  SELECT shingle, MIN(doc_id) AS first_id FROM sh GROUP BY shingle),
       |b AS (

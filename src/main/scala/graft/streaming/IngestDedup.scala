@@ -431,25 +431,10 @@ object IngestDedup {
     * exact all-pairs shingle-Jaccard ≥ 0.8 pair (the pair CTE is
     * d02's). */
   val v18Sql: String =
-    """WITH sh AS (
-      |  SELECT DISTINCT doc_id,
-      |         w[i.i] || ' ' || w[i.i+1] || ' ' || w[i.i+2] AS shingle
-      |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents
-      |        WHERE len(string_split(text, ' ')) >= 3)
-      |  CROSS JOIN LATERAL (SELECT unnest(range(1, len(w) - 1)) AS i) i
-      |  UNION ALL
-      |  SELECT doc_id, text AS shingle FROM documents
-      |  WHERE len(string_split(text, ' ')) < 3),
-      |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-      |inter AS (
-      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-      |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2),
-      |rejected AS (
-      |  SELECT DISTINCT id_b FROM inter
-      |    JOIN sizes sa ON id_a = sa.doc_id
-      |    JOIN sizes sb ON id_b = sb.doc_id
-      |  WHERE CAST(c AS DOUBLE) / CAST(sa.sz + sb.sz - c AS DOUBLE) >= 0.8)
+    s"""WITH sh AS (
+      |  ${Dedup.sqlShingles("documents")}),
+      |${Dedup.sqlScoredPairs},
+      |rejected AS (SELECT DISTINCT id_b FROM scored WHERE jaccard >= 0.8)
       |SELECT doc_id, source, n_chars FROM documents
       |WHERE doc_id NOT IN (SELECT id_b FROM rejected)
       |ORDER BY doc_id""".stripMargin

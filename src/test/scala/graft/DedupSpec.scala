@@ -308,17 +308,6 @@ class DedupSpec extends SparkSpec {
       s"unexpected LSH refusal message: ${e3.getMessage}")
   }
 
-  test("hot-shingle guard drops high-frequency shingles before the join") {
-    val n = Dedup.docShingles(docs, maxShingleFreq = Some(2L))
-    // shingles travel as xxhash64 of the n-gram string — probe by hash
-    def h(s: String): Long =
-      spark.range(1).select(xxhash64(lit(s))).as[Long].head()
-    // "the quick brown" etc. appear in docs 1,2,3 (freq 3 > 2) → dropped
-    assert(n.filter($"shingle" === h("the quick brown")).count() == 0)
-    // doc-4-only shingles (freq 1) survive
-    assert(n.filter($"shingle" === h("completely different text")).count() == 1)
-  }
-
   test("hot-bucket cap bounds LSH candidates on a boilerplate-heavy corpus") {
     // 40 identical boilerplate docs = one degenerate duplicate cluster:
     // all 40 share every band bucket, so uncapped candidate generation

@@ -22,7 +22,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - `Bench.scala`: the IO anchor's fsync dir;
   *  - `ScalePolicy.scala` (width reads and broadcast envelopes) and
   *    `GraftSession.scala` (width reads): any number. Setting the width
-  *    through `withConf` is a write, not a read, and is not matched. */
+  *    through `withConf` is a write, not a read, and is not matched.
+  *
+  * Oracle SQL fragments that two oracles share have one `sql*` owner
+  * each (`ownedFragments`): a marker of the fragment's text anywhere
+  * but in its owner means a pasted copy. */
 class MutationSitesSpec extends AnyFunSuite {
 
   private val confMutation = raw"\bconf\.(set|unset)\(|\bsetConf(String)?\(".r
@@ -51,7 +55,7 @@ class MutationSitesSpec extends AnyFunSuite {
     "graft/functions/RollingHash.scala" -> 2,
     "graft/operators/Clustering.scala" -> 2,
     "graft/operators/Cumulative.scala" -> 2,
-    "graft/operators/Dedup.scala" -> 21,
+    "graft/operators/Dedup.scala" -> 20,
     "graft/operators/Graph.scala" -> 7,
     "graft/operators/Layout.scala" -> 1,
     "graft/operators/Media.scala" -> 5,
@@ -65,11 +69,41 @@ class MutationSitesSpec extends AnyFunSuite {
     "graft/streaming/EventStreams.scala" -> 2,
     "graft/streaming/IngestDedup.scala" -> 2)
 
+  /** Oracle fragments with one owner: (marker of its text, file that
+    * holds the owner, number of marker lines in that owner). */
+  private val ownedFragments = Seq(
+    // Dedup.sqlShingles
+    (raw"w\[i\.i\+2\] AS shingle", "graft/operators/Dedup.scala", 1),
+    // Dedup.sqlScoredPairs: sizes, inter, the Jaccard score, the sizes join
+    (raw"COUNT\(\*\) AS sz FROM sh\b", "graft/operators/Dedup.scala", 1),
+    (raw"a\.shingle = b\.shingle AND a\.doc_id < b\.doc_id", "graft/operators/Dedup.scala", 1),
+    (raw"sa\.sz \+ sb\.sz - c\b", "graft/operators/Dedup.scala", 1),
+    (raw"JOIN sizes sa ON id_a = sa\.doc_id", "graft/operators/Dedup.scala", 1),
+    // Dedup.sqlClosure
+    (raw"FROM reach r JOIN edges\b", "graft/operators/Dedup.scala", 1),
+    // Pipeline.sqlMd5Bucket: the two hex digits (d04's bit rule is another rule)
+    (raw"AS VARCHAR\)\), 3[12], 1\)", "graft/operators/Pipeline.scala", 2),
+    // Pipeline.sqlSplitOf
+    (raw"< 205 THEN 'train'", "graft/operators/Pipeline.scala", 1),
+    // Similarity.sqlCosine9
+    (raw"sqrt\(list_inner_product\((\S+), \1\)\)\), 9\)", "graft/operators/Similarity.scala", 1),
+    // Similarity.sqlMutualPairs
+    (raw"AS rk_ab, CAST\(r\.rk AS INT\) AS rk_ba", "graft/operators/Similarity.scala", 1)
+  ).map { case (m, f, n) => (m.r, f, n) }
+
   /** Code lines of `text` matching `pattern`, comments left out. */
   private def sites(text: String, pattern: scala.util.matching.Regex): Int =
     text.linesIterator.map(_.trim)
       .filterNot(l => l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
       .map(l => pattern.findAllIn(l.split("//", 2)(0)).size).sum
+
+  /** Lines of `text` matching `pattern`, comment lines left out. Unlike
+    * [[sites]], a line is not cut at `//`: inside oracle text that is
+    * DuckDB's integer division. */
+  private def textSites(text: String, pattern: scala.util.matching.Regex): Int =
+    text.linesIterator.map(_.trim)
+      .filterNot(l => l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
+      .count(l => pattern.findFirstIn(l).isDefined)
 
   /** `text` with comments dropped and string and char literals emptied,
     * so that only code reaches [[defaultedParams]]. */
@@ -221,6 +255,14 @@ class MutationSitesSpec extends AnyFunSuite {
         s"file's allowedDefaults entry with the reason: $extra")
   }
 
+  test("a shared oracle fragment appears only in its sql* owner") {
+    val extra = ownedFragments.flatMap { case (marker, owner, n) =>
+      excess(textSites(_, marker), Map(owner -> n)).map { case (f, k) => (marker.regex, f, k) }
+    }
+    assert(extra.isEmpty,
+      s"pasted oracle fragments — call the fragment's sql* owner: $extra")
+  }
+
   test("the scan sees code sites and skips comments") {
     val src =
       """/** `spark.conf.set` in scaladoc
@@ -258,5 +300,32 @@ class MutationSitesSpec extends AnyFunSuite {
         |    b: Map[String, Int] = Map("x" -> 1), // b: Int = 2
         |    /* c: Int = 3, */ d: Long = 4L): Unit = ()""".stripMargin
     assert(defaultedParams(defs) == 7)
+    val oracle =
+      """/** d02's sh CTE: w[i.i] || ' ' || w[i.i+1] || ' ' || w[i.i+2] AS shingle */
+        |// CASE WHEN b < 205 THEN 'train'
+        |  val d02Sql = s"WITH sh AS ("
+        |     |  SELECT DISTINCT doc_id,
+        |     |         w[i.i] || ' ' || w[i.i+1] || ' ' || w[i.i+2] AS shingle
+        |     |split AS (SELECT 2 * MAX(doc_id) // 3 AS s FROM documents),
+        |     |WHERE 2 // 2 = 1 AND CAST(c AS DOUBLE) / CAST(sa.sz + sb.sz - c AS DOUBLE) >= 0.8
+        |     |  FROM inter JOIN sizes sa ON id_a = sa.doc_id
+        |     |  CASE WHEN bucket < 205 THEN 'train'
+        |     |    CAST(16 * (strpos('0123456789abcdef',
+        |     |                      substring(md5(CAST(doc_id AS VARCHAR)), 31, 1)) - 1)
+        |     |         +    (strpos('0123456789abcdef',
+        |     |                      substring(md5(CAST(doc_id AS VARCHAR)), 32, 1)) - 1)
+        |     |         ROUND(list_inner_product(eq.v, en.v) /
+        |     |               (sqrt(list_inner_product(eq.v, eq.v)) *
+        |     |                sqrt(list_inner_product(en.v, en.v))), 9) AS cosine
+        |     |  ROUND(-2 * list_inner_product(i.clist, j.clist), 9)
+        |     |         SUM(CASE WHEN ((strpos('0123456789abcdef',
+        |     |                    substring(m, 1 + bb.b // 4, 1)) - 1)""".stripMargin
+    def hits(i: Int): Int = textSites(oracle, ownedFragments(i)._1)
+    assert(hits(0) == 1) // the shingle line, not its scaladoc
+    assert(hits(3) == 1) // the Jaccard score behind a DuckDB `//`
+    assert(hits(4) == 1) // the pairs' join to their sizes
+    assert(hits(6) == 2) // both md5 hex digits, not d04's bit rule
+    assert(hits(7) == 1) // the split, not the commented one
+    assert(hits(8) == 1) // the round-9 cosine, not the Lloyd distance
   }
 }

@@ -23,9 +23,14 @@ class ScaleCorpusSpec extends SparkSpec {
   private def pairVolume(byKey: DataFrame): Long =
     byKey.agg(sum(col("pop") * (col("pop") - 1))).head().getLong(0) / 2
 
-  private def shingleVolume(docs: DataFrame, freq: Option[Long]): Long =
-    pairVolume(Dedup.docShingles(docs, freq)
-      .groupBy(col("shingle")).agg(count(lit(1)).as("pop")))
+  /** Pair volume of the shingle postings, with the running cap's rule
+    * when `freq` is set: a shingle whose population (its posting-list
+    * length) exceeds the cap is dropped. */
+  private def shingleVolume(docs: DataFrame, freq: Option[Long]): Long = {
+    val postings = Dedup.docShingles(docs)
+      .groupBy(col("shingle")).agg(count(lit(1)).as("pop"))
+    pairVolume(freq.fold(postings)(cap => postings.filter(col("pop") <= cap)))
+  }
 
   test("replicas preserve structure: linear rows, no cross-replica dup floods") {
     val c3 = corpus(3)

@@ -3,8 +3,15 @@ package graft
 
 /** Benchmark main: one JSON line with per-query wall-clock at
   * `SPARK_GRAFT_SF_DIR`. Three measurement choices that matter:
-  *  - an untimed warmup pass at sf0.001 first, so JIT/codegen-cache
-  *    warmup isn't billed to whichever query happens to run first;
+  *  - two untimed warmup passes at sf0.001 first, so JIT warmup and
+  *    Janino compiles aren't billed to whichever query happens to run
+  *    first. GraftSession's codegen cache holds 1024 entries, over
+  *    7× the largest query's working set but about half of a whole
+  *    catalog pass, so a query's later timed repeats reuse its classes
+  *    (at Spark's 100-entry default even one query's repeats could
+  *    recompile) while in a full pass its first timed repeat may
+  *    compile again. A body whose source changes between executions
+  *    (a new codegen stage id under AQE, say) always compiles;
   *  - the timed action is a noop-sink write, which materializes every
   *    output column (a bare count() lets Catalyst skip computing
   *    projected values — under-measures scan/compute-heavy queries);

@@ -26,7 +26,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Oracle SQL fragments that two oracles share have one `sql*` owner
   * each (`ownedFragments`): a marker of the fragment's text anywhere
-  * but in its owner means a pasted copy. */
+  * but in its owner means a pasted copy.
+  *
+  * Sessions are built only by [[GraftSession.builder]], in `src/main`
+  * and `src/test` alike: a second `SparkSession.builder` would run
+  * without the engine's posture (the codegen cache size is a static
+  * conf, fixed by the first session that generates code). */
 class MutationSitesSpec extends AnyFunSuite {
 
   private val confMutation = raw"\bconf\.(set|unset)\(|\bsetConf(String)?\(".r
@@ -35,6 +40,7 @@ class MutationSitesSpec extends AnyFunSuite {
     raw"\bhintIf\b|\bbroadcast(\([^)]*\))?\s+else\b|\belse\s+broadcast\b|\w*BroadcastRows\b".r
   private val widthRead =
     raw"""\bnumShufflePartitions\b|\bconf\.get\(\s*"spark\.sql\.shuffle\.partitions"""".r
+  private val sessionBuilder = raw"\bSparkSession\s*\.\s*builder\b".r
 
   private val allowedConf = Map(
     "graft/GraftSession.scala" -> 3, "graft/Tables.scala" -> 1)
@@ -46,6 +52,7 @@ class MutationSitesSpec extends AnyFunSuite {
   private val allowedWidth = Map(
     "graft/ScalePolicy.scala" -> Int.MaxValue,
     "graft/GraftSession.scala" -> Int.MaxValue)
+  private val allowedBuilders = Map("graft/GraftSession.scala" -> 1)
 
   /** Defaulted `def` parameters per file: the dials a query, bench or
     * spec sets to more than one value, plus deployment names and
@@ -105,8 +112,13 @@ class MutationSitesSpec extends AnyFunSuite {
       .filterNot(l => l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
       .count(l => pattern.findFirstIn(l).isDefined)
 
+  /** `SparkSession.builder` calls in the code of `text`, also when the
+    * call is split over two lines. */
+  private def builderSites(text: String): Int =
+    sessionBuilder.findAllIn(codeOnly(text)).size
+
   /** `text` with comments dropped and string and char literals emptied,
-    * so that only code reaches [[defaultedParams]]. */
+    * so that only code reaches [[defaultedParams]] and [[builderSites]]. */
   private def codeOnly(text: String): String = {
     val out = new StringBuilder
     val n = text.length
@@ -206,11 +218,15 @@ class MutationSitesSpec extends AnyFunSuite {
   /** (path relative to src/main/scala, count) for every file whose
     * `count` is beyond its allowance. */
   private def excess(count: String => Int,
-                     allowed: Map[String, Int]): Seq[(String, Int)] = {
+                     allowed: Map[String, Int]): Seq[(String, Int)] =
+    excessUnder(mainRoot, count, allowed)
+
+  /** [[excess]] over the Scala files under `root`. */
+  private def excessUnder(root: File, count: String => Int,
+                          allowed: Map[String, Int]): Seq[(String, Int)] = {
     def scalaFiles(f: File): Seq[File] =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(scalaFiles)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val root = mainRoot
     scalaFiles(root).flatMap { f =>
       val rel = root.toPath.relativize(f.toPath).toString.replace('\\', '/')
       val src = scala.io.Source.fromFile(f, "UTF-8")
@@ -226,6 +242,9 @@ class MutationSitesSpec extends AnyFunSuite {
       .map(new File(_, "src/main/scala"))
       .find(d => new File(d, "graft/GraftSession.scala").isFile)
       .getOrElse(fail("src/main/scala not found above the working directory"))
+
+  /** `src/test/scala`, beside [[mainRoot]]. */
+  private lazy val testRoot: File = new File(mainRoot.getParentFile.getParentFile, "test/scala")
 
   test("session conf is mutated only inside GraftSession.withConf (and Tables.events)") {
     val extra = excess(sites(_, confMutation), allowedConf)
@@ -253,6 +272,14 @@ class MutationSitesSpec extends AnyFunSuite {
     assert(extra.isEmpty,
       s"new operator dials — fold the value into a constant, or raise the " +
         s"file's allowedDefaults entry with the reason: $extra")
+  }
+
+  test("sessions are built only through GraftSession.builder, in main and test code") {
+    assert(testRoot.isDirectory, s"$testRoot not found")
+    val extra = excessUnder(mainRoot, builderSites, allowedBuilders) ++
+      excessUnder(testRoot, builderSites, Map.empty).map { case (f, n) => s"test/$f" -> n }
+    assert(extra.isEmpty,
+      s"SparkSession.builder outside GraftSession — use GraftSession.builder: $extra")
   }
 
   test("a shared oracle fragment appears only in its sql* owner") {
@@ -327,5 +354,15 @@ class MutationSitesSpec extends AnyFunSuite {
     assert(hits(6) == 2) // both md5 hex digits, not d04's bit rule
     assert(hits(7) == 1) // the split, not the commented one
     assert(hits(8) == 1) // the round-9 cosine, not the Lloyd distance
+    val sessions =
+      """/** SparkSession.builder() in scaladoc */
+        |// val s = SparkSession.builder().getOrCreate()
+        |val doc = "SparkSession.builder()"
+        |val s = SparkSession.builder()
+        |  .master("local[2]").getOrCreate()
+        |val t = SparkSession
+        |  .builder.getOrCreate()
+        |GraftSession.builder("local[4]", 4).getOrCreate()""".stripMargin
+    assert(builderSites(sessions) == 2) // the one-line and the split site
   }
 }

@@ -5,17 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession for the whole forked test JVM.
   * Suites never stop it — scalatest runs suites sequentially in one JVM
-  * and session startup (~5s) would otherwise dominate test time. */
+  * and session startup (~5s) would otherwise dominate test time. It is
+  * built through [[GraftSession.builder]], so the suites run the
+  * engine's deployment posture, the codegen cache size included. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder("local[4]", 4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

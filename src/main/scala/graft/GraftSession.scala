@@ -28,7 +28,7 @@ import org.apache.spark.sql.SparkSession
   *    over 4 Guava segments that evict on their own (25 entries each at
   *    the default). A whole-stage body compiled on the driver while
   *    planning and again in the executor's task threads, whose loader
-  *    differs, takes two entries: x03's 38 bodies take 58. Measured at
+  *    differs, takes two entries (x03's 38 bodies take 58). Measured at
   *    sf0.01 on Spark 4.1.2: at the default, every pass of
   *    pipeline_graph's three queries (x03, d09, d02) recompiled 57–77
   *    classes (1.2–1.5 s of Janino time); v18 (139 keys) and v30 (129)
@@ -36,7 +36,7 @@ import org.apache.spark.sql.SparkSession
   *    3,480 classes into about 2,000 entries. 4096 would hold a whole
   *    pass, but with it Tier-1's peak RSS rose 15% (5,250 → 6,033 MB;
   *    Bench's 2.9%), so the cap is 1024: over 7× the largest query's
-  *    working set, so every query's repeats and pipeline_graph's passes
+  *    working set, so a query's repeats and pipeline_graph's passes
   *    reuse their classes, while a full catalog pass still evicts the
   *    oldest.
   *  - `artifact.isolation.enabled` off: with it on, each streaming

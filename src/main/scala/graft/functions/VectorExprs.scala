@@ -8,7 +8,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native Catalyst expressions for the per-row vector hot path.
   *
-  * The higher-order-function forms in [[VectorOps]] are correct but pay
+  * The higher-order-function forms (`aggregate(zip_with(…))`, kept in
+  * VectorOpsSpec as its reference) are correct but pay
   * per-element lambda dispatch; these loop over the primitive
   * `ArrayData` buffer inside whole-stage codegen — the preferred shape
   * for 100 TB scans where the vector math runs O(pairs) times (see
@@ -17,7 +18,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * total bench time, so it did).
   *
   * Semantics: strict sequential left-to-right accumulation, identical
-  * to VectorOps' `aggregate`-based forms and to a single-threaded
+  * to those `aggregate`-based forms and to a single-threaded
   * loop — results are bit-identical across engines and partitionings.
   * Nulls propagate (null array OR null element → null result, same as
   * the HOF forms); lengths are not required to match (the shorter

@@ -21,18 +21,12 @@ object VectorOps {
   def asDouble(v: Column): Column = transform(v, _.cast(DoubleType))
 
   /** Native codegen'd forms (see [[VectorExprs]]) — bit-identical to
-    * the higher-order-function forms below (same sequential
-    * accumulation order), ~an order of magnitude less per-pair cost. */
+    * the higher-order-function `aggregate(zip_with(…))` forms
+    * (VectorOpsSpec's reference; same sequential accumulation order),
+    * ~an order of magnitude less per-pair cost. */
   def dot(a: Column, b: Column): Column = VectorExprs.dot(a, b)
 
   def norm2(a: Column): Column = VectorExprs.norm2(a)
-
-  /** Reference HOF implementations, kept for the equivalence spec. */
-  def hofDot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  def hofNorm2(a: Column): Column =
-    aggregate(a, lit(0.0), (acc, x) => acc + x * x)
 
   def norm(a: Column): Column = sqrt(norm2(a))
 
@@ -89,7 +83,6 @@ object VectorOps {
   def sqlPlaneList(p: Seq[Double]): String =
     p.map(x => if (x > 0) "1.0" else "-1.0").mkString("[", ", ", "]")
 
-  /** DuckDB mirror of [[signBucket]] over column text `v`. */
   /** Fixed odd 64-bit mixing constants (splitmix64 / golden-ratio and
     * sqrt-prime fractions) shared by the multi-quantizer OR-dials
     * (Dedup.embeddingNearDupPairsIVF, Similarity.ivfKnn): quantizer q
@@ -102,6 +95,7 @@ object VectorOps {
     0x94D049BB133111EBL, 0xD6E8FEB86659FD93L, 0xA5A3564DC6EF372FL,
     0xC2B2AE3D27D4EB4FL)
 
+  /** DuckDB mirror of [[signBucket]] over column text `v`. */
   def sqlSignBucket(v: String, planes: Seq[Seq[Double]]): String =
     planes.zipWithIndex.map { case (p, i) =>
       s"(CASE WHEN ROUND(list_inner_product($v, ${sqlPlaneList(p)}), 9) >= 0" +

@@ -983,15 +983,6 @@ object Media {
       .select(col("id_a"), col("id_b"), col("hamming"))
   }
 
-  /** m10 — IMAGE near-dup pairs, hash-gated: every image's [[phash64]]
-    * (m07's REAL decode→signature path) banded into 4×16-bit chunks,
-    * candidates from exact band agreement, pairs kept at Hamming ≤ 3
-    * (pigeonhole: 3 differing bits cannot touch all 4 bands, so recall
-    * over the threshold is exactly 1). The oracle re-derives every
-    * signature bit from the closed-form pixel formulas and replays the
-    * same band join + integer Hamming — unlike d04's xxhash64
-    * signatures this is all-integer bit arithmetic on both sides, so
-    * the pairing is a hash gate, not rows-only. */
   /** pHash near-dup pairs over any (media_id, phash_hi, phash_lo)
     * frame — the public operator m10 gates (cap: see
     * [[signatureNearDupPairs]]). */
@@ -1006,6 +997,15 @@ object Media {
       maxBucketSize)
   }
 
+  /** m10 — IMAGE near-dup pairs, hash-gated: every image's [[phash64]]
+    * (m07's REAL decode→signature path) banded into 4×16-bit chunks,
+    * candidates from exact band agreement, pairs kept at Hamming ≤ 3
+    * (pigeonhole: 3 differing bits cannot touch all 4 bands, so recall
+    * over the threshold is exactly 1). The oracle re-derives every
+    * signature bit from the closed-form pixel formulas and replays the
+    * same band join + integer Hamming — unlike d04's xxhash64
+    * signatures this is all-integer bit arithmetic on both sides, so
+    * the pairing is a hash gate, not rows-only. */
   def m10ImageNearDup(spark: SparkSession, dir: String): DataFrame =
     phashNearDupPairs(imagePhashes(spark, dir))
       .orderBy(col("id_a"), col("id_b"))
@@ -1058,12 +1058,6 @@ object Media {
       |WHERE hamming <= 3
       |ORDER BY id_a, id_b""".stripMargin
 
-  /** m11 — AUDIO near-dup pairs, hash-gated: every track's 31-bit
-    * energy contour ([[audioFingerprint]], m08's REAL decode path)
-    * banded into 4×8-bit chunks (the top band carries 7 real bits),
-    * candidates from exact band agreement, pairs kept at Hamming ≤ 3 —
-    * the same pigeonhole-exact mechanism as m10 over the audio
-    * signature. All-integer on both sides → hash gate. */
   /** Audio-contour near-dup pairs over any (media_id, afp) frame —
     * the public operator m11 gates. */
   def audioNearDupPairs(sig: DataFrame,
@@ -1073,6 +1067,12 @@ object Media {
     signatureNearDupPairs(sig, chunks, Seq("afp"), maxBucketSize)
   }
 
+  /** m11 — AUDIO near-dup pairs, hash-gated: every track's 31-bit
+    * energy contour ([[audioFingerprint]], m08's REAL decode path)
+    * banded into 4×8-bit chunks (the top band carries 7 real bits),
+    * candidates from exact band agreement, pairs kept at Hamming ≤ 3 —
+    * the same pigeonhole-exact mechanism as m10 over the audio
+    * signature. All-integer on both sides → hash gate. */
   def m11AudioNearDup(spark: SparkSession, dir: String): DataFrame =
     audioNearDupPairs(audioFingerprints(spark, dir))
       .orderBy(col("id_a"), col("id_b"))

@@ -9,20 +9,28 @@ import graft.streaming.Staging
 import graft.functions.VectorOps
 
 /** Similarity search over the `embeddings` table: exact brute-force
-  * cosine top-k (the correctness baseline) and a random-hyperplane
-  * LSH-bucketed approximate variant (the scale path).
+  * cosine top-k (the correctness baseline), the approximate scale
+  * paths — LSH buckets, IVF cells (flat, two-level, persisted,
+  * OR-dial), int8 (SQ) and product (PQ) quantization and their IVF
+  * compositions — and the retrieval shapes built on a ranking:
+  * filtered, hybrid (token Jaccard + RRF), MMR and mutual kNN.
   *
-  * Scale notes (100 TB):
-  *  - Brute force is a query⋈corpus cross join: fine when the query set
-  *    is small (broadcast the queries, stream the corpus — cost is one
-  *    corpus scan per batch of queries). It is the oracle-checkable
-  *    exact form.
-  *  - The LSH form buckets the corpus once (one narrow shuffle on
-  *    bucket id) and joins queries only to their bucket — sub-linear
-  *    per query. Recall versus exact top-k is pinned in ScalaTest; at
-  *    production scale you'd multi-probe neighboring buckets
-  *    (flip-1-bit probes) to trade compute back for recall — the
-  *    bucket-id expression makes those probes plain bit-twiddles.
+  * Every kNN path is written from the same stage owners, so a change to
+  * a stage is a one-site edit:
+  *  - vector sides: [[querySide]] `(query_id, keep…, qv, qn)` and
+  *    [[corpusSide]] `(neighbor_id, keep…, cv, cn)` — each embedding
+  *    cast to doubles and its norm computed once per row;
+  *  - per-query top-k: [[topKPerQuery]], the only per-query window;
+  *    [[cosineTopK]] ranks pairs by cosine under the
+  *    (cosine desc, neighbor_id) total order, and [[rankCandidates]] is
+  *    the round-9 exact tail every ANN path ends in;
+  *  - coarse, then rerank: [[rerank]] keeps each query's top
+  *    rerankFactor·k by a coarse score — the int8 [[cosine8]] (scale:
+  *    [[withMaxAbs]] / [[int8]]) or the PQ [[adcExpr]] — and re-ranks
+  *    them exactly.
+  *
+  * Each `s*` gate's DuckDB oracle replays these stages in SQL; the
+  * shared oracle fragments have `sql*` owners beside them.
   */
 object Similarity {
 
@@ -41,32 +49,93 @@ object Similarity {
     * computed once per side (O(rows)) so the pair loop pays only the
     * dot product. */
   def bruteForceKnn(queries: DataFrame, corpus: DataFrame, k: Int,
-                    roundCosineTo: Int = -1): DataFrame = {
+                    roundCosineTo: Int = -1): DataFrame =
     // spread the query side across the shuffle width BEFORE the
     // all-pairs join (round 15): the N·|q| scoring + per-query top-k
     // sort pipelines directly on the query-side scan, whose parallelism
     // is the input's split count — one task on a single-row-group file,
     // i.e. the whole quadratic stage on one core (measured: s13's one
     // 3.9 s job). The shuffle moves only the narrow query projection.
-    val q = graft.ScalePolicy.spread(
-      queries.select(col("vec_id").as("query_id"),
-        VectorOps.asDouble(col("embedding")).as("qv"))
-        .withColumn("qn", VectorOps.norm(col("qv"))),
-      col("query_id"))
-    val c = corpus.select(col("vec_id").as("neighbor_id"),
-      VectorOps.asDouble(col("embedding")).as("cv"))
+    cosineTopK(graft.ScalePolicy.spread(querySide(queries), col("query_id"))
+      .join(corpusSide(corpus), col("query_id") =!= col("neighbor_id")),
+      k, roundCosineTo)
+
+  // ---------------------------------------------------------------------------
+  // ANN stage owners
+  // ---------------------------------------------------------------------------
+
+  /** The query side of every kNN join: (query_id, keep…, qv, qn) — the
+    * embedding as doubles and its norm, computed once per row. */
+  private def querySide(df: DataFrame, keep: String*): DataFrame =
+    df.select((col("vec_id").as("query_id") +: keep.map(col) :+
+      VectorOps.asDouble(col("embedding")).as("qv")): _*)
+      .withColumn("qn", VectorOps.norm(col("qv")))
+
+  /** The corpus side of every kNN join: (neighbor_id, keep…, cv, cn). */
+  private def corpusSide(df: DataFrame, keep: String*): DataFrame =
+    df.select((col("vec_id").as("neighbor_id") +: keep.map(col) :+
+      VectorOps.asDouble(col("embedding")).as("cv")): _*)
       .withColumn("cn", VectorOps.norm(col("cv")))
+
+  /** Each query's first `k` rows of `df` under `order`, numbered from 1
+    * in column `rank` — the one per-query window of the kNN paths. */
+  private def topKPerQuery(df: DataFrame, k: Int, rank: String)(order: Column*): DataFrame =
+    df.withColumn(rank,
+        row_number().over(Window.partitionBy(col("query_id")).orderBy(order: _*)))
+      .filter(col(rank) <= k)
+
+  /** Cosine top-k of (query, candidate) pairs that carry both sides'
+    * vectors and norms: cosine rounded to `roundTo` decimals (unrounded
+    * when negative), ranked under the (cosine desc, neighbor_id) total
+    * order, output (query_id, rk, neighbor_id). */
+  private def cosineTopK(pairs: DataFrame, k: Int, roundTo: Int): DataFrame = {
     val raw = VectorOps.dot(col("qv"), col("cv")) / (col("qn") * col("cn"))
-    val scored = q.join(c, col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        if (roundCosineTo >= 0) round(raw, roundCosineTo) else raw)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    topKPerQuery(pairs.withColumn("cosine", if (roundTo >= 0) round(raw, roundTo) else raw),
+      k, "rk")(col("cosine").desc, col("neighbor_id"))
       .select(col("query_id"), col("rk"), col("neighbor_id"))
   }
+
+  /** Shared exact-rerank tail of every ANN path: drop self-pairs, score
+    * candidates by true cosine rounded to 9 decimals — the s08/s13
+    * rank-stability convention, so the hash-gated IVF tails
+    * (s04/s05/s17) rank bit-identically cross-engine — and keep the
+    * top-k per query. Expects [[querySide]] and [[corpusSide]] columns. */
+  private def rankCandidates(cands: DataFrame, k: Int): DataFrame =
+    cosineTopK(cands.filter(col("query_id") =!= col("neighbor_id")), k, 9)
+
+  /** Coarse, then rerank: keep each query's top `rerankFactor·k`
+    * candidates of `coarse` by its coarse `score` order (neighbor-id
+    * tiebreak), drop to the narrow id pairs, join the full-precision
+    * sides `q` and `c` back by id — candidate-set-sized, the wide
+    * doubles never enter the coarse join — and [[rankCandidates]]. */
+  private def rerank(coarse: DataFrame, score: Column, k: Int, rerankFactor: Int,
+                     q: DataFrame, c: DataFrame): DataFrame =
+    rankCandidates(
+      topKPerQuery(coarse, k * rerankFactor, "crk")(score, col("neighbor_id"))
+        .select(col("query_id"), col("neighbor_id"))
+        .join(q, Seq("query_id")).join(c, Seq("neighbor_id")), k)
+
+  /** `df` with the one-row global max |x| of its vectors `v` broadcast
+    * onto every row as `max_abs` — the int8 scale. greatest(…, ε): an
+    * all-zero side would otherwise scale by ∞ and quantize to NaN→null
+    * instead of harmless zeros. */
+  private def withMaxAbs(df: DataFrame, v: Column): DataFrame =
+    df.crossJoin(broadcast(df
+      .select(array_max(transform(v, x => abs(x))).as("m"))
+      .agg(greatest(max(col("m")), lit(1e-30)).as("max_abs"))))
+
+  /** `v` quantized to int8 by the [[withMaxAbs]] scale. */
+  private def int8(v: Column): Column =
+    transform(v, x => round(x * (lit(127.0) / col("max_abs"))).cast("tinyint"))
+
+  /** Coarse cosine over int8 sides (qv8/qn8, cv8/cn8), with the
+    * zero-norm guard: a vector whose components all quantize to 0 has
+    * norm 0, and 0/0 = NaN sorts ABOVE every real cosine under desc —
+    * unguarded, enough such vectors fill the whole re-rank buffer with
+    * garbage for every query. Score them below any true cosine instead. */
+  private def cosine8: Column =
+    when(col("qn8") === 0.0 || col("cn8") === 0.0, lit(-2.0))
+      .otherwise(VectorOps.dot(col("qv8"), col("cv8")) / (col("qn8") * col("cn8")))
 
   /** Corpus with its LSH bucket id attached. The plane dimensionality
     * is probed from the data (one cheap first-row action) — a
@@ -113,19 +182,6 @@ object Similarity {
     rankCandidates(qb.join(cb, Seq("bucket")), k)
   }
 
-  /** IVF (inverted-file) approximate kNN — the second standard ANN
-    * scale path next to LSH ([[annKnn]]), mirroring the public
-    * IVF-Flat design: a k-means coarse quantizer (MLlib, seeded)
-    * partitions the corpus into `nlist` cells; each query probes its
-    * `nprobe` nearest centroids (by the same Euclidean metric k-means
-    * assigns with) and exact-ranks only those cells' vectors.
-    *
-    * Scale notes: the index is built once (at 100 TB, fit the
-    * quantizer on a sample — `KMeans.fit` already aggregates
-    * per-partition), the corpus is shuffled once on cell id, and each
-    * query touches nprobe/nlist of the corpus — the recall/compute
-    * dial. `nprobe = nlist` degenerates to exact brute force, which the
-    * ScalaTest pin exploits. */
   /** Default candidate-volume budget of the IVF dials (round 13) —
     * the pre-flight affordability bar for [[ivfKnn]]'s OR-dial and
     * [[graft.operators.Dedup.embeddingNearDupPairsIVF]]. Candidate
@@ -190,8 +246,9 @@ object Similarity {
     * KMeans fit was tried first and rejected twice over: partial-sum
     * merge order is task-completion-dependent (not bit-deterministic),
     * and k-means|| init is not SQL-replayable, which kept s05/s07/s10
-    * rows-only. */
-  /** `orderMix` != 0 orders the fit sample by neighbor_id XOR the mix
+    * rows-only.
+    *
+    * `orderMix` != 0 orders the fit sample by neighbor_id XOR the mix
     * (a tie-free bijection) — an INDEPENDENTLY initialized quantizer
     * over the same corpus, the [[ivfKnn]] OR-dial's source of
     * independence. 0 (every gate path) is the historical id order. */
@@ -199,8 +256,7 @@ object Similarity {
                                   orderMix: Long = 0L): (DataFrame, DataFrame) = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val c0 = corpus.select(col("vec_id").as("neighbor_id"),
-      VectorOps.asDouble(col("embedding")).as("cv"))
+    val c0 = corpusSide(corpus).drop("cn") // cells re-add cn after cell
     val sampleKey =
       if (orderMix == 0L) col("neighbor_id")
       else col("neighbor_id").bitwiseXOR(lit(orderMix))
@@ -221,6 +277,19 @@ object Similarity {
     * oracle chain. */
   private[operators] def flatFitSampleRows(nlist: Int): Int =
     math.max(nlist * 64, 1024)
+
+  /** Both levels of the two-level fit: the k1-row coarse table, the
+    * final cell table carrying its `coarse` parent — so assignment can
+    * be HIERARCHICAL (rank k1 coarse centroids, then only the chosen
+    * group's k2 subs: N·(k1+k2) scored pairs instead of N·nlist) —
+    * and the (id, coarse) assignment the fit already computed over the
+    * full corpus, so callers never pay the N·k1 coarse scoring pass a
+    * second time. */
+  private[operators] final case class TwoLevelIndex(
+      coarse: DataFrame, cells: DataFrame, coarseAssign: DataFrame)
+
+  private[operators] def twoLevelCentroids(pts: DataFrame, nlist: Int): DataFrame =
+    twoLevelIndex(pts, nlist).cells.drop("coarse")
 
   /** TWO-LEVEL (hierarchical) centroid fit — the quantizer for cell
     * counts past what any bounded single fit can shape (~10⁵ cells,
@@ -244,19 +313,6 @@ object Similarity {
     * Empty coarse groups (possible when k1 exceeds the natural cluster
     * count) simply contribute no sub-centroids; cell ids stay unique
     * via the coarse·k2+j numbering. `pts` columns: (id, v). */
-  /** Both levels of the two-level fit: the k1-row coarse table, the
-    * final cell table carrying its `coarse` parent — so assignment can
-    * be HIERARCHICAL (rank k1 coarse centroids, then only the chosen
-    * group's k2 subs: N·(k1+k2) scored pairs instead of N·nlist) —
-    * and the (id, coarse) assignment the fit already computed over the
-    * full corpus, so callers never pay the N·k1 coarse scoring pass a
-    * second time. */
-  private[operators] final case class TwoLevelIndex(
-      coarse: DataFrame, cells: DataFrame, coarseAssign: DataFrame)
-
-  private[operators] def twoLevelCentroids(pts: DataFrame, nlist: Int): DataFrame =
-    twoLevelIndex(pts, nlist).cells.drop("coarse")
-
   private[operators] def twoLevelIndex(pts: DataFrame, nlist: Int): TwoLevelIndex = {
     val spark = pts.sparkSession
     import spark.implicits._
@@ -352,8 +408,7 @@ object Similarity {
     * fit. */
   private[operators] def ivfIndexTwoLevelFull(
       corpus: DataFrame, nlist: Int): (DataFrame, DataFrame, DataFrame) = {
-    val c0 = corpus.select(col("vec_id").as("neighbor_id"),
-      VectorOps.asDouble(col("embedding")).as("cv"))
+    val c0 = corpusSide(corpus).drop("cn")
     val idx = twoLevelIndex(
       c0.select(col("neighbor_id").as("id"), col("cv").as("v")), nlist)
     val subs = idx.cells.localCheckpoint(true) // assignment + probe ranking
@@ -385,7 +440,21 @@ object Similarity {
       .withColumn("cn", VectorOps.norm(col("cv")))
   }
 
-  /** `quantizers` > 1 (round 12) is the OR-dial the d14 recall curves
+  /** IVF (inverted-file) approximate kNN — the second standard ANN
+    * scale path next to LSH ([[annKnn]]), mirroring the public
+    * IVF-Flat design: a k-means coarse quantizer (the replayable
+    * [[lloydFit]], see [[ivfIndex]]) partitions the corpus into `nlist`
+    * cells; each query probes its `nprobe` nearest centroids (by the
+    * same Euclidean metric the fit assigns with) and exact-ranks only
+    * those cells' vectors.
+    *
+    * Scale notes: the index is built once (the quantizer is fit on a
+    * bounded sample), the corpus is shuffled once on cell id, and each
+    * query touches nprobe/nlist of the corpus — the recall/compute
+    * dial. `nprobe = nlist` degenerates to exact brute force, which the
+    * ScalaTest pin exploits.
+    *
+    * `quantizers` > 1 (round 12) is the OR-dial the d14 recall curves
     * validated, applied to kNN: candidates are UNIONED across q
     * independently initialized quantizers (fit-sample order id XOR a
     * fixed mix — [[VectorOps.orMixConstants]]), deduped per
@@ -406,9 +475,7 @@ object Similarity {
       s"quantizers must be in [1, ${VectorOps.orMixConstants.size - 1}]")
     require(quantizers == 1 || !twoLevel,
       "the OR-dial composes with the flat quantizer only")
-    val q = queries.select(col("vec_id").as("query_id"),
-      VectorOps.asDouble(col("embedding")).as("qv"))
-      .withColumn("qn", VectorOps.norm(col("qv")))
+    val q = querySide(queries)
     if (quantizers == 1) {
       val (cells, centroids) =
         if (twoLevel) ivfIndexTwoLevel(corpus, nlist)
@@ -460,9 +527,6 @@ object Similarity {
             .select(col("query_id"), col("neighbor_id"))
         }.reduce(_ union _),
         col("query_id")).distinct()
-      val c0n = corpus.select(col("vec_id").as("neighbor_id"),
-        VectorOps.asDouble(col("embedding")).as("cv"))
-        .withColumn("cn", VectorOps.norm(col("cv")))
       // vector re-join strategy is SIZE-CONDITIONAL (the probe-frame
       // rule at ivfKnnFromIndex): broadcast the vector tables while
       // they fit, so the pair fan-out PIPELINES through cosine+prune
@@ -474,7 +538,7 @@ object Similarity {
       val vec = graft.ScalePolicy.vectorFrames
       rankCandidates(
         idPairs.join(vec.hint(nQ0)(q), Seq("query_id"))
-          .join(vec.hint(nCorpus0)(c0n), Seq("neighbor_id")), k)
+          .join(vec.hint(nCorpus0)(corpusSide(corpus)), Seq("neighbor_id")), k)
     }
   }
 
@@ -499,13 +563,11 @@ object Similarity {
     // nothing for AQE to coalesce), and the BHJ candidate join + rank
     // above inherit the width. Also strictly fewer exchanged bytes:
     // nQ query rows move instead of nQ·nprobe probe rows.
-    graft.ScalePolicy.spread(q, col("query_id"))
+    topKPerQuery(graft.ScalePolicy.spread(q, col("query_id"))
       .crossJoin(broadcast(centroids))
       .withColumn("d2p", round(
-        VectorOps.dot(col("qv"), col("centroid")) * lit(-2.0) + col("cn2"), 9))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("d2p"), col("cell"))))
-      .filter(col("crk") <= nprobe)
+        VectorOps.dot(col("qv"), col("centroid")) * lit(-2.0) + col("cn2"), 9)),
+      nprobe, "crk")(col("d2p"), col("cell"))
       .select((q.columns.map(col) :+ col("cell")).toIndexedSeq: _*)
 
   /** Commit metadata of a persisted IVF index — the content of the
@@ -614,9 +676,7 @@ object Similarity {
     // cell numbering (cell = coarse·k2 + j — writeIvfIndex's contract)
     val subs = spark.read.parquet(s"$indexDir/centroids")
       .withColumn("coarse", (col("cell") / lit(meta.k2)).cast("int"))
-    val c0 = batch.select(col("vec_id").as("neighbor_id"),
-      VectorOps.asDouble(col("embedding")).as("cv"))
-    val withCoarse = c0.withColumn("coarse",
+    val withCoarse = corpusSide(batch).drop("cn").withColumn("coarse",
       argminCellExpr(col("cv"), coarseCents))
     val cells = assignToSubCells(withCoarse, subs)
       .withColumn("gen", lit(newGen))
@@ -754,12 +814,10 @@ object Similarity {
     // uncommitted generations' directories are pruned, never read)
     val cells = spark.read.parquet(s"$indexDir/cells")
       .filter(col("gen") <= meta.gen)
-    val q = queries.select(col("vec_id").as("query_id"),
-      VectorOps.asDouble(col("embedding")).as("qv"))
-      .withColumn("qn", VectorOps.norm(col("qv")))
     // materialized once: consumed by the cell-set pull AND the join;
     // its row count sizes the broadcast below
-    val probedCp = graft.ScalePolicy.checkpoint(probeCells(q, centroids, nprobe))
+    val probedCp = graft.ScalePolicy.checkpoint(
+      probeCells(querySide(queries), centroids, nprobe))
     val probed = probedCp.frame
     val probedCells = probed.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).sorted // bounded by nlist
@@ -811,16 +869,7 @@ object Similarity {
     * scoring inside probed IVF cells (sub-linear candidates). */
   def quantized(emb: DataFrame, idAs: String): DataFrame = {
     val v = VectorOps.asDouble(col("embedding"))
-    // greatest(…, ε): an all-zero corpus would otherwise scale by ∞ and
-    // quantize to NaN→null instead of harmless zeros
-    val maxAbs = emb
-      .select(array_max(transform(v, x => abs(x))).as("m"))
-      .agg(greatest(max(col("m")), lit(1e-30)).as("max_abs"))
-    emb.crossJoin(broadcast(maxAbs))
-      .select(
-        col("vec_id").as(idAs),
-        transform(v, x =>
-          round(x * (lit(127.0) / col("max_abs"))).cast("tinyint")).as("qvec"))
+    withMaxAbs(emb, v).select(col("vec_id").as(idAs), int8(v).as("qvec"))
   }
 
   def quantizedKnn(queries: DataFrame, corpus: DataFrame, k: Int,
@@ -831,28 +880,8 @@ object Similarity {
     val c8 = quantized(corpus, "neighbor_id")
       .select(col("neighbor_id"), VectorOps.asDouble(col("qvec")).as("cv8"))
       .withColumn("cn8", VectorOps.norm(col("cv8")))
-    val wCoarse = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine8").desc, col("neighbor_id"))
-    // zero-norm guard: a vector whose components all quantize to 0 has
-    // cn8 = 0, and 0/0 = NaN sorts ABOVE every real cosine under desc —
-    // unguarded, enough such vectors fill the whole re-rank buffer with
-    // garbage for every query. Score them below any true cosine instead.
-    val candidates = q8.join(c8, col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine8",
-        when(col("qn8") === 0.0 || col("cn8") === 0.0, lit(-2.0))
-          .otherwise(
-            VectorOps.dot(col("qv8"), col("cv8")) / (col("qn8") * col("cn8"))))
-      .withColumn("crk", row_number().over(wCoarse))
-      .filter(col("crk") <= k * rerankFactor)
-      .select(col("query_id"), col("neighbor_id"))
-    // exact re-rank: true vectors join back by id — candidate-set-sized
-    val q = queries.select(col("vec_id").as("query_id"),
-      VectorOps.asDouble(col("embedding")).as("qv"))
-      .withColumn("qn", VectorOps.norm(col("qv")))
-    val c = corpus.select(col("vec_id").as("neighbor_id"),
-      VectorOps.asDouble(col("embedding")).as("cv"))
-      .withColumn("cn", VectorOps.norm(col("cv")))
-    rankCandidates(candidates.join(q, Seq("query_id")).join(c, Seq("neighbor_id")), k)
+    rerank(q8.join(c8, col("query_id") =!= col("neighbor_id")).withColumn("cosine8", cosine8),
+      col("cosine8").desc, k, rerankFactor, querySide(queries), corpusSide(corpus))
   }
 
   /** IVF-SQ: int8 scalar quantization INSIDE IVF cells — the
@@ -879,28 +908,16 @@ object Similarity {
     require(nprobe >= 1 && nprobe <= nlist)
     val (cells, centroids) = ivfIndex(corpus, nlist)
 
-    def int8(v: Column, maxAbs: Column): Column =
-      transform(v, x => round(x * (lit(127.0) / maxAbs)).cast("tinyint"))
-
     // quantized cell vectors: this is the frame the candidate join
     // shuffles — array<tinyint> payload, keyed by cell
-    val cMax = cells
-      .select(array_max(transform(col("cv"), x => abs(x))).as("m"))
-      .agg(greatest(max(col("m")), lit(1e-30)).as("max_abs"))
-    val c8 = cells.crossJoin(broadcast(cMax))
+    val c8 = withMaxAbs(cells, col("cv"))
       .select(col("cell"), col("neighbor_id"),
-        VectorOps.asDouble(int8(col("cv"), col("max_abs"))).as("cv8"))
+        VectorOps.asDouble(int8(col("cv"))).as("cv8"))
       .withColumn("cn8", VectorOps.norm(col("cv8")))
 
-    val q = queries.select(col("vec_id").as("query_id"),
-      VectorOps.asDouble(col("embedding")).as("qv"))
-      .withColumn("qn", VectorOps.norm(col("qv")))
-    val qMax = q
-      .select(array_max(transform(col("qv"), x => abs(x))).as("m"))
-      .agg(greatest(max(col("m")), lit(1e-30)).as("max_abs"))
-    val q8 = q.crossJoin(broadcast(qMax))
-      .select(col("query_id"),
-        VectorOps.asDouble(int8(col("qv"), col("max_abs"))).as("qv8"))
+    val q = querySide(queries)
+    val q8 = withMaxAbs(q, col("qv"))
+      .select(col("query_id"), VectorOps.asDouble(int8(col("qv"))).as("qv8"))
       .withColumn("qn8", VectorOps.norm(col("qv8")))
 
     // probe: rank centroids per query — nlist-row broadcast, as ivfKnn
@@ -908,29 +925,13 @@ object Similarity {
       centroids, nprobe).select(col("query_id"), col("cell"))
 
     // coarse stage: equi-join on cell — the int8 scoring only ever sees
-    // (query, probed-cell-member) pairs. Zero-norm guard as quantizedKnn.
-    val wCoarse = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine8").desc, col("neighbor_id"))
-    val candidates = probed
+    // (query, probed-cell-member) pairs
+    val coarse = probed
       .join(q8, Seq("query_id"))
       .join(c8, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine8",
-        when(col("qn8") === 0.0 || col("cn8") === 0.0, lit(-2.0))
-          .otherwise(
-            VectorOps.dot(col("qv8"), col("cv8")) / (col("qn8") * col("cn8"))))
-      .withColumn("crk", row_number().over(wCoarse))
-      .filter(col("crk") <= k * rerankFactor)
-      .select(col("query_id"), col("neighbor_id"))
-
-    // exact re-rank: full-precision vectors join back by id —
-    // candidate-set-sized, the wide doubles never entered the coarse join
-    val c = corpus.select(col("vec_id").as("neighbor_id"),
-      VectorOps.asDouble(col("embedding")).as("cv"))
-      .withColumn("cn", VectorOps.norm(col("cv")))
-    rankCandidates(
-      candidates.join(q.select(col("query_id"), col("qv"), col("qn")), Seq("query_id"))
-        .join(c, Seq("neighbor_id")), k)
+      .withColumn("cosine8", cosine8)
+    rerank(coarse, col("cosine8").desc, k, rerankFactor, q, corpusSide(corpus))
   }
 
   // ---------------------------------------------------------------------------
@@ -967,9 +968,8 @@ object Similarity {
     // fit-sample lesson: never let the fit grow with the corpus); past
     // ~10⁵ sample rows the deployed form is the distributed fit, as the
     // ivfIndex doc already prescribes.
-    val sample: Array[Array[Double]] = corpus
-      .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("cv"))
-      .withColumn("cn", VectorOps.norm(col("cv")))
+    // ordered by the kept vec_id (the unused neighbor_id alias is pruned)
+    val sample: Array[Array[Double]] = corpusSide(corpus, "vec_id")
       .withColumn("nv", unitize(col("cv"), col("cn")))
       .orderBy(col("vec_id"))
       .limit(math.max(ksub * 64, 1024))
@@ -1114,18 +1114,14 @@ object Similarity {
     * is (id, m small ints) — the wide doubles never leave the encode
     * projection, which is the point: this is the frame the pair scan
     * streams. */
-  private def pqEncode(emb: DataFrame, idAs: String,
-                       cb: Array[Array[Array[Double]]]): DataFrame = {
+  private def pqEncode(emb: DataFrame, cb: Array[Array[Array[Double]]]): DataFrame = {
     val m = cb.length
     val dsub = cb(0)(0).length
-    val subs = emb
-      .select(col("vec_id").as(idAs),
-        VectorOps.asDouble(col("embedding")).as("cv"))
-      .withColumn("cn", VectorOps.norm(col("cv")))
+    val subs = corpusSide(emb)
       .withColumn("nv", unitize(col("cv"), col("cn")))
-      .select((col(idAs) +: (0 until m).map(s =>
+      .select((col("neighbor_id") +: (0 until m).map(s =>
         slice(col("nv"), s * dsub + 1, dsub).as(s"__sub$s"))): _*)
-    subs.select((col(idAs) +: (0 until m).map { s =>
+    subs.select((col("neighbor_id") +: (0 until m).map { s =>
       val scores = array(cb(s).toIndexedSeq.map(cj =>
         pqScore(col(s"__sub$s"), cj)): _*)
       (array_position(scores, array_min(scores)) - 1)
@@ -1141,9 +1137,7 @@ object Similarity {
                      cb: Array[Array[Array[Double]]]): DataFrame = {
     val m = cb.length
     val dsub = cb(0)(0).length
-    val q = queries.select(col("vec_id").as("query_id"),
-      VectorOps.asDouble(col("embedding")).as("qv"))
-      .withColumn("qn", VectorOps.norm(col("qv")))
+    val q = querySide(queries)
       .withColumn("nv", unitize(col("qv"), col("qn")))
       .select((Seq(col("query_id"), col("qv"), col("qn")) ++
         (0 until m).map(s =>
@@ -1190,30 +1184,17 @@ object Similarity {
     require(rerankFactor >= 1)
     val m = pqM
     val cb = pqCodebooks(corpus, m, pqKsub)
-    val codes = pqEncode(corpus, "neighbor_id", cb)
+    val codes = pqEncode(corpus, cb)
     val luts = pqLuts(queries, cb)
 
     // coarse ADC scan: narrow LUT side × narrow code side; the adc sum
     // is a fixed-order chain of m lookups, deterministic per pair
-    val wCoarse = Window.partitionBy(col("query_id"))
-      .orderBy(col("__adc"), col("neighbor_id"))
-    val candidates = luts
+    val coarse = luts
       .select((col("query_id") +: (0 until m).map(s => col(s"__lut$s"))): _*)
       .join(codes, col("query_id") =!= col("neighbor_id"))
       .withColumn("__adc", adcExpr(m))
-      .withColumn("crk", row_number().over(wCoarse))
-      .filter(col("crk") <= k * rerankFactor)
-      .select(col("query_id"), col("neighbor_id"))
-
-    // exact re-rank: full-precision vectors join back by id —
-    // candidate-set-sized, as the other ANN tails
-    val c = corpus.select(col("vec_id").as("neighbor_id"),
-      VectorOps.asDouble(col("embedding")).as("cv"))
-      .withColumn("cn", VectorOps.norm(col("cv")))
-    rankCandidates(
-      candidates
-        .join(luts.select(col("query_id"), col("qv"), col("qn")), Seq("query_id"))
-        .join(c, Seq("neighbor_id")), k)
+    rerank(coarse, col("__adc"), k, rerankFactor,
+      luts.select(col("query_id"), col("qv"), col("qn")), corpusSide(corpus))
   }
 
   /** IVF-PQ: the inverted-file/product-quantization composition the
@@ -1241,7 +1222,7 @@ object Similarity {
     val cb = pqCodebooks(corpus, m, pqKsub)
     // the candidate-join payload: (cell, id, m codes) — cell keys the
     // shuffle, the codes are all the coarse stage ever reads
-    val codes = pqEncode(corpus, "neighbor_id", cb)
+    val codes = pqEncode(corpus, cb)
       .join(cells.select(col("neighbor_id"), col("cell")), Seq("neighbor_id"))
     val luts = pqLuts(queries, cb)
 
@@ -1249,43 +1230,14 @@ object Similarity {
     val probed = probeCells(luts.select(col("query_id"), col("qv")),
       centroids, nprobe).select(col("query_id"), col("cell"))
 
-    val wCoarse = Window.partitionBy(col("query_id"))
-      .orderBy(col("__adc"), col("neighbor_id"))
-    val candidates = probed
+    val coarse = probed
       .join(luts.select((col("query_id") +:
         (0 until m).map(s => col(s"__lut$s"))): _*), Seq("query_id"))
       .join(codes, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("__adc", adcExpr(m))
-      .withColumn("crk", row_number().over(wCoarse))
-      .filter(col("crk") <= k * rerankFactor)
-      .select(col("query_id"), col("neighbor_id"))
-
-    val c = corpus.select(col("vec_id").as("neighbor_id"),
-      VectorOps.asDouble(col("embedding")).as("cv"))
-      .withColumn("cn", VectorOps.norm(col("cv")))
-    rankCandidates(
-      candidates
-        .join(luts.select(col("query_id"), col("qv"), col("qn")), Seq("query_id"))
-        .join(c, Seq("neighbor_id")), k)
-  }
-
-  /** Shared exact-rerank tail of every ANN path: drop self-pairs, score
-    * candidates by true cosine, keep the top-k per query under the
-    * (cosine desc, neighbor_id) total order. Expects columns
-    * query_id/qv/qn on the query side and neighbor_id/cv/cn on the
-    * candidate side. */
-  private def rankCandidates(cands: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    // round(cosine, 9) — the s08/s13 rank-stability convention, so the
-    // hash-gated IVF tails (s04/s05/s17) rank bit-identically cross-engine
-    cands.filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", round(
-        VectorOps.dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 9))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("rk"), col("neighbor_id"))
+    rerank(coarse, col("__adc"), k, rerankFactor,
+      luts.select(col("query_id"), col("qv"), col("qn")), corpusSide(corpus))
   }
 
   // ---------------------------------------------------------------------------
@@ -1320,11 +1272,7 @@ object Similarity {
       .withColumn("jaccard",
         col("inter").cast("double") /
           (col("qn") + col("cn") - col("inter")).cast("double"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("jaccard").desc, col("neighbor_id"))
-    scored
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    topKPerQuery(scored, k, "rk")(col("jaccard").desc, col("neighbor_id"))
       .select(col("query_id"), col("rk"), col("neighbor_id"))
   }
 
@@ -1344,11 +1292,7 @@ object Similarity {
       .withColumn("score",
         coalesce(lit(1.0) / (lit(c) + col("vrk")), lit(0.0)) +
           coalesce(lit(1.0) / (lit(c) + col("lrk")), lit(0.0)))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id"))
-    fused
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    topKPerQuery(fused, k, "rk")(col("score").desc, col("neighbor_id"))
       .select(col("query_id"), col("rk"), col("neighbor_id"))
   }
 
@@ -2383,24 +2327,9 @@ object Similarity {
     * that's 10× fewer candidate pairs, and at 100 TB the blocks are
     * the unit of parallelism. No post-filtering of an unfiltered ANN
     * result (which under-fills k when the filter is selective). */
-  def sameLabelKnn(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"), col("label"),
-      VectorOps.asDouble(col("embedding")).as("qv"))
-      .withColumn("qn", VectorOps.norm(col("qv")))
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("label"),
-      VectorOps.asDouble(col("embedding")).as("cv"))
-      .withColumn("cn", VectorOps.norm(col("cv")))
-    val scored = q.join(c, Seq("label"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        round(VectorOps.dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 9))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("rk"), col("neighbor_id"))
-  }
+  def sameLabelKnn(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    rankCandidates(
+      querySide(queries, "label").join(corpusSide(corpus, "label"), Seq("label")), k)
 
   /** s12 — filtered search gate: the s01 query set restricted to
     * same-label neighbors; rank-only integer output on round-9 cosine
@@ -2456,21 +2385,11 @@ object Similarity {
   def mmrKnn(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     import corpus.sparkSession.implicits._
     val (lambdaRel, poolFactor) = (0.7, 4)
-    val q = queries.select(col("vec_id").as("query_id"),
-      VectorOps.asDouble(col("embedding")).as("qv"))
-      .withColumn("qn", VectorOps.norm(col("qv")))
-    val c = corpus.select(col("vec_id").as("neighbor_id"),
-      VectorOps.asDouble(col("embedding")).as("cv"))
-      .withColumn("cn", VectorOps.norm(col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("rel").desc, col("neighbor_id"))
-    val pool = q.join(c, col("query_id") =!= col("neighbor_id"))
-      .withColumn("rel",
-        VectorOps.dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k * poolFactor)
-      .select(col("query_id"), col("neighbor_id"), col("rel"),
-        col("cv"), col("cn"))
+    val pool = topKPerQuery(
+      querySide(queries).join(corpusSide(corpus), col("query_id") =!= col("neighbor_id"))
+        .withColumn("rel", VectorOps.dot(col("qv"), col("cv")) / (col("qn") * col("cn"))),
+      k * poolFactor, "rk")(col("rel").desc, col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"), col("rel"), col("cv"), col("cn"))
     pool.as[(Long, Long, Double, Seq[Double], Double)]
       .groupByKey(_._1)
       .flatMapGroups { (qid, it) =>

@@ -31,7 +31,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * Sessions are built only by [[GraftSession.builder]], in `src/main`
   * and `src/test` alike: a second `SparkSession.builder` would run
   * without the engine's posture (the codegen cache size is a static
-  * conf, fixed by the first session that generates code). */
+  * conf, fixed by the first session that generates code).
+  *
+  * Each ANN stage has one engine owner in `Similarity.scala`
+  * (`ownedStages`): the per-query window is `topKPerQuery`'s, and the
+  * embedding-to-`qv`/`cv` projection is `querySide`'s and
+  * `corpusSide`'s, one line each. A further code line anywhere means a
+  * pasted copy of the stage. */
 class MutationSitesSpec extends AnyFunSuite {
 
   private val confMutation = raw"\bconf\.(set|unset)\(|\bsetConf(String)?\(".r
@@ -96,6 +102,15 @@ class MutationSitesSpec extends AnyFunSuite {
     (raw"sqrt\(list_inner_product\((\S+), \1\)\)\), 9\)", "graft/operators/Similarity.scala", 1),
     // Similarity.sqlMutualPairs
     (raw"AS rk_ab, CAST\(r\.rk AS INT\) AS rk_ba", "graft/operators/Similarity.scala", 1)
+  ).map { case (m, f, n) => (m.r, f, n) }
+
+  /** Engine stages with one owner: (marker of the stage's code, file
+    * that holds the owners, number of marker sites in it). */
+  private val ownedStages = Seq(
+    // Similarity.topKPerQuery
+    (raw"""partitionBy\(col\("query_id"\)\)""", "graft/operators/Similarity.scala", 1),
+    // Similarity.querySide and corpusSide
+    (raw"""asDouble\(col\("embedding"\)\)\.as\("[qc]v"\)""", "graft/operators/Similarity.scala", 2)
   ).map { case (m, f, n) => (m.r, f, n) }
 
   /** Code lines of `text` matching `pattern`, comments left out. */
@@ -290,6 +305,14 @@ class MutationSitesSpec extends AnyFunSuite {
       s"pasted oracle fragments — call the fragment's sql* owner: $extra")
   }
 
+  test("an ANN stage appears only in its Similarity owner") {
+    val extra = ownedStages.flatMap { case (marker, owner, n) =>
+      excess(sites(_, marker), Map(owner -> n)).map { case (f, k) => (marker.regex, f, k) }
+    }
+    assert(extra.isEmpty,
+      s"pasted ANN stages — call topKPerQuery / querySide / corpusSide: $extra")
+  }
+
   test("the scan sees code sites and skips comments") {
     val src =
       """/** `spark.conf.set` in scaladoc
@@ -364,5 +387,28 @@ class MutationSitesSpec extends AnyFunSuite {
         |  .builder.getOrCreate()
         |GraftSession.builder("local[4]", 4).getOrCreate()""".stripMargin
     assert(builderSites(sessions) == 2) // the one-line and the split site
+    val owners =
+      """/** Window.partitionBy(col("query_id")) in scaladoc */
+        |// .select(VectorOps.asDouble(col("embedding")).as("qv"))
+        |private def querySide(df: DataFrame, keep: String*): DataFrame =
+        |  df.select((col("vec_id").as("query_id") +: keep.map(col) :+
+        |    VectorOps.asDouble(col("embedding")).as("qv")): _*)
+        |private def corpusSide(df: DataFrame, keep: String*): DataFrame =
+        |  df.select((col("vec_id").as("neighbor_id") +: keep.map(col) :+
+        |    VectorOps.asDouble(col("embedding")).as("cv")): _*)
+        |private def topKPerQuery(df: DataFrame, k: Int, rank: String)(order: Column*) =
+        |  df.withColumn(rank,
+        |    row_number().over(Window.partitionBy(col("query_id")).orderBy(order: _*)))
+        |val byLabel = Window.partitionBy(col("label")) // partitionBy(col("query_id"))""".stripMargin
+    val Seq((window, _, nWindow), (side, _, nSides)) = ownedStages
+    assert(sites(owners, window) == nWindow && sites(owners, side) == nSides)
+    val pastedWindow = owners + "\n" +
+      """val w = Window.partitionBy(col("query_id"))
+        |  .orderBy(col("cosine").desc, col("neighbor_id"))""".stripMargin
+    assert(sites(pastedWindow, window) > nWindow)
+    val pastedSide = owners + "\n" +
+      """val c = corpus.select(col("vec_id").as("neighbor_id"),
+        |  VectorOps.asDouble(col("embedding")).as("cv"))""".stripMargin
+    assert(sites(pastedSide, side) > nSides)
   }
 }

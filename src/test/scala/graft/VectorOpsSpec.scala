@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -11,8 +12,17 @@ class VectorOpsSpec extends SparkSpec {
 
   private def lift(v: Seq[Double]) = array(v.map(lit): _*)
 
-  private def eval1(c: org.apache.spark.sql.Column): Double =
+  private def eval1(c: Column): Double =
     spark.range(1).select(c.cast("double").as("x")).as[Double].head()
+
+  /** Reference higher-order-function forms of [[VectorOps.dot]] and
+    * [[VectorOps.norm2]]: the same strict left-to-right accumulation,
+    * through interpreted lambdas. */
+  private def hofDot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
+
+  private def hofNorm2(a: Column): Column =
+    aggregate(a, lit(0.0), (acc, x) => acc + x * x)
 
   test("dot/norm/cosine match hand-computed values") {
     val a = Seq(1.0, 2.0, 3.0)
@@ -56,9 +66,9 @@ class VectorOpsSpec extends SparkSpec {
       val b = vecGen.apply(Gen.Parameters.default, Seed(101 + 2 * i)).get
       // exact ==: both accumulate strictly left-to-right in doubles
       assert(eval1(VectorOps.dot(lift(a), lift(b))) ==
-        eval1(VectorOps.hofDot(lift(a), lift(b))))
+        eval1(hofDot(lift(a), lift(b))))
       assert(eval1(VectorOps.norm2(lift(a))) ==
-        eval1(VectorOps.hofNorm2(lift(a))))
+        eval1(hofNorm2(lift(a))))
     }
   }
 
@@ -79,7 +89,7 @@ class VectorOpsSpec extends SparkSpec {
     val row = spark.range(1).select(
       VectorOps.dot(withNull, clean).as("d"),
       VectorOps.norm2(withNull).as("n"),
-      VectorOps.hofDot(withNull, clean).as("hd")).collect()(0)
+      hofDot(withNull, clean).as("hd")).collect()(0)
     assert(row.isNullAt(0), "native dot must not read a null slot as 0.0")
     assert(row.isNullAt(1), "native norm2 must not read a null slot as 0.0")
     assert(row.isNullAt(2), "HOF reference agrees")
